@@ -8,10 +8,18 @@ Column form it replaced, so the conversion can never drift the math.
 from pyspark.sql import functions as F
 
 from vector_search_application_spark.functions import portable as P
+from vector_search_application_spark.operators import dedup
 from vector_search_application_spark.operators.bm25 import (
     BM25_B,
     BM25_K1,
     _bm25_weight,
+)
+from vector_search_application_spark.plans.constants import (
+    MINHASH_A,
+    MINHASH_B,
+    MINHASH_BANDS,
+    MINHASH_PERMS,
+    MINHASH_PRIME,
 )
 
 
@@ -127,4 +135,58 @@ def test_tokens_spark_sql_parity(spark):
     df = spark.createDataFrame(rows, ["text"])
     old = df.select(P.tokens(F.col("text")).alias("toks"))
     new = df.selectExpr(f"{P.tokens_spark_sql('`text`')} AS toks")
+    assert old.sameSemantics(new)
+
+
+def _column_minhash_signatures(sharr, n_perms: int):
+    """The Column-builder form that dedup.minhash_signatures replaced,
+    kept verbatim as the parity reference."""
+    mins = [
+        F.array_min(
+            F.expr(
+                f"transform(shs, h -> ({MINHASH_A[i]}L * h + {MINHASH_B[i]}L)"
+                f" % {MINHASH_PRIME}L)"
+            )
+        ).alias(f"m{i}")
+        for i in range(n_perms)
+    ]
+    return sharr.select("id", *mins)
+
+
+def _column_lsh_band_keys(sigs, n_bands: int, n_perms: int):
+    """The Column-builder form that dedup.lsh_band_keys replaced, kept
+    verbatim as the parity reference."""
+    rows_per_band = n_perms // n_bands
+    entries = []
+    for band in range(n_bands):
+        cols = [
+            F.col(f"m{band * rows_per_band + j}").cast("string")
+            for j in range(rows_per_band)
+        ]
+        entries.append(
+            F.struct(
+                F.lit(band).alias("band"),
+                F.md5(F.concat_ws(",", *cols)).alias("band_key"),
+            )
+        )
+    return sigs.select("id", F.explode(F.array(*entries)).alias("bk")).select(
+        "id", "bk.band", "bk.band_key"
+    )
+
+
+def test_minhash_signature_expr_parity(spark):
+    sharr = spark.range(0, 20).selectExpr(
+        "id", "array(id * 7919, id + 104729, 4294967295L - id) AS shs"
+    )
+    old = _column_minhash_signatures(sharr, MINHASH_PERMS)
+    new = dedup.minhash_signatures(sharr, MINHASH_PERMS)
+    assert old.sameSemantics(new)
+
+
+def test_lsh_band_keys_expr_parity(spark):
+    sigs = spark.range(0, 20).selectExpr(
+        "id", *[f"id * {i + 3} + {i} AS m{i}" for i in range(MINHASH_PERMS)]
+    )
+    old = _column_lsh_band_keys(sigs, MINHASH_BANDS, MINHASH_PERMS)
+    new = dedup.lsh_band_keys(sigs, MINHASH_BANDS, MINHASH_PERMS)
     assert old.sameSemantics(new)

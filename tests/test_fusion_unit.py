@@ -170,15 +170,16 @@ def test_connected_components_chain_star_singleton(spark):
 
 
 def test_connected_components_double_step_parities(spark):
-    """The r13 loop propagates TWICE per convergence check, detecting
-    the fixpoint on the second step alone. Chains of every diameter
-    parity around the cycle boundary must still land on the exact
-    min-label closure — including the case where the fixpoint is
-    reached on the FIRST step of a cycle (odd diameters) and the
-    second step must report no change rather than a phantom one."""
+    """The first propagation is read directly off the closed edge
+    list; the loop then propagates TWICE per convergence check and
+    detects the fixpoint on the second step alone. Chains of every
+    diameter from 1 to 8 — both parities, across three loop iterations
+    — must land on the exact min-label closure, including diameters
+    where the fixpoint is reached on the FIRST step of an iteration and
+    the second step must report no change rather than a phantom one."""
     from vector_search_application_spark.operators import dedup
 
-    for n in (2, 3, 4, 5, 6, 7):  # chain 0-1-...-n-1, diameter n-1
+    for n in range(2, 10):  # chain 0-1-...-n-1, diameter n-1
         pairs = spark.createDataFrame(
             [(i, i + 1) for i in range(n - 1)], ["id_a", "id_b"]
         )
@@ -188,6 +189,57 @@ def test_connected_components_double_step_parities(spark):
             for r in dedup.connected_components(pairs, nodes).collect()
         }
         assert got == {i: 0 for i in range(n)}, f"chain of {n}"
+
+
+def test_connected_components_refusal_boundary(spark):
+    """max_iters=k allows 1 + 2k propagations: a chain whose far end is
+    exactly 2k hops from the min converges to the full closure, and one
+    hop more raises — never partial labels."""
+    import pytest
+
+    def chain(diameter):
+        pairs = spark.createDataFrame(
+            [(i, i + 1) for i in range(diameter)], ["id_a", "id_b"]
+        )
+        nodes = spark.createDataFrame([(i,) for i in range(diameter + 1)], ["id"])
+        return pairs, nodes
+
+    for k in (1, 2):
+        pairs, nodes = chain(2 * k)
+        got = {
+            r["id"]: r["canonical_id"]
+            for r in dedup.connected_components(
+                pairs, nodes, max_iters=k
+            ).collect()
+        }
+        assert got == {i: 0 for i in range(2 * k + 1)}, f"max_iters={k}"
+        pairs, nodes = chain(2 * k + 1)
+        with pytest.raises(RuntimeError, match="did not converge"):
+            dedup.connected_components(pairs, nodes, max_iters=k)
+
+
+def test_closed_edges_plans_pairs_once(spark):
+    """The components edge list is one Generate over ONE copy of the
+    pairs subtree — no Union, so an expensive pair producer upstream is
+    planned (and executed) once."""
+    pairs = (
+        spark.range(0, 40)
+        .selectExpr("id % 7 AS id_a", "id % 11 + 7 AS id_b")
+        .groupBy("id_a", "id_b")
+        .count()
+    )
+    edges = dedup.closed_edges(pairs, "id_a", "id_b", "src", "dst")
+    plan = edges._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("Generate") == 1
+    assert plan.count("Aggregate") == 1
+    assert "Union" not in plan
+    rows = {(r.src, r.dst) for r in edges.collect()}
+    want = {
+        e
+        for r in pairs.collect()
+        for e in ((r.id_a, r.id_b), (r.id_b, r.id_a), (r.id_a, r.id_a), (r.id_b, r.id_b))
+    }
+    assert rows == want
 
 
 def test_tracked_persist_releases_orphaned_caches(spark):

@@ -114,9 +114,13 @@ def capped_bucket_stats(
 
 def exact_dedup(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """(id, canonical_id, is_duplicate): canonical = min id per
-    sha256(text) group. One shuffle, keyed by the hash."""
+    sha256(text) group. One shuffle, keyed by the 32-byte binary
+    digest (unhex of sha2's 64-char hex string: the same equality
+    classes at half the key bytes per shuffled row); the digest is
+    internal — the output columns are unchanged."""
     hashed = docs.select(
-        F.col(id_col).alias("id"), F.sha2(F.col(text_col), 256).alias("h")
+        F.col(id_col).alias("id"),
+        F.unhex(F.sha2(F.col(text_col), 256)).alias("h"),
     )
     w = Window.partitionBy("h")
     return hashed.select(
@@ -691,6 +695,27 @@ def simhash_pairs(
 # Connected components: dup pairs -> clusters -> canonical representative
 # ---------------------------------------------------------------------------
 
+def closed_edges(
+    pairs: DataFrame, id_a: str, id_b: str, src: str, dst: str
+) -> DataFrame:
+    """(src, dst): both directions of every pair plus a self-loop on
+    each endpoint — the closed-neighbourhood edge list the component
+    operators iterate over — generated in ONE pass over ``pairs`` (one
+    inline Generate), so an expensive candidate join upstream (banded
+    simhash, LSH buckets) is planned and executed once; a union of the
+    two directions would reference the pairs subtree twice. Repeated
+    rows (a pair listed twice, one self-loop per incident pair) are
+    kept: consumers take minima over them or filter them."""
+    a, b = F.col(id_a), F.col(id_b)
+
+    def edge(s, d):
+        return F.struct(s.alias(src), d.alias(dst))
+
+    return pairs.select(
+        F.inline(F.array(edge(a, b), edge(b, a), edge(a, a), edge(b, b)))
+    )
+
+
 def connected_components(
     pairs: DataFrame,
     nodes: DataFrame,
@@ -703,69 +728,62 @@ def connected_components(
     the step a training pipeline runs after any pair-producing dedup
     (keep rows where id = canonical_id; singletons map to themselves).
 
-    Min-label propagation: every node starts as its own label; each
-    propagation every node takes the min label among itself and its
-    neighbors; converged when no label changes. Each loop ITERATION
-    runs TWO propagations (r13), so iterations = ceil(component
-    DIAMETER / 2) + 1 and the non-convergence refusal below fires only
-    past 2*max_iters propagations — near-dup clusters are shallow
+    Min-label propagation: each propagation every node takes the min
+    label over its closed neighbourhood (itself and its neighbours);
+    converged when no label changes. The first propagation, from the
+    identity labels, is read directly off the edge list
+    (groupBy(dst).min(src) — the self-loops put each node in its own
+    neighbourhood). Each loop ITERATION then runs TWO more
+    propagations per driver sync and checks the second for change, so
+    with D the largest distance from a node to its component min
+    (at most the component diameter) the loop takes ceil(D / 2)
+    iterations, 1 + 2 * ceil(D / 2) propagations, and the refusal
+    below fires when D > 2 * max_iters. Near-dup clusters are shallow
     (pairs/stars/short chains), so this converges in a handful of
-    rounds even at corpus scale; for adversarially long chains the
-    alternating large-star/small-star variant (O(log n) rounds) is the
-    drop-in upgrade.
+    rounds even at corpus scale; for adversarially long chains
+    connected_components_star (O(log n) rounds) is the drop-in
+    upgrade.
 
-    Scale shape per iteration: one key-join (edges hash-partitioned by
-    src) + one groupBy(dst) min — both map-side-combinable; labels are
-    localCheckpoint'ed each round so the plan stays one-iteration deep
-    (no exponential lineage), and the convergence probe is a single
-    count per round. Only EDGE ENDPOINTS enter the loop — a node with
-    no dup pair can never change its label, so the iterated table is
-    the (typically tiny) duplicate-touched slice of the corpus;
-    singletons are appended as their own canonical at the end.
+    Scale shape per propagation: one key-join (edges ⋈ labels on src)
+    + one groupBy(dst) that takes the new label as the min and the
+    node's previous label from its self-loop row — both
+    map-side-combinable, each input referenced once; labels are
+    localCheckpoint'ed each iteration so the plan stays one iteration
+    deep (no exponential lineage), and the convergence probe is a
+    single count per iteration. Only EDGE ENDPOINTS enter the loop — a
+    node with no dup pair can never change its label, so the iterated
+    table is the (typically tiny) duplicate-touched slice of the
+    corpus; singletons are appended as their own canonical at the end.
     """
-    edges = pairs.select(
-        F.col(id_a).alias("src"), F.col(id_b).alias("dst")
-    ).unionByName(pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst")))
     # materialize the edge list ONCE: `pairs` is usually the output of
     # an expensive candidate join (banded simhash, LSH buckets) and is
-    # referenced by every round's join plus the singleton split — left
-    # as lineage it would recompute per round
-    edges = edges.localCheckpoint(eager=True)
-    endpoints = edges.select(F.col("src").alias("id")).distinct()
-    all_nodes = nodes.select("id")
-    singletons = all_nodes.join(endpoints, "id", "left_anti").select(
-        "id", F.col("id").alias("canonical_id")
+    # referenced by every propagation's join plus the singleton split —
+    # left as lineage it would recompute per propagation
+    edges = closed_edges(pairs, id_a, id_b, "src", "dst").localCheckpoint(
+        eager=True
     )
-    labels = endpoints.select("id", F.col("id").alias("canonical_id"))
-    labels = labels.localCheckpoint(eager=True)
-    lbl_type = labels.schema["canonical_id"].dataType
+    singletons = (
+        nodes.select("id")
+        .join(edges.select(F.col("src").alias("id")), "id", "left_anti")
+        .select("id", F.col("id").alias("canonical_id"))
+    )
+    labels = edges.groupBy(F.col("dst").alias("id")).agg(
+        F.min("src").alias("canonical_id")
+    )
 
     def _propagate(lbls: DataFrame) -> DataFrame:
-        # one join + ONE keyed aggregation per propagation (r13):
-        # neighbor label candidates union the node's own labeled row —
-        # tagged with its old label — and a single groupBy(id) takes
-        # the min candidate as the new label while max(old) recovers
-        # the previous one (every loop id has exactly one own row;
-        # nulls from neighbor rows are ignored). The earlier shape
-        # aggregated neighbor minima separately and LEFT-JOINED them
-        # back onto labels: a second shuffle + join per propagation
-        # that this folds into the same aggregation. Update rule
-        # unchanged (min over self and neighbors), so the fixpoint is
-        # identical.
-        cand = edges.join(lbls, edges["src"] == lbls["id"]).select(
-            F.col("dst").alias("id"),
-            F.col("canonical_id").alias("cand"),
-            F.lit(None).cast(lbl_type).alias("old"),
-        )
-        own = lbls.select(
-            "id",
-            F.col("canonical_id").alias("cand"),
-            F.col("canonical_id").alias("old"),
-        )
+        # one join + ONE keyed aggregation, reading `lbls` once: every
+        # node's neighbourhood rows carry the candidate labels, and its
+        # self-loop row (src = dst) carries its previous label
         return (
-            cand.unionByName(own)
-            .groupBy("id")
-            .agg(F.min("cand").alias("canonical_id"), F.max("old").alias("old"))
+            edges.join(lbls.withColumnRenamed("id", "src"), "src")
+            .groupBy(F.col("dst").alias("id"))
+            .agg(
+                F.min("canonical_id").alias("canonical_id"),
+                F.max(
+                    F.when(F.col("src") == F.col("dst"), F.col("canonical_id"))
+                ).alias("old"),
+            )
         )
 
     for _ in range(max_iters):
@@ -797,13 +815,13 @@ def connected_components(
             "id", F.col("new_canonical").alias("canonical_id")
         )
         if not changed:
-            return labels.select("id", "canonical_id").unionByName(singletons)
+            return labels.unionByName(singletons)
     raise RuntimeError(
         f"connected_components did not converge in {max_iters} iterations "
-        f"({2 * max_iters} propagations — a component's diameter exceeds "
-        "the cap); raise max_iters, or use the large-star/small-star "
-        "variant for adversarially long chains — returning partial labels "
-        "would silently split components"
+        f"({1 + 2 * max_iters} propagations — some node is more than "
+        f"{2 * max_iters} hops from its component min); raise max_iters, "
+        "or use connected_components_star for adversarially long chains "
+        "— returning partial labels would silently split components"
     )
 
 
@@ -831,18 +849,16 @@ def connected_components_star(
     Convergence = edge multiset stable (count + order-insensitive
     hash), checked from the materialized result at no extra pass.
     """
-    both = pairs.select(
-        F.col(id_a).alias("u"), F.col(id_b).alias("v")
-    ).unionByName(pairs.select(F.col(id_b).alias("u"), F.col(id_a).alias("v")))
+    both = closed_edges(pairs, id_a, id_b, "u", "v")
     edges = both.filter(F.col("u") != F.col("v")).distinct()
     edges = edges.localCheckpoint(eager=True)
     all_nodes = nodes.select("id")
 
     def _large_star(e: DataFrame) -> DataFrame:
-        # group the FULL (bidirectional) neighborhood of u;
+        # group the CLOSED neighborhood of u (self-loop included);
         # m = min(Γ(u) ∪ {u}); link every strictly-larger neighbor to m
-        nbrs = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        m = nbrs.groupBy("u").agg(F.min(F.least("v", "u")).alias("m"))
+        nbrs = closed_edges(e, "u", "v", "u", "v")
+        m = nbrs.groupBy("u").agg(F.min("v").alias("m"))
         return (
             nbrs.join(m, "u")
             .filter(F.col("v") > F.col("u"))
