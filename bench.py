@@ -378,10 +378,6 @@ def bench_batch_throughput(spark, sf_dir: str) -> tuple[dict, dict]:
 
 
 def main() -> None:
-    # keep cross-rep/cross-query cache reuse: the bench measures warm
-    # steady-state serving (hot indexes), not the gate's sequential
-    # release-between-queries discipline (registry_core.declare)
-    os.environ.setdefault("SPARK_GRAFT_KEEP_CACHES", "1")
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     base = os.path.basename(sf_dir.rstrip("/"))
     try:

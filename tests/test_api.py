@@ -392,10 +392,15 @@ def test_reset_leaves_engine_serviceable(spark):
     from tests.conftest import SF_SMOKE
     from vector_search_application_spark.api import Engine
 
+    from vector_search_application_spark.functions import cache
+
     e = Engine(spark, SF_SMOKE)
     before = [r["id"] for r in e.search_ultra_fast("large widget", 5).collect()]
     e.reset()
     assert e.performance_stats() == {}
+    # the whole cache lifecycle is dropped, then the serving trio alone
+    # is tracked again
+    assert [id(d) for d in cache._LIVE] == [id(d) for d in e._snapshot()]
     after = [r["id"] for r in e.search_ultra_fast("large widget", 5).collect()]
     assert after == before
     e.reset()

@@ -167,8 +167,9 @@ def test_partition_count_invariance(spark):
     (hash splits, rounded-before-compare floats, integer-exact
     aggregation — no unordered float sum may leak into a value).
     Persisted-plan queries are excluded (their cache would span the
-    conf change and mask nothing)."""
-    from vector_search_application_spark.plans.registry import REGISTRY
+    conf change and mask nothing); every build goes through the driver
+    contract, which releases the previous build's caches and memos."""
+    import __spark_entry__
 
     names = [
         # retrieval_manifest and boilerplate_ngrams are excluded: their
@@ -179,7 +180,7 @@ def test_partition_count_invariance(spark):
         "source_data_card",
         "mixture_sample",
     ]
-    by = {d.name: d.spark for d in REGISTRY}
+    by = __spark_entry__.queries()
     orig = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         at_default = {

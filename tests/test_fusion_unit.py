@@ -263,6 +263,37 @@ def test_tracked_persist_releases_orphaned_caches(spark):
     assert cache.release_all() == 0  # registry cleared
 
 
+def test_release_matches_memoized_twin_by_plan(spark):
+    """release() matches by canonical plan, as Spark's CacheManager
+    does when it uncaches: releasing a separately built sameSemantics
+    twin of a memoized value frees that value's blocks, so the memo
+    entry and the tracked reference must go too — plan_memo rebuilds
+    instead of handing back a plan that is no longer cached."""
+    from pyspark.sql import functions as F
+
+    from vector_search_application_spark.functions import cache
+
+    cache.release_all()
+    base = spark.range(200)
+
+    def agg():
+        return base.groupBy((F.col("id") % 7).alias("k")).count()
+
+    def memoized():
+        return cache.plan_memo(
+            base, ("twin",), lambda: cache.tracked_persist(agg())
+        )
+
+    old = memoized()
+    old.count()
+    twin = agg()
+    assert twin is not old and twin.sameSemantics(old)
+    cache.release(twin)
+    assert memoized() is not old
+    assert not any(d is old for d in cache._LIVE)
+    cache.release_all()
+
+
 def test_connected_components_star_matches_union_find(spark):
     """Large-star/small-star must find exactly the union-find
     components on random graphs PLUS a diameter-30 chain (which the

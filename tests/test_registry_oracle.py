@@ -1,10 +1,14 @@
 """Every declared registry query must match its DuckDB oracle —
-the same gate the driver runs (CORRECTNESS_r{N}.json)."""
+the same gate the driver runs (CORRECTNESS_r{N}.json), built through
+the driver contract, so each query starts from released caches."""
 
 import pytest
 
+import __spark_entry__
 from tests.conftest import SF_SMOKE, compare_spark_duckdb, register_views
 from vector_search_application_spark.plans.registry import REGISTRY
+
+_QUERIES = __spark_entry__.queries()
 
 
 FORBIDDEN_PLAN_NODES = (
@@ -32,11 +36,11 @@ def _assert_plan_guards(sdf, name: str) -> None:
 @pytest.mark.parametrize("decl", REGISTRY, ids=[d.name for d in REGISTRY])
 def test_registry_matches_oracle(spark, duck, decl):
     if decl.sql is None:
-        sdf = decl.spark(spark, SF_SMOKE)
+        sdf = _QUERIES[decl.name](spark, SF_SMOKE)
         _assert_plan_guards(sdf, decl.name)
         assert sdf.count() >= 0  # rows-only check, like the driver
         return
     register_views(duck, SF_SMOKE)
-    sdf = decl.spark(spark, SF_SMOKE)
+    sdf = _QUERIES[decl.name](spark, SF_SMOKE)
     _assert_plan_guards(sdf, decl.name)
     compare_spark_duckdb(sdf, duck, decl.sql)

@@ -51,7 +51,6 @@ RUNNER = r"""
 import json, os, sys, time
 sys.path.insert(0, os.getcwd())
 os.environ.setdefault("SPARK_LOCAL_IP", "127.0.0.1")
-os.environ.setdefault("SPARK_GRAFT_KEEP_CACHES", "1")
 from pyspark.sql import functions as F
 from vector_search_application_spark.session import get_spark
 from vector_search_application_spark.plans.registry import REGISTRY

@@ -205,9 +205,6 @@ def main(ks: list[int]) -> int:
     # headroom for the x100 signature/bucket caches (same guard as
     # scale_probe.py; explicit SPARK_DRIVER_MEM still wins)
     os.environ.setdefault("SPARK_DRIVER_MEM", "48g")
-    # warm best-of-2 reps NEED rep 1's caches; the gate's
-    # release-between-queries discipline is opted out here
-    os.environ.setdefault("SPARK_GRAFT_KEEP_CACHES", "1")
     from vector_search_application_spark import calibration as CAL
     from vector_search_application_spark.functions.cache import release_all
     from vector_search_application_spark.plans.constants import LSH_BANDS

@@ -13,7 +13,6 @@ import os
 import sys
 
 os.environ.setdefault("SPARK_LOCAL_IP", "127.0.0.1")
-os.environ.setdefault("SPARK_GRAFT_KEEP_CACHES", "1")
 HERE = os.path.dirname(os.path.abspath(__file__))
 REPO = os.path.dirname(HERE)
 sys.path.insert(0, REPO)

@@ -22,6 +22,7 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 
 
 def main() -> None:
+    from vector_search_application_spark.functions.cache import release_all
     from vector_search_application_spark.session import get_spark
     from vector_search_application_spark.plans.registry import REGISTRY
 
@@ -66,6 +67,10 @@ def main() -> None:
         return len(ids)
 
     for d in REGISTRY:
+        # cold, like the driver contract: a plan built over the previous
+        # query's cached tables would count their InMemoryTableScans,
+        # not the exchanges that build them
+        release_all()
         try:
             df = d.spark(spark, SF_DIR)
             plan = df._jdf.queryExecution().executedPlan().toString()

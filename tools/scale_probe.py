@@ -190,9 +190,6 @@ def main(ks: list[int]) -> int:
     # the streaming section before this default was raised. Explicit
     # SPARK_DRIVER_MEM still wins.
     os.environ.setdefault("SPARK_DRIVER_MEM", "48g")
-    # warm reps reuse the prior rep's caches; opt out of the gate's
-    # release-between-queries discipline (registry_core.declare)
-    os.environ.setdefault("SPARK_GRAFT_KEEP_CACHES", "1")
     from vector_search_application_spark.session import get_spark
     from vector_search_application_spark.plans.registry import REGISTRY
     from vector_search_application_spark.functions.cache import release_all

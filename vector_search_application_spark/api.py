@@ -48,6 +48,7 @@ from pyspark.sql import functions as F
 
 from .functions import embedder as E
 from .functions import scalars
+from .functions.cache import release, release_all, tracked_persist
 from .operators import bm25, exact, fusion
 from .plans import corpus
 from .plans.constants import (
@@ -78,7 +79,7 @@ class Engine:
         # would otherwise each build merged = own_rows + old, and the
         # later swap would silently drop the earlier import's rows
         self._ingest_lock = threading.Lock()
-        products = corpus.products(spark, sf_dir).persist()
+        products = tracked_persist(corpus.products(spark, sf_dir))
         # cache the corpus + its two derived indexes (the reference
         # holds all three in RAM: payload store, HNSW, sparse index).
         # The trio lives in ONE tuple so any reader gets a consistent
@@ -86,7 +87,7 @@ class Engine:
         # call _snapshot() once and thread the tables down.
         self._serving: tuple[DataFrame, DataFrame, DataFrame] = (
             products,
-            E.embed_postings(products, "id", "dense_text").persist(),
+            tracked_persist(E.embed_postings(products, "id", "dense_text")),
             bm25.build_postings(
                 products, id_col="id", text_col="sparse_text"
             ),
@@ -525,32 +526,28 @@ class Engine:
         # and fail with FileNotFoundException (import_delta
         # localCheckpoints for the same reason).
         new_products = merged.localCheckpoint(eager=True)
-        new_dense = E.embed_postings(
-            new_products, "id", "dense_text"
-        ).persist()
+        new_dense = tracked_persist(
+            E.embed_postings(new_products, "id", "dense_text")
+        )
         new_sparse = bm25.build_postings(
             new_products, id_col="id", text_col="sparse_text"
         )
         # One-tuple swap: a reader's _snapshot() before this line
         # sees the old trio, after it the new one — never a mix.
         self._serving = (new_products, new_dense, new_sparse)
-        # unpersist frees CacheManager entries (the first absorb's
-        # persisted corpus, the index tables); a localCheckpoint'ed
-        # old_products is NOT in the CacheManager — its blocks are
-        # freed by the ContextCleaner once the RDD is unreachable, so
-        # drop the references and nudge GC rather than letting stale
-        # full-corpus checkpoint copies pile up across a tight
-        # import loop. The sparse postings went through
-        # tracked_persist, whose STRONG registry ref would otherwise
-        # keep the superseded plan — and, through its lineage, the
-        # previous corpus's checkpoint RDD — reachable forever:
-        # cache.release() unpersists AND forgets it (measured: one
-        # orphaned corpus checkpoint per absorb without this).
-        from .functions.cache import release as _cache_release
-
-        old_products.unpersist()
-        old_dense.unpersist()
-        _cache_release(old_sparse)
+        # release() unpersists the superseded trio AND forgets every
+        # tracked table and memo entry built on it (the BM25 stats and
+        # dictionary); their STRONG registry refs would otherwise keep
+        # the superseded plans — and, through their lineage, the
+        # previous corpus's checkpoint RDD — reachable forever
+        # (measured: one orphaned corpus checkpoint per absorb). A
+        # localCheckpoint'ed old_products is NOT in the CacheManager —
+        # its blocks are freed by the ContextCleaner once the RDD is
+        # unreachable, so drop the references and nudge GC rather than
+        # letting stale full-corpus checkpoint copies pile up across a
+        # tight import loop.
+        for df in (old_products, old_dense, old_sparse):
+            release(df)
         del old_products, old_dense, old_sparse, merged, loaded
         gc.collect()
 
@@ -588,31 +585,24 @@ class Engine:
         return json_source.export_documents_sharded(self.products, path)
 
     def reset(self) -> None:
-        """M9: drop the cached collection state — including operator-
-        internal persisted intermediates (BM25 postings, LSH tables)
-        registered with functions/cache. release_all() is session-
-        scoped by design (the cache registry is process-global, like
-        Spark's own CacheManager); with multiple Engines in one session
-        reset() is a session boundary, not a per-collection one.
+        """M9: drop the cached collection state — the Engine's own three
+        tables and every operator-internal persisted intermediate (BM25
+        statistics, LSH tables), all tracked by functions/cache.
+        release_all() is session-scoped by design (the cache registry
+        is process-global, like Spark's own CacheManager); with multiple
+        Engines in one session reset() is a session boundary, not a
+        per-collection one.
 
-        The engine stays serviceable: its own indexes are re-persisted
+        The engine stays serviceable: its own tables are re-tracked
         (lazily — blocks rebuild on next use), matching the reference
         where reset recreates an empty-but-working collection."""
-        from .functions.cache import release_all, tracked_persist
-
         with self._ingest_lock:
-            products, dense_ix, postings = self._snapshot()
-            products.unpersist()
-            dense_ix.unpersist()
+            serving = self._snapshot()
             release_all()
             self.clear_cache()
             with self._lock:
                 self._stats.clear()
-            self._serving = (
-                products.persist(),
-                dense_ix.persist(),
-                tracked_persist(postings),
-            )
+            self._serving = tuple(tracked_persist(df) for df in serving)
 
     def health(self) -> dict:
         return {"status": "healthy", "document_count": self.products.count()}

@@ -1,21 +1,29 @@
-"""Centralized lifecycle for persisted intermediates.
+"""Centralized lifecycle for persisted intermediates and memoized plans.
 
 Several operators persist() a DataFrame that is reused within one query
-plan (shingle arrays, LSH bands, BM25 postings, hyperplane buckets).
-The cached blocks are what makes those plans one-pass — but in a
-long-lived session running many queries (the driver's correctness gate,
-the Engine façade, bench loops) orphaned blocks would accumulate
-without bound.
+plan (shingle arrays, LSH bands, BM25 postings, hyperplane buckets), and
+index-shaped results (postings, centroids, PQ codes) and source readers
+are memoized per input plan. The cached blocks are what makes those
+plans one-pass — but in a long-lived session running many queries (the
+driver's correctness gate, the Engine façade, bench loops) orphaned
+blocks would accumulate without bound.
 
-Every internal persist goes through ``tracked_persist``; callers that
-own a session lifecycle call ``release_all()`` at a boundary (Engine
-.reset(), a bench loop's teardown, test fixtures). The registry holds
-STRONG references on purpose: the persisted DataFrames are
-operator-local, so their Python refs die when the operator returns —
-but Spark's CacheManager keeps the JVM-side blocks regardless (Python
-GC never unpersists SQL cache). A weak registry would drop exactly the
-orphaned entries this module exists to free; the strong list keeps
-them reachable until release_all() unpersists and clears.
+The lifecycle is two module globals and two release rules:
+
+- ``_LIVE`` lists every DataFrame persisted through ``tracked_persist``.
+  It holds STRONG references on purpose: the persisted DataFrames are
+  operator-local, so their Python refs die when the operator returns —
+  but Spark's CacheManager keeps the JVM-side blocks regardless (Python
+  GC never unpersists SQL cache). A weak registry would drop exactly
+  the orphaned entries this module exists to free.
+- ``_PLAN_MEMO`` holds ``plan_memo``'s buckets.
+- ``release(df)`` forgets one plan, matched the way CacheManager
+  uncaches it; ``release_all()`` forgets everything.
+
+The warm/cold policy belongs to the caller: the driver contract
+(``__spark_entry__.queries()``) releases before every query build, the
+Engine on reset(), bench loops and probes between cold reps. The
+registry's builders themselves are warm.
 """
 
 from __future__ import annotations
@@ -23,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 _LIVE: list[DataFrame] = []
-_RELEASE_HOOKS: list = []
+_PLAN_MEMO: dict = {}
 
 
 def tracked_persist(df: DataFrame, storage_level=None) -> DataFrame:
@@ -33,69 +41,17 @@ def tracked_persist(df: DataFrame, storage_level=None) -> DataFrame:
     return out
 
 
-def release(df: DataFrame) -> None:
-    """Unpersist ONE tracked DataFrame and drop its registry entry.
-
-    For long-lived owners (Engine._absorb_locked) that supersede a
-    tracked intermediate mid-session: unpersist() alone frees the
-    cached blocks, but the strong _LIVE ref keeps the superseded
-    plan — and everything its lineage pins, e.g. the previous
-    corpus's localCheckpoint RDD — reachable until some future
-    release_all(). Measured: one orphaned corpus checkpoint per
-    import cycle (tests/test_http_shim.py multi-cycle test).
-
-    Cascades through the plan memo (r14): a released DataFrame may be
-    a memo VALUE (the memo would otherwise hand back a silently-
-    uncached plan) or a memo INPUT (entries derived FROM it — the BM25
-    stats/dictionary keyed on a superseded postings plan — would
-    otherwise stay persisted forever; the http-shim cycle test counts
-    exactly this leak). Matching is by object identity, same as _LIVE;
-    evicted values release recursively."""
-    try:
-        df.unpersist()
-    except Exception:  # session already stopped — nothing to free
-        pass
-    for i, d in enumerate(_LIVE):
-        if d is df:
-            del _LIVE[i]
-            break
-    cascade: list[DataFrame] = []
-    for hkey in list(_PLAN_MEMO):
-        kept = []
-        for edfs, val in _PLAN_MEMO[hkey]:
-            vals = val if isinstance(val, tuple) else (val,)
-            if any(e is df for e in edfs) or any(v is df for v in vals):
-                cascade.extend(
-                    v for v in vals if isinstance(v, DataFrame) and v is not df
-                )
-            else:
-                kept.append((edfs, val))
-        if kept:
-            _PLAN_MEMO[hkey] = kept
-        else:
-            del _PLAN_MEMO[hkey]
-    for v in cascade:
-        release(v)
-
-
-def on_release(hook) -> None:
-    """Register a callback run by release_all() — for operator-local
-    memo tables that hand out references to tracked DataFrames (the
-    memo must forget them once the blocks are gone, or it would keep
-    returning silently-uncached plans)."""
-    _RELEASE_HOOKS.append(hook)
-
-
-_PLAN_MEMO: dict = {}
-
-
 def plan_memo(dfs, key: tuple, build):
-    """Memoize an index-shaped DataFrame per (input plans, params):
-    return the recorded value when every input plan sameSemantics-
-    matches, else build(), record, return. Builders tracked_persist
-    their result, so release_all() both frees the blocks and (below)
-    forgets the memo — a stale entry can never hand back a
-    silently-uncached plan. ``dfs`` is one DataFrame or a tuple.
+    """Memoize a value per (input plans, params): return the recorded
+    value when every input plan sameSemantics-matches, else build(),
+    record, return. ``dfs`` is one DataFrame or a tuple; with no input
+    plans (``()``) the key alone decides the hit. Source readers key on
+    ``("reader", spark, ...)``, so a restarted session can never be
+    served a plan bound to a dead JVM. Builders tracked_persist the
+    values they want cached; scalars (counts) and unmaterialized
+    readers pass through. release() and release_all() evict entries
+    together with their blocks, so a hit never hands back a
+    silently-uncached plan.
 
     Lookup is a dict keyed on (semanticHash per input, key) — one py4j
     round-trip per input — with a sameSemantics pass over the (almost
@@ -116,30 +72,58 @@ def plan_memo(dfs, key: tuple, build):
     return val
 
 
-_READER_MEMO: list = []
+def release(df: DataFrame) -> None:
+    """Unpersist ``df`` and forget every tracked DataFrame and memo
+    entry under its plan.
 
+    Matching is by canonical plan (sameSemantics), the rule Spark's
+    CacheManager applies when ``df.unpersist()`` uncaches: a twin built
+    separately loses its blocks too, so its ``_LIVE`` entry goes, and
+    so does every memo entry whose input or value is that plan (the
+    memo would otherwise hand back a silently-uncached plan). An
+    evicted entry's other DataFrame values are released in turn — the
+    BM25 stats/dictionary derived from a superseded postings plan would
+    otherwise stay persisted forever.
 
-def reader_memo(spark, key: tuple, build):
-    """Memoize a source-reader DataFrame per (session, key): a
-    ``spark.read.parquet`` costs ~70 ms of py4j + footer/schema I/O,
-    and the corpus readers run on EVERY plan build (several reads per
-    chain query, rebuilt per bench rep). The returned DataFrame is an
-    unmaterialized plan — no data is cached, every action still
-    computes from the parquet files — so this is pure driver-latency
-    removal (guide §1.2 applied to the driver, the r13 #6 pattern).
-    Keyed on session identity (``is``) so a restarted session can never
-    serve a plan bound to a dead JVM; cleared by release_all() with the
-    other memos, so the driver's correctness gate re-reads per query."""
-    for espark, ekey, val in _READER_MEMO:
-        if ekey == key and espark is spark:
-            return val
-    val = build()
-    _READER_MEMO.append((spark, key, val))
-    return val
+    For long-lived owners (Engine._absorb_locked) that supersede their
+    tables mid-session: unpersist() alone frees the cached blocks, but
+    a strong ``_LIVE`` ref keeps the superseded plan — and everything
+    its lineage pins, e.g. the previous corpus's localCheckpoint RDD —
+    reachable until some future release_all(). Measured: one orphaned
+    corpus checkpoint per import cycle (tests/test_http_shim.py
+    multi-cycle test)."""
+    h = df.semanticHash()
+    df.unpersist()
+
+    def same(d: DataFrame) -> bool:
+        return d is df or d.sameSemantics(df)
+
+    _LIVE[:] = [d for d in _LIVE if not same(d)]
+    cascade: list[DataFrame] = []
+    for hkey in list(_PLAN_MEMO):
+        kept = []
+        for edfs, val in _PLAN_MEMO[hkey]:
+            vals = [
+                v
+                for v in (val if isinstance(val, tuple) else (val,))
+                if isinstance(v, DataFrame)
+            ]
+            hits = [same(v) for v in vals]
+            if any(hits) or (h in hkey[0] and any(same(e) for e in edfs)):
+                cascade += [v for v, hit in zip(vals, hits) if not hit]
+            else:
+                kept.append((edfs, val))
+        if kept:
+            _PLAN_MEMO[hkey] = kept
+        else:
+            del _PLAN_MEMO[hkey]
+    for v in cascade:
+        release(v)
 
 
 def release_all() -> int:
-    """Unpersist every tracked DataFrame; returns count released."""
+    """Unpersist every tracked DataFrame and forget every memo entry;
+    returns the count released."""
     n = 0
     for df in _LIVE:
         try:
@@ -149,10 +133,4 @@ def release_all() -> int:
             pass
     _LIVE.clear()
     _PLAN_MEMO.clear()
-    _READER_MEMO.clear()
-    for hook in _RELEASE_HOOKS:
-        try:
-            hook()
-        except Exception:
-            pass
     return n

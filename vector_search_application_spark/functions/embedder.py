@@ -81,9 +81,10 @@ def embed_postings(
     (release_all() clears the memo with the cached blocks). Callers
     that embed a STREAM of distinct inputs — foreachBatch micro-
     batches (streaming/ingest.py), the Engine's per-import-cycle
-    rebuilds (api.py, which runs its own persist/release lifecycle) —
-    keep the default index=False: memoizing per-batch plans would pin
-    a persisted copy of every batch until release_all().
+    rebuilds (api.py, which tracked_persists each index and releases
+    it when the next import supersedes it) — keep the default
+    index=False: memoizing per-batch plans would pin a persisted copy
+    of every batch until release_all().
     """
     if dim > 64:
         raise ValueError(

@@ -478,35 +478,6 @@ def _cos_lit_sql(vec_col: str, arr, digits: int = 6) -> str:
     )
 
 
-# ---------------------------------------------------------------------------
-# Plan-keyed memo for index-shaped intermediates (r13 optimization).
-#
-# The cold-by-declaration ANN queries rebuild the SAME index artifacts
-# on every execution: the schedule's corpus count, the one-row centroid
-# table, the per-row cell assignment, the PQ codebook and the PQ codes.
-# Those are exactly what write_ivf(pq)_indexed persists to disk — index
-# builds, not query work — and the postings/flat-norm tables already get
-# the warm-serving treatment (build_postings persist=True,
-# topk.flat_with_norm). This memo extends the same policy to the dense ANN
-# family: keyed on (input plan via sameSemantics, params), DataFrame
-# values tracked_persist'ed, everything forgotten when release_all()
-# drops the blocks (the driver's correctness gate therefore still
-# rebuilds per query; bench/serving sessions with
-# SPARK_GRAFT_KEEP_CACHES=1 reuse across reps and across the queries
-# that share a corpus — measured r13: ivfpq_topk 1.96 -> ~0.6 s warm).
-# ---------------------------------------------------------------------------
-
-def _memo(dfs, key: tuple, build):
-    """Memoized value for (input plans, key) — a thin module-prefixed
-    shim over cache.plan_memo (r14, ADVICE: the r13 local list was a
-    verbatim duplicate of the shared memo, differing only in which
-    list release_all cleared). Identity is sameSemantics on every
-    input plan; DataFrame values are tracked_persist'ed by the builder
-    when that is wanted; scalars (counts) pass through. release_all()
-    clears the shared memo with the cached blocks."""
-    return plan_memo(dfs, ("ann",) + key, build)
-
-
 def _centroid_table_from(
     centroids: DataFrame, id_col: str = "centroid_id", vec_col: str = "cvec"
 ) -> DataFrame:
@@ -550,7 +521,7 @@ def ivf_schedule(
         # memoized so a warm session doesn't re-run the count job per
         # execution (the gate still counts once per query: release_all
         # clears the memo with the caches)
-        n = _memo(vectors, ("n_vectors",), vectors.count)
+        n = plan_memo(vectors, ("ann", "n_vectors"), vectors.count)
         n_centroids = ivf_n_centroids(n)
     if n_probe is None:
         n_probe = ivf_n_probe(n_centroids)
@@ -570,9 +541,9 @@ def centroid_table(
     the layout), so a warm session builds it once instead of re-running
     the head-filter aggregate on every execution."""
     n_centroids, _ = ivf_schedule(vectors, n_centroids, 0)
-    return _memo(
+    return plan_memo(
         vectors,
-        ("cents", n_centroids, id_col, vec_col),
+        ("ann", "cents", n_centroids, id_col, vec_col),
         lambda: tracked_persist(
             _centroid_table_from(
                 vectors.filter(F.col(id_col) < n_centroids), id_col, vec_col
@@ -668,9 +639,9 @@ def ivf_assign_tbl(
     per (corpus plan, cents plan), so a warm session assigns once and
     every consumer (batch probe join, IVF-PQ cell filter, the layout
     write) reads the cached index instead of re-running the argmax."""
-    assigned = _memo(
+    assigned = plan_memo(
         (vectors, cent_tbl),
-        ("assign", id_col, vec_col),
+        ("ann", "assign", id_col, vec_col),
         lambda: tracked_persist(
             vectors.withColumn("__vd", F.col(vec_col).cast("array<double>"))
             .crossJoin(F.broadcast(cent_tbl))
@@ -1261,7 +1232,7 @@ def pq_codebook(
             )
         )
 
-    return _memo(vectors, ("pq_codebook", id_col, vec_col), build)
+    return plan_memo(vectors, ("ann", "pq_codebook", id_col, vec_col), build)
 
 
 def pq_codes(
@@ -1311,7 +1282,9 @@ def pq_codes(
             )
         )
 
-    return _memo((vectors, codebook), ("pq_codes", id_col, vec_col), build)
+    return plan_memo(
+        (vectors, codebook), ("ann", "pq_codes", id_col, vec_col), build
+    )
 
 
 def pq_topk(

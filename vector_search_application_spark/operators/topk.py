@@ -65,8 +65,8 @@ def flat_with_norm(
     score over the same corpus, and a fresh persist per call would
     cache three identical multi-column corpus copies until the session
     boundary. sameSemantics() is the exact plan-identity test; the
-    memo forgets its entries when release_all() drops the blocks
-    (functions/cache.on_release), so a stale hit can never hand back a
+    memo forgets its entries whenever release() or release_all() drops
+    the blocks (functions/cache), so a stale hit can never hand back a
     silently-uncached plan.
     """
     params = (vec_col, prefix, dim, tuple(keep))

@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, TimestampNTZType, TimestampType
 
 from ..functions import portable as P
-from ..functions.cache import reader_memo
+from ..functions.cache import plan_memo
 
 # null-injection rules (deterministic; FIXTURES.md §1 percentages)
 MFR_NULL_MOD = 20    # ~5% manufacturerPartNumber null
@@ -76,7 +76,7 @@ def _read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # py4j + parquet-footer schema work and runs on every plan build of
     # every corpus consumer. The memo hands back the same UNMATERIALIZED
     # plan (no data cached; testdata is immutable within a session) and
-    # release_all() clears it, so the driver's gate re-reads per query.
+    # release_all() clears it, so the driver contract re-reads per query.
     def build() -> DataFrame:
         # Timestamp columns arrive as whatever the generator wrote —
         # parquet TIMESTAMP(NANOS) (Spark 4 rejects it unless read as
@@ -86,7 +86,7 @@ def _read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
 
-    return reader_memo(spark, (sf_dir, name), build)
+    return plan_memo((), ("reader", spark, sf_dir, name), build)
 
 
 def ts_us(df: DataFrame, col: str = "ts") -> Column:
@@ -149,7 +149,9 @@ def products(spark: SparkSession, sf_dir: str) -> DataFrame:
     projection costs ~0.2 s of py4j Column construction per build and
     every product-family query re-derives it per execution. Same
     UNMATERIALIZED plan either way; release_all() clears."""
-    return reader_memo(spark, ("products", sf_dir), lambda: _products(spark, sf_dir))
+    return plan_memo(
+        (), ("reader", spark, "products", sf_dir), lambda: _products(spark, sf_dir)
+    )
 
 
 def _products(spark: SparkSession, sf_dir: str) -> DataFrame:

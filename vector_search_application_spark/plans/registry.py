@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 
 from ..functions import portable as P
 from ..functions import text as T
-from ..functions.cache import reader_memo
+from ..functions.cache import plan_memo
 from ..operators import bm25, exact, fusion, topk
 from . import corpus, sqlfrag
 from .constants import (
@@ -474,7 +474,7 @@ def _part_number_literal(spark: SparkSession, sf_dir: str, partkey: int) -> str:
     fetched from the corpus. Memoized per (session, sf_dir, partkey)
     — the ``ivf_schedule`` n_vectors policy: a one-row ``first()`` job
     is query-INPUT metadata a warm session need not re-fetch per
-    execution; release_all() clears, so the driver's gate still
+    execution; release_all() clears, so the driver contract still
     fetches per query."""
 
     def fetch() -> str:
@@ -486,7 +486,9 @@ def _part_number_literal(spark: SparkSession, sf_dir: str, partkey: int) -> str:
         )
         return row.p_brand.replace("#", "").upper() + str(partkey).zfill(7)
 
-    return reader_memo(spark, ("part_number_literal", sf_dir, partkey), fetch)
+    return plan_memo(
+        (), ("reader", spark, "part_number_literal", sf_dir, partkey), fetch
+    )
 
 
 @declare("exact_cascade_primary", _cascade_sql(_CASCADE_QS_CTE), survey_ids="Q1,F5,C2")

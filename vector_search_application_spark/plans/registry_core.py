@@ -45,32 +45,7 @@ _CURATED = False
 
 def declare(name: str, sql: Optional[str], survey_ids: str = ""):
     def deco(fn):
-        def gated(spark: SparkSession, sf_dir: str) -> DataFrame:
-            # Release the PREVIOUS query's tracked caches before
-            # building this one. The driver's correctness gate runs
-            # all 50 windowed queries sequentially in ONE vanilla
-            # session (default ~1g heap, driver and executors sharing
-            # it in local mode): without a boundary, every query's
-            # persisted intermediates + broadcasts accumulate until
-            # the JVM OOMs mid-window — measured at r10 when the
-            # dedup-family seats front-loaded the window (9 queries
-            # in, embedding_neardup's collect died; solo it runs in
-            # 22s). Unpersisting is semantics-neutral (a released
-            # plan recomputes), so collect-then-build sequences are
-            # safe, and warm-measurement tools (bench.py, the scale
-            # probes) opt out via SPARK_GRAFT_KEEP_CACHES=1 to keep
-            # their documented cross-rep cache reuse.
-            import os as _os
-
-            if _os.environ.get("SPARK_GRAFT_KEEP_CACHES") != "1":
-                from ..functions.cache import release_all
-
-                release_all()
-            return fn(spark, sf_dir)
-
-        gated.__name__ = getattr(fn, "__name__", name)
-        gated.__doc__ = fn.__doc__
-        REGISTRY.append(Declared(name, gated, sql, survey_ids))
+        REGISTRY.append(Declared(name, fn, sql, survey_ids))
         _try_curate()
         return fn
 
