@@ -114,9 +114,12 @@ def test_bm25_indexed_torn_build_refuses(spark, tmp_path):
 
 
 def test_bm25_indexed_collects_only_bucket_ids():
-    """The serving path's single driver collect is the query terms'
-    bucket-id list (bounded ints, the probe_cells_tbl pattern) — never
-    postings or stats rows; pinned at the source like the IVF guard."""
+    """The layout lookup never collects postings rows: the one collect
+    in _probed_postings is the bucket-id set (bounded ints, the
+    probe_cells_tbl pattern); the batch deduplicates its ids on the
+    executors first, while the single query projects its local term
+    relation (no job, pinned in tests/test_query_literals.py). Pinned
+    at the source like the IVF guard."""
     import inspect
 
     for fn in (
@@ -128,4 +131,6 @@ def test_bm25_indexed_collects_only_bucket_ids():
         assert ".collect()" not in inspect.getsource(fn), fn.__name__
     src = " ".join(inspect.getsource(bm25._probed_postings).split())
     assert src.count(".collect()") == 1
-    assert ".distinct() .collect()" in src
+    assert "bucket_ids.collect()" in src
+    batch = " ".join(inspect.getsource(bm25.bm25_indexed_topk_batch).split())
+    assert "_term_buckets(qterms, n_buckets).distinct()" in batch

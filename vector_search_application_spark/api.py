@@ -126,14 +126,10 @@ class Engine:
             if q in self._query_emb_cache:
                 self._query_emb_cache.move_to_end(q)
                 return self._query_emb_cache[q]
-        # localCheckpoint MATERIALIZES the few posting rows before
-        # caching — a cache of lazy plans would re-run the embed
-        # subplan inside every downstream job, which is not the
-        # computational parity the reference's lru_cache of computed
-        # vectors provides
-        built = E.embed_query_postings(self.spark, q).localCheckpoint(
-            eager=True
-        )
+        # the value is the computed vector itself, like the reference's
+        # lru_cache of embeddings: a (dim, qcomp) LocalRelation embedded
+        # on the driver, which no downstream job recomputes
+        built = E.embed_query_postings(self.spark, q)
         with self._lock:
             if q not in self._query_emb_cache:
                 if len(self._query_emb_cache) >= self._query_cache_capacity:

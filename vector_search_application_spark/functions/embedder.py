@@ -16,10 +16,10 @@ deterministic replacement: a signed hashing-trick projection
                                        search_service.py:136)
 
 Vectors are kept in EXPLODED form (id, dim, comp) — "posting form" —
-rather than assembled arrays: at 100 TB this is the layout that joins
-(query dims broadcast against a dim-partitioned corpus), and it makes
-the whole pipeline, including search, expressible in both engines with
-no array machinery. The production ONNX model slots in as a mapInPandas
+rather than assembled arrays: at 100 TB this is the layout a query
+probes (its dims, as literals, against a dim-partitioned corpus), and
+it makes the whole pipeline, including search, expressible in both
+engines with no array machinery. The production ONNX model slots in as a mapInPandas
 stage producing the same posting form (operators/embed_udf.py).
 
 FIXTURES.md §2 specifies xxhash64(seed=42); we use the repo-wide md5
@@ -28,6 +28,9 @@ documented deviation.
 """
 
 from __future__ import annotations
+
+import hashlib
+import math
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -58,6 +61,32 @@ def hash_sign_sql(h: str) -> str:
     return f"CASE WHEN (({h}) >> 6) % 2 = 0 THEN 1.0 ELSE -1.0 END"
 
 
+def _check_dim(dim: int) -> None:
+    if dim > 64:
+        raise ValueError(
+            f"signed-hash embedding supports dim <= 64 (got {dim}): the "
+            "sign bit (bit 6) is only independent of the dim index below "
+            "that bound — see hash_sign"
+        )
+
+
+def hash_embed_py(text: str, dim: int = HASH_EMBED_DIM) -> dict[int, float]:
+    """{dim: comp} for one text: the Python twin of embed_postings
+    (P.tokens_py, md5 low-60-bit hash, dim = h mod dim, sign = bit 6,
+    HALF_UP rounding) for driver-side query vectors and the "hash"
+    backend of operators/embed_udf.py. Pinned to the JVM form over an
+    edge corpus (tests/test_query_literals.py::test_hash_embed_py_parity)."""
+    raw: dict[int, float] = {}
+    for term in P.tokens_py(text):
+        h = int(hashlib.md5(term.encode()).hexdigest()[:15], 16)
+        d, sign = h % dim, 1.0 if (h >> 6) % 2 == 0 else -1.0
+        raw[d] = raw.get(d, 0.0) + sign
+    nrm = math.sqrt(sum(v * v for v in raw.values()))
+    if nrm > 0:
+        return {d: P.round_half_up(v / nrm) for d, v in raw.items()}
+    return {d: 0.0 for d in raw}
+
+
 def embed_postings(
     docs: DataFrame,
     id_col: str,
@@ -86,12 +115,7 @@ def embed_postings(
     index=False: memoizing per-batch plans would pin a persisted copy
     of every batch until release_all().
     """
-    if dim > 64:
-        raise ValueError(
-            f"signed-hash embedding supports dim <= 64 (got {dim}): the "
-            "sign bit (bit 6) is only independent of the dim index below "
-            "that bound — see hash_sign"
-        )
+    _check_dim(dim)
     if index:
         from .cache import plan_memo, tracked_persist
 
@@ -161,14 +185,18 @@ def embed_postings_cte(
 def embed_query_postings(
     spark, query_text: str, dim: int = HASH_EMBED_DIM
 ) -> DataFrame:
-    """(dim, comp) for one query string — E3 without the model server.
+    """(dim, qcomp) for one query string — E3 without the model server.
 
-    Built from spark.range (no Python workers); meant to be broadcast.
+    Embedded on the driver by ``hash_embed_py`` (pinned to
+    embed_postings) and returned as a LocalRelation of at most ``dim``
+    VALUES rows, empty when the query has no tokens: building or
+    collecting it runs no Spark job.
     """
-    one = spark.range(1).select(F.lit(query_text).alias("t"))
-    return (
-        embed_postings(one.select(F.lit(0).alias("qid"), "t"), "qid", "t", dim)
-        .select("dim", F.col("comp").alias("qcomp"))
+    _check_dim(dim)
+    vec = hash_embed_py(query_text, dim)
+    return P.local_values(
+        spark, "dim INT, qcomp DOUBLE",
+        [f"{d}, {c!r}D" for d, c in sorted(vec.items())],
     )
 
 
@@ -184,13 +212,21 @@ def sparse_cosine_topk(
 ) -> DataFrame:
     """Top-k by sparse dot product of unit vectors (= cosine).
 
-    Query dims (<= HASH_EMBED_DIM rows) broadcast; the corpus side
-    joins on dim and partially aggregates per id — at scale the corpus
-    postings stay put and only (id, partial score) rows shuffle.
+    The query's (dim, qcomp) rows (<= HASH_EMBED_DIM; collecting
+    embed_query_postings' LocalRelation runs no job) enter the plan as
+    literals: the corpus postings are probed with ``dim IN (...)`` and
+    weighted through a literal ``map(dim -> qcomp)``, then partially
+    aggregated per id — at scale the corpus postings stay put and only
+    (id, partial score) rows shuffle.
     """
+    q = query_emb.collect()
+    qcomp = (
+        F.expr(f"map({', '.join(f'{r.dim}, {r.qcomp!r}D' for r in q)})[dim]")
+        if q else F.lit(None).cast("double")
+    )
     scored = (
-        doc_emb.join(F.broadcast(query_emb), "dim")
+        doc_emb.filter(F.col("dim").isin([r.dim for r in q]))
         .groupBy("id")
-        .agg(P.rounded(F.sum(F.col("comp") * F.col("qcomp"))).alias("score"))
+        .agg(P.rounded(F.sum(F.col("comp") * qcomp)).alias("score"))
     )
     return scored.orderBy(F.desc("score"), F.asc("id")).limit(k)

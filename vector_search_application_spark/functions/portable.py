@@ -24,8 +24,9 @@ MMR round-before-max), lives in PARITY.md at the repo root.
 from __future__ import annotations
 
 import decimal
+import re
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..plans.constants import ROUND_DIGITS
@@ -83,6 +84,18 @@ def tokens(col: Column) -> Column:
     newline/tab).
     """
     return F.array_remove(F.split(F.lower(col), TOKEN_SPLIT_RE), "")
+
+
+_TOKEN_RE = re.compile("[a-z0-9]+")
+
+
+def tokens_py(text: str) -> list[str]:
+    """Python twin of ``tokens`` for driver-side values (query terms,
+    query embeddings): the non-empty [a-z0-9] runs of the lowercased
+    text are exactly what splitting on [^a-z0-9]+ and dropping the
+    empty strings leaves. Pinned against the JVM form over an edge
+    corpus (tests/test_query_literals.py::test_tokens_py_parity)."""
+    return _TOKEN_RE.findall(text.lower())
 
 
 def tokens_sql(expr: str) -> str:
@@ -197,3 +210,22 @@ def rounded(col: Column, digits: int = ROUND_DIGITS) -> Column:
 
 def rounded_sql(expr: str, digits: int = ROUND_DIGITS) -> str:
     return f"round(({expr})::DOUBLE, {digits})"
+
+
+# ---------------------------------------------------------------------------
+# driver-side values as plan literals
+# ---------------------------------------------------------------------------
+
+def local_values(spark, schema: str, rows: list[str]) -> DataFrame:
+    """A LocalRelation of driver-side values under the DDL ``schema``
+    ("dim INT, qcomp DOUBLE"): ``rows`` are SQL literal tuples
+    ("3, 0.25D") typed like the schema, and none gives the empty
+    relation. Building it parses one SQL string; collecting it runs no
+    Spark job (a local table scan collects on the driver)."""
+    cols = [c.split() for c in schema.split(",")]
+    if not rows:
+        nulls = ", ".join(f"CAST(NULL AS {t}) AS {n}" for n, t in cols)
+        return spark.sql(f"SELECT {nulls} WHERE false")
+    body = ", ".join(f"({r})" for r in rows)
+    names = ", ".join(n for n, _ in cols)
+    return spark.sql(f"SELECT * FROM VALUES {body} AS v({names})")

@@ -583,9 +583,6 @@ def _cell_over_cents_sql(
     return f"transform(array(sqrt({dot_vv})), nv -> {argmax})[0]"
 
 
-_round_half_up = P.round_half_up  # shared with embed_udf via portable
-
-
 def _py_cosine(a, b) -> float:
     """Driver-side cosine with the engines' IEEE left-assoc
     accumulation + HALF_UP rounding — the MMR rerank's bounded driver
@@ -597,7 +594,7 @@ def _py_cosine(a, b) -> float:
         na = na + float(x) * float(x)
         nb = nb + float(y) * float(y)
     denom = math.sqrt(na) * math.sqrt(nb)
-    return _round_half_up(dot / denom if denom > 0.0 else 0.0)
+    return P.round_half_up(dot / denom if denom > 0.0 else 0.0)
 
 
 def ivf_assign(

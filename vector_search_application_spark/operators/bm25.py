@@ -8,7 +8,8 @@ declarative and deterministic:
 
   postings(id, term, tf, doc_len)   <- tokenize + groupBy (one shuffle,
                                        partitioned by (id, term))
-  stats(n_docs, avgdl)              <- corpus aggregate (broadcast)
+  stats(n_docs, avgdl)              <- corpus aggregate (two scalars,
+                                       collected once per index)
   df(term, df)                      <- posting aggregate by term
   score = sum over matched query terms of
             idf(term) * tf*(k1+1) / (tf + k1*(1 - b + b*dl/avgdl))
@@ -21,8 +22,9 @@ dot-product computes).
 
 Scale shape: the postings table is the scale unit — partition/bucket it
 by term so a query's term-probe touches only matching partitions; the
-query-term list is tiny and broadcast, so scoring is a map-side join +
-partial agg over ~len(query) posting slices, never a corpus shuffle.
+query terms are tokenized on the driver and enter the plan as literals
+(``term IN (...)``), so scoring is a filter + partial agg over
+~len(query) posting slices, never a corpus shuffle.
 """
 
 from __future__ import annotations
@@ -89,7 +91,8 @@ def build_postings(
 
 
 def corpus_stats(postings: DataFrame) -> DataFrame:
-    """One-row (n_docs, avgdl) DataFrame, meant to be broadcast.
+    """One-row (n_docs, avgdl) DataFrame; scorers take its two values
+    as literals (``_index_aggregates``, ``_read_bm25_index``).
 
     DELIBERATE: stats derive from the postings, so documents that
     tokenize to ZERO terms (empty/None/all-separator text) are outside
@@ -114,17 +117,11 @@ def doc_frequency(postings: DataFrame) -> DataFrame:
 
 
 def query_terms(spark, query_text: str) -> DataFrame:
-    """Distinct tokens of the query string as a one-column DataFrame.
-
-    Built from spark.range (no Python workers, no local collection) so
-    it composes into a single JVM plan and broadcasts.
-    """
-    return (
-        spark.range(1)
-        .select(
-            F.explode(F.array_distinct(P.tokens(F.lit(query_text)))).alias("term")
-        )
-    )
+    """Distinct tokens of the query string as a one-column (term)
+    LocalRelation, tokenized on the driver by P.tokens_py (pinned to
+    P.tokens): building or collecting it runs no Spark job."""
+    terms = dict.fromkeys(P.tokens_py(query_text))
+    return P.local_values(spark, "term STRING", [f"'{t}'" for t in terms])
 
 
 def _bm25_weight(k1: float, b: float):
@@ -149,21 +146,20 @@ def _bm25_weight(k1: float, b: float):
     return F.expr(f"({idf}) * ({tf_part})")
 
 
-def _index_aggregates(postings: DataFrame, qterms: DataFrame):
-    """(stats, query-probed dfreq) for a FULL postings index, both
-    served from persisted index-shaped tables (r13 optimization,
-    guide §2.4 'remove shuffles outright'):
+def _index_aggregates(postings: DataFrame):
+    """((n_docs, avgdl), dictionary) for a FULL postings index — index
+    metadata (the reference's sparse index stores exactly idf and avgdl
+    beside the postings), derived ONCE per postings plan through
+    cache.plan_memo, so warm serving stops re-running a distinct+agg
+    over the whole postings table per query (r13: 0.62 s/query at
+    sf0.1 for the stats pass alone):
 
-    - the one-row corpus stats and the (term, df) dictionary are
-      derived ONCE per index and tracked_persist'ed — they are index
-      metadata (the reference's sparse index stores exactly idf and
-      avgdl beside the postings), so warm serving stops re-running a
-      distinct+agg over the whole postings table per query (measured
-      0.62 s/query at sf0.1 for the stats pass alone);
-    - the per-query df comes from a broadcast probe of the persisted
-      dictionary instead of aggregating the term-probed posting
-      slice, which re-scanned every posting row of the query's terms
-      (for a common term that slice is the term's whole posting list)
+    - the corpus stats are two scalars from one ``first()`` per index
+      version, bound into each scoring plan as literals;
+    - the (term, df) dictionary is tracked_persist'ed and probed per
+      query with the query terms, instead of aggregating the
+      term-probed posting slice, which re-scanned every posting row of
+      the query's terms (for a common term, its whole posting list)
       just to count it.
 
     The dictionary agg is one extra map-side-combinable shuffle at
@@ -171,23 +167,29 @@ def _index_aggregates(postings: DataFrame, qterms: DataFrame):
     query the way the postings build itself is. Values are identical
     to the slice-derived form — df of a term over its probed slice IS
     df of the term — so oracle hashes cannot move (verified by the
-    bm25 rows in tests/test_registry_oracle.py).
-
-    Memoized per postings plan via cache.plan_memo (r14, ADVICE): the
-    r13 form tracked_persist'ed fresh stats/df plans on every
-    stats=None invocation — warm reuse worked only because Spark's
-    CacheManager dedupes identical plans, while _LIVE accumulated two
-    duplicate entries per sparse query between release_all boundaries
-    (the bench's 'Asked to cache already cached data' warnings)."""
-    stats, dictionary = plan_memo(
+    bm25 rows in tests/test_registry_oracle.py)."""
+    return plan_memo(
         postings,
         ("bm25_index_aggregates",),
         lambda: (
-            tracked_persist(corpus_stats(postings)),
+            tuple(corpus_stats(postings).first()),
             tracked_persist(doc_frequency(postings)),
         ),
     )
-    return stats, dictionary.join(F.broadcast(qterms), "term")
+
+
+def _weights(probed: DataFrame, dfreq: DataFrame, stats, k1, b, *keys):
+    """(*keys, w): the BM25 weight of each term-probed posting row, the
+    (n_docs, avgdl) ``stats`` bound as literals."""
+    n_docs, avgdl = stats
+    return (
+        probed.join(F.broadcast(dfreq), "term")
+        .withColumns({
+            "n_docs": F.lit(n_docs).cast("bigint"),
+            "avgdl": F.lit(avgdl).cast("double"),
+        })
+        .select(*keys, _bm25_weight(k1, b).alias("w"))
+    )
 
 
 def bm25_score_terms(
@@ -195,28 +197,31 @@ def bm25_score_terms(
     qterms: DataFrame,
     k1: float = BM25_K1,
     b: float = BM25_B,
-    stats: DataFrame | None = None,
+    stats: tuple | None = None,
 ) -> DataFrame:
     """Score every document containing at least one query term.
 
     Returns (id, score) with score rounded for engine/oracle parity.
-    ``stats`` overrides the derived corpus aggregate — REQUIRED when
-    ``postings`` is a pruned slice of a persisted index (the bucket
-    probe keeps only the query terms' buckets, so stats derived from
-    the slice would be the slice's, not the corpus's).
+    The query terms are collected (query_terms' LocalRelation collects
+    with no job) and probe the postings and the dictionary as
+    ``term IN (...)`` literals. ``stats`` — (n_docs, avgdl) —
+    overrides the derived corpus aggregate: REQUIRED when ``postings``
+    is a pruned slice of a persisted index (the bucket probe keeps only
+    the query terms' buckets, so stats derived from the slice would be
+    the slice's, not the corpus's).
     """
+    in_query = F.col("term").isin([r["term"] for r in qterms.collect()])
+    probed = postings.filter(in_query)
     if stats is None:
-        stats, dfreq = _index_aggregates(postings, qterms)
+        stats, dictionary = _index_aggregates(postings)
+        dfreq = dictionary.filter(in_query)
     else:
         # pruned persisted-layout slice: df aggregates over the
         # term-probed slice (already bucket-pruned; a slice-derived
         # dictionary would be query-keyed, not index-shaped)
-        dfreq = doc_frequency(postings.join(F.broadcast(qterms), "term"))
-    probed = postings.join(F.broadcast(qterms), "term")
-    matched = probed.join(F.broadcast(dfreq), "term").crossJoin(F.broadcast(stats))
-    w = _bm25_weight(k1, b)
+        dfreq = doc_frequency(probed)
     return (
-        matched.select("id", w.alias("w"))
+        _weights(probed, dfreq, stats, k1, b, "id")
         .groupBy("id")
         .agg(P.rounded(F.sum("w")).alias("score"))
     )
@@ -253,7 +258,7 @@ def bm25_score_terms_batch(
     qterms: DataFrame,
     k1: float = BM25_K1,
     b: float = BM25_B,
-    stats: DataFrame | None = None,
+    stats: tuple | None = None,
 ) -> DataFrame:
     """(query_id, id, score) for a BATCH of queries in one plan.
 
@@ -280,11 +285,12 @@ def bm25_score_terms_batch(
     ``stats`` overrides the derived corpus aggregate — required for
     pruned persisted-index slices, as in bm25_score_terms."""
     terms_only = qterms.select("term").distinct()
-    if stats is None:
-        stats, dfreq = _index_aggregates(postings, terms_only)
-    else:
-        dfreq = doc_frequency(postings.join(F.broadcast(terms_only), "term"))
     probed = postings.join(F.broadcast(terms_only), "term")
+    if stats is None:
+        stats, dictionary = _index_aggregates(postings)
+        dfreq = dictionary.join(F.broadcast(terms_only), "term")
+    else:
+        dfreq = doc_frequency(probed)
     # weight BEFORE the per-query fan-out (r13): the BM25 weight is a
     # function of (term, id) alone — idf from the term's df, tf
     # saturation from the posting row — never of the query, so it is
@@ -294,12 +300,7 @@ def bm25_score_terms_batch(
     # evaluations (~15M at the 500-query bench row) for ~116k distinct
     # values. Same w multiset per (query_id, id) group, same
     # arbitrary-order sum, so scores are bit-identical.
-    w = _bm25_weight(k1, b)
-    weighted = (
-        probed.join(F.broadcast(dfreq), "term")
-        .crossJoin(F.broadcast(stats))
-        .select("term", "id", w.alias("w"))
-    )
+    weighted = _weights(probed, dfreq, stats, k1, b, "term", "id")
     return (
         weighted.join(F.broadcast(qterms), "term")
         .select("query_id", "id", "w")
@@ -379,16 +380,17 @@ def write_bm25_indexed(
 
 
 def _read_bm25_index(spark, path: str):
-    """(stats_df, n_buckets) for a persisted BM25 layout, refusing a
-    torn build — both directions, same contract as the IVF layouts'
-    _read_indexed_cents: a stamped-stats/meta mismatch AND an unstamped
-    stats row beside a stamped layout each mean a rebuild died between
-    the writes; only a fully pre-stamp pair passes unverified (then
-    n_buckets falls back to the default)."""
-    stats = spark.read.parquet(bm25_stats_path(path))
+    """((n_docs, avgdl), n_buckets) for a persisted BM25 layout, from
+    one ``first()`` of the stats row, refusing a torn build — both
+    directions, same contract as the IVF layouts' _read_indexed_cents:
+    a stamped-stats/meta mismatch AND an unstamped stats row beside a
+    stamped layout each mean a rebuild died between the writes; only a
+    fully pre-stamp pair passes unverified (then n_buckets falls back
+    to the default)."""
+    row = spark.read.parquet(bm25_stats_path(path)).first().asDict()
     meta = _layout_meta.read_json_meta(spark, path, BM25_BUILD_META)
-    if "build_id" in stats.columns:
-        stats_bid = stats.select("build_id").first()["build_id"]
+    if "build_id" in row:
+        stats_bid = row["build_id"]
         if meta is None or meta.get("build_id") != stats_bid:
             raise ValueError(
                 f"BM25 index at {path} is torn: stats build_id "
@@ -396,7 +398,6 @@ def _read_bm25_index(spark, path: str):
                 f"{None if meta is None else meta.get('build_id')!r} "
                 f"— rebuild it"
             )
-        stats = stats.drop("build_id")
     elif meta is not None:
         raise ValueError(
             f"BM25 index at {path} is torn: the layout carries build_id "
@@ -404,23 +405,21 @@ def _read_bm25_index(spark, path: str):
             f"unstamped — a rebuild died between the writes; rebuild it"
         )
     n_buckets = (meta or {}).get("n_buckets", BM25_N_TERM_BUCKETS)
-    return stats, int(n_buckets)
+    return (row["n_docs"], row["avgdl"]), int(n_buckets)
 
 
-def _probed_postings(spark, path: str, qterms: DataFrame, n_buckets: int):
-    """The pruned slice of a persisted layout: the query terms' bucket
-    ids (a bounded driver list of <= |terms| ints, the probe_cells_tbl
-    pattern — the ids MUST be literals so they land as PartitionFilters
-    and prune bucket directories before file I/O) select the only
-    directories that can hold a matching posting row."""
-    buckets = [
-        r["b"]
-        for r in qterms.select(
-            _term_bucket(F.col("term"), n_buckets).alias("b")
-        )
-        .distinct()
-        .collect()
-    ]
+def _term_buckets(terms: DataFrame, n_buckets: int) -> DataFrame:
+    """(b): the layout bucket id of each (term) row."""
+    return terms.select(_term_bucket(F.col("term"), n_buckets).alias("b"))
+
+
+def _probed_postings(spark, path: str, bucket_ids: DataFrame):
+    """The pruned slice of a persisted layout: the (b) rows of
+    ``bucket_ids`` (a bounded driver set of <= |terms| ints, the
+    probe_cells_tbl pattern — the ids MUST be literals so they land as
+    PartitionFilters and prune bucket directories before file I/O)
+    select the only directories that can hold a matching posting row."""
+    buckets = sorted({r["b"] for r in bucket_ids.collect()})
     return (
         spark.read.parquet(path)
         .filter(F.col(TERM_BUCKET_COL).isin(buckets))
@@ -437,10 +436,12 @@ def bm25_indexed_topk(
     row-for-row (the layout is semantically invisible: the probed
     slice contains every posting row any query term matches, df
     aggregates over that slice exactly as the in-memory scorer's
-    term-probe does, and stats are the persisted corpus-global row)."""
+    term-probe does, and stats are the persisted corpus-global row's
+    values)."""
     stats, n_buckets = _read_bm25_index(spark, path)
     qterms = query_terms(spark, query_text)
-    postings = _probed_postings(spark, path, qterms, n_buckets)
+    # a projection of the local term relation: collected with no job
+    postings = _probed_postings(spark, path, _term_buckets(qterms, n_buckets))
     scored = bm25_score_terms(postings, qterms, stats=stats)
     return scored.orderBy(F.desc("score"), F.asc("id")).limit(k)
 
@@ -457,13 +458,15 @@ def bm25_indexed_topk_batch(
     term set prunes to the union of term buckets (still a bounded
     driver list), the slice is probed once for all queries, and
     scoring + per-query top-k mirror bm25_score_terms_batch with the
-    persisted stats row. Equals bm25_topk_batch row-for-row."""
+    persisted stats row's values. Equals bm25_topk_batch row-for-row."""
     from .topk import topk_per_group
 
     stats, n_buckets = _read_bm25_index(spark, path)
     qterms = query_terms_batch(queries, qid_col=qid_col, text_col=text_col)
+    # the batch's term set is distributed: deduplicated on the
+    # executors, so at most n_buckets ids reach the driver
     postings = _probed_postings(
-        spark, path, qterms.select("term").distinct(), n_buckets
+        spark, path, _term_buckets(qterms, n_buckets).distinct()
     )
     scored = bm25_score_terms_batch(postings, qterms, stats=stats)
     return topk_per_group(scored, "query_id", k, id_col="id")

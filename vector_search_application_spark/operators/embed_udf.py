@@ -10,9 +10,9 @@ Two backends:
     in this environment — import-gated; raises a clear error if
     requested without the package.
   - "hash" (default): the deterministic signed-hash projection,
-    bit-compatible with functions/embedder.py's JVM/SQL implementation
-    (verified in tests/test_embed_udf.py), so the distributed plumbing
-    is exercised without the model weights.
+    functions/embedder.hash_embed_py — the Python twin of the JVM/SQL
+    embedder (verified in tests/test_embed_udf.py), so the distributed
+    plumbing is exercised without the model weights.
 
 Output is posting form (id, dim, comp) — identical schema to the
 declarative embedder, so downstream search plans are backend-agnostic.
@@ -20,35 +20,13 @@ declarative embedder, so downstream search plans are backend-agnostic.
 
 from __future__ import annotations
 
-import hashlib
-import math
-import re
 from typing import Iterator
 
 from pyspark.sql import DataFrame
 
+from ..functions import portable as P
+from ..functions.embedder import hash_embed_py
 from ..plans.constants import HASH_EMBED_DIM
-from .ann import _round_half_up
-
-_TOKEN_RE = re.compile(r"[a-z0-9]+")
-
-
-def _hash_embed_one(text: str, dim: int) -> dict[int, float]:
-    """Python twin of functions/embedder.py (md5 low-60-bit hash,
-    dim = h mod dim, sign = bit 6). Must stay in lockstep."""
-    raw: dict[int, float] = {}
-    for term in _TOKEN_RE.findall(text.lower()):
-        h = int(hashlib.md5(term.encode()).hexdigest()[:15], 16)
-        d = h % dim
-        sign = 1.0 if (h >> 6) % 2 == 0 else -1.0
-        raw[d] = raw.get(d, 0.0) + sign
-    nrm = math.sqrt(sum(v * v for v in raw.values()))
-    if nrm > 0:
-        # Spark ROUND is HALF_UP over the shortest decimal repr; Python
-        # round() is banker's — exact halfway values (e.g. 1/128) would
-        # silently diverge from the declarative embedder
-        return {d: _round_half_up(v / nrm) for d, v in raw.items()}
-    return {d: 0.0 for d in raw}
 
 
 def embed_map_in_pandas(
@@ -99,10 +77,10 @@ def embed_map_in_pandas(
                     for d, v in enumerate(vec):
                         if v != 0.0:
                             ids.append(i); dims.append(d)
-                            comps.append(_round_half_up(float(v)))
+                            comps.append(P.round_half_up(float(v)))
             else:
                 for i, text in zip(pdf["id"], pdf["t"]):
-                    for d, v in _hash_embed_one(text or "", dim).items():
+                    for d, v in hash_embed_py(text or "", dim).items():
                         ids.append(i); dims.append(d); comps.append(v)
             yield pd.DataFrame({"id": ids, "dim": dims, "comp": comps})
 

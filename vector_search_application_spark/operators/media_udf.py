@@ -63,7 +63,7 @@ def image_features(media: DataFrame, backend: str = "fake") -> DataFrame:
                 ids.append(i)
                 # HALF_UP, not Python round()'s banker's rounding —
                 # the repo-wide discipline for floats meant to match
-                # engine rounding (see embed_udf._round_half_up note)
+                # engine rounding (see portable.round_half_up)
                 means.append(_round_half_up(float(px.mean())) if n else 0.0)
                 mins.append(int(px.min()) if n else 0)
                 maxs.append(int(px.max()) if n else 0)

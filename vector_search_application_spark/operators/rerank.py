@@ -16,8 +16,8 @@ selection is inherently sequential (each pick depends on all previous
 picks), over N rows where N is a re-rank head (tens), NOT the corpus:
 O(k*N) driver flops on index-small data, the same driver/executor
 split as IVF probe-cell ranking (operators/ann.py). The selected rows
-re-enter the engine as a one-row inline literal relation (evaluated
-once, no Python workers), so downstream plans compose normally.
+re-enter the engine as a local VALUES relation (P.local_values: no
+job, no Python workers), so downstream plans compose normally.
 """
 
 from __future__ import annotations
@@ -71,8 +71,8 @@ def mmr_rerank(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Distributed candidate top-N -> driver-side greedy MMR -> inline
-    literal relation (rank, id, score, mmr).
+    """Distributed candidate top-N -> driver-side greedy MMR -> local
+    VALUES relation (rank, id, score, mmr).
 
     The picked ids ride back as UNQUOTED integer literals (and the
     empty branch pins BIGINT), so the id column must be integral —
@@ -98,19 +98,11 @@ def mmr_rerank(
         for r in cand_df.collect()
     ]
     picked = mmr_select(cands, k, lam)
-    if not picked:
-        # inline(array()) cannot infer an element type — produce the
-        # empty relation with the same schema explicitly
-        return spark.range(0).selectExpr(
-            "CAST(id AS INT) AS rank",
-            f"id AS {id_col}",
-            "CAST(id AS DOUBLE) AS score",
-            "CAST(id AS DOUBLE) AS mmr",
-        )
-    structs = ", ".join(
-        f"named_struct('rank', {rank}, '{id_col}', CAST({cid} AS BIGINT),"
-        f" 'score', CAST('{score!r}' AS DOUBLE),"
-        f" 'mmr', CAST('{mmr!r}' AS DOUBLE))"
-        for rank, cid, score, mmr in picked
+    return P.local_values(
+        spark,
+        f"rank INT, {id_col} BIGINT, score DOUBLE, mmr DOUBLE",
+        [
+            f"{rank}, CAST({cid} AS BIGINT), {score!r}D, {mmr!r}D"
+            for rank, cid, score, mmr in picked
+        ],
     )
-    return spark.range(1).selectExpr(f"inline(array({structs}))")

@@ -51,7 +51,7 @@ SELECT dim, comp AS qcomp FROM qemb
 )
 def q_embed_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E3 query embed (deterministic; the reference's lru-cached
-    query_embed becomes a reusable broadcast-sized DataFrame)."""
+    query_embed becomes a driver-built (dim, qcomp) LocalRelation)."""
     return E.embed_query_postings(spark, EMBED_QUERY_TEXT)
 
 
