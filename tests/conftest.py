@@ -32,6 +32,88 @@ def duck():
     con.close()
 
 
+@pytest.fixture(scope="session")
+def text_twins(spark, duck, tmp_path_factory):
+    """``check(pairs)`` runs Spark text-feature columns and their DuckDB
+    twins over one parquet file — the sf0.001 documents plus edge rows
+    (test_hashed_grams.EDGE_TEXTS, the Unicode rows of
+    test_query_literals, a vertical tab, final sigma, short and
+    punctuation-only docs) — and returns every (doc_id, name, spark,
+    duck) that differs. ``pairs`` maps a name to (Column over ``text``,
+    DuckDB SQL over ``text``)."""
+    from tests.test_hashed_grams import EDGE_TEXTS as GRAM_TEXTS
+    from tests.test_query_literals import EDGE_TEXTS as UNICODE_TEXTS
+
+    edge = [t for _, t in GRAM_TEXTS] + UNICODE_TEXTS + [
+        "\x0bvertical\x0btab\x0b", "ΟΔΟΣ σοφός", "ab ab ab ab ab ab",
+        "a b c d e f g h", "one", "  --  !!  ", "x1 y2 x1 y2 x1 y2 z",
+        "!!! ...",
+    ]
+    path = str(tmp_path_factory.mktemp("text_twins") / "docs.parquet")
+    duck.execute(
+        "CREATE TEMP TABLE text_twin_docs AS SELECT doc_id, text FROM"
+        f" read_parquet('{SF_SMOKE}/documents.parquet')"
+    )
+    duck.executemany(
+        "INSERT INTO text_twin_docs VALUES (?, ?)",
+        [(-1 - i, t) for i, t in enumerate(edge)],
+    )
+    duck.execute(f"COPY text_twin_docs TO '{path}' (FORMAT parquet)")
+    docs = spark.read.parquet(path)
+
+    def check(pairs):
+        names = list(pairs)
+        got = {
+            r[0]: tuple(r[1:])
+            for r in docs.select(
+                "doc_id", *[pairs[n][0].alias(n) for n in names]
+            ).collect()
+        }
+        cols = ", ".join(f"{pairs[n][1]} AS {n}" for n in names)
+        want = {
+            r[0]: tuple(r[1:])
+            for r in duck.execute(
+                f"SELECT doc_id, {cols} FROM read_parquet('{path}')"
+            ).fetchall()
+        }
+        assert got.keys() == want.keys()
+        return [
+            (d, n, g, w)
+            for d in sorted(got)
+            for n, g, w in zip(names, got[d], want[d])
+            if g != w
+        ]
+
+    return check
+
+
+def quality_twin_pairs() -> dict:
+    """``quality_features_expr`` fields paired with their DuckDB twins."""
+    from vector_search_application_spark.functions import portable as P
+    from vector_search_application_spark.functions import text as T
+
+    qf = T.quality_features_expr("text")[0]
+    return {
+        "punct_ratio": (qf["punct_ratio"], P.rounded_sql(T.punct_ratio_sql("text"))),
+        "uniq_ratio": (qf["uniq_ratio"], P.rounded_sql(T.uniq_token_ratio_sql("text"))),
+        "quality": (qf["quality"], T.quality_score_sql("text")),
+        "n_tokens": (qf["n_tokens"], P.token_count_sql("text")),
+        "stopword_ratio": (qf["stopword_ratio"], T.stopword_ratio_sql("text")),
+    }
+
+
+def repetition_twin_pairs() -> dict:
+    """``repetition_features_expr`` fields paired with the
+    string-counting DuckDB twins."""
+    from vector_search_application_spark.functions import text as T
+
+    rf = T.repetition_features_expr("text")[0]
+    return {
+        "top_2gram_ratio": (rf["top_2gram_ratio"], T.top_ngram_ratio_sql("text", 2)),
+        "dup_3gram_ratio": (rf["dup_3gram_ratio"], T.dup_ngram_ratio_sql("text", 3)),
+    }
+
+
 def register_views(con, sf_dir: str) -> None:
     for t in TABLES:
         con.execute(

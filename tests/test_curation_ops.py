@@ -245,60 +245,21 @@ def test_bpe_merges_match_python_reference(spark):
     assert got == want
 
 
-def test_quality_features_expr_parity(spark):
-    """The r13 expr-string fast path (quality_features_expr — one
-    parsed string instead of ~150 py4j calls per plan build) must be
-    schema- and value-identical to the Column-builder form on the real
-    corpus, including the zero-token and all-punctuation branches."""
-    from pyspark.sql import functions as F
-    from tests.conftest import SF_SMOKE
+def test_quality_features_expr_parity(spark, text_twins):
+    """quality_features_expr (one parsed string instead of ~150 py4j
+    calls per plan build) keeps its struct schema and is value-identical
+    to the DuckDB twins the oracle uses, on the real corpus and the edge
+    rows, including the zero-token and all-punctuation branches."""
+    from tests.conftest import quality_twin_pairs
     from vector_search_application_spark.functions import text as T
-    from vector_search_application_spark.plans import corpus
 
-    docs = corpus.docs(spark, SF_SMOKE)
-    edge = docs.sparkSession.range(1).selectExpr(
-        "-1L AS doc_id",
-        "'' AS text",
-    ).unionByName(
-        docs.sparkSession.range(1).selectExpr("-2L AS doc_id", "'!!! ...' AS text")
+    assert spark.range(1).selectExpr("'' AS text").select(
+        T.quality_features_expr("text")
+    ).schema[0].dataType.simpleString() == (
+        "array<struct<punct_ratio:double,uniq_ratio:double,quality:double,"
+        "n_tokens:int,stopword_ratio:double>>"
     )
-    both = docs.select("doc_id", "text").unionByName(edge)
-    old = both.select(
-        "doc_id", F.explode(T.quality_features(F.col("text"))).alias("qf")
-    ).select("doc_id", "qf.*")
-    new = both.select(
-        "doc_id", F.explode(T.quality_features_expr("text")).alias("qf")
-    ).select("doc_id", "qf.*")
-    assert old.schema == new.schema
-    assert old.exceptAll(new).count() == 0
-    assert new.exceptAll(old).count() == 0
-
-
-def test_quality_score_delegation_parity(spark):
-    """quality_score delegates to the bind-once quality_features barrier;
-    this pins it exactly equal to the direct inline formulation on the
-    real corpus (same rounding, same zero-token branch)."""
-    from pyspark.sql import functions as F
-    from tests.conftest import SF_SMOKE
-    from vector_search_application_spark.functions import text as T
-    from vector_search_application_spark.plans import corpus
-
-    docs = corpus.docs(spark, SF_SMOKE)
-    n = (
-        docs.select(
-            # eqNullSafe: a delegation bug producing NULL for some
-            # rows makes (NULL != x) NULL, which sum() skips — the old
-            # != parity silently passed on one-sided NULLs
-            (
-                ~T.quality_score(F.col("text")).eqNullSafe(
-                    T._quality_score_inline(F.col("text"))
-                )
-            ).cast("int").alias("d")
-        )
-        .agg(F.sum("d").alias("n"))
-        .first()["n"]
-    )
-    assert n == 0
+    assert text_twins(quality_twin_pairs()) == []
 
 
 def test_bpe_survives_pairless_vocabulary(spark, tmp_path):

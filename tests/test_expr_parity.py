@@ -89,41 +89,6 @@ def test_cosine_spark_sql_parity(spark):
     )
 
 
-def test_hashed_ngram_ids_expr_parity(spark):
-    from vector_search_application_spark.functions import text as T
-
-    df = spark.createDataFrame(
-        [
-            ("the quick brown fox jumps over the lazy dog",),
-            ("a b",),
-            ("",),
-            ("repeat repeat repeat repeat repeat",),
-        ],
-        ["text"],
-    )
-    for n in (2, 3, 5):
-        old = df.select(T.hashed_ngram_ids(F.col("text"), n).alias("g"))
-        new = df.select(T.hashed_ngram_ids_expr("`text`", n).alias("g"))
-        assert old.sameSemantics(new), f"n={n}"
-
-
-def test_repetition_features_expr_parity(spark):
-    from vector_search_application_spark.functions import text as T
-
-    df = spark.createDataFrame(
-        [
-            ("the quick brown fox jumps over the lazy dog",),
-            ("spam spam spam spam spam and more spam spam spam",),
-            ("one two",),
-            ("",),
-        ],
-        ["text"],
-    )
-    old = df.select(T.repetition_features(F.col("text")).alias("rf"))
-    new = df.select(T.repetition_features_expr("`text`").alias("rf"))
-    assert old.sameSemantics(new)
-
-
 def test_tokens_spark_sql_parity(spark):
     rows = [
         ("Hello, World! 42 foo_bar",),

@@ -1,6 +1,6 @@
 """Contract tests for the hashed-gram fast path.
 
-hashed_ngram_ids / hashed_shingle_arrays promise: the MULTISET of
+hashed_ngram_ids_expr / hashed_shingle_arrays promise: the MULTISET of
 xxhash64 gram ids equals xxhash64 applied to the gram STRINGS the
 canonical slice+concat construction produces (same grams, same
 multiplicities, same per-doc row survival). Everything downstream
@@ -48,7 +48,7 @@ def edge_docs(spark):
 
 @pytest.mark.parametrize("n", [2, 3, 5])
 def test_hashed_ngram_ids_match_string_gram_hashes(spark, edge_docs, n):
-    """Multiset equality: hashed_ngram_ids == xxhash64 over the
+    """Multiset equality: hashed_ngram_ids_expr == xxhash64 over the
     canonical transform(sequence, slice) gram strings, per doc.
     The canonical grams join with TOKEN_SEP (what the consuming regex
     extracts), so hashing them directly must reproduce the ids."""
@@ -66,7 +66,7 @@ def test_hashed_ngram_ids_match_string_gram_hashes(spark, edge_docs, n):
     )
     got = base.select(
         "doc_id",
-        F.array_sort(T.hashed_ngram_ids(F.col("text"), n)).alias("hashed"),
+        F.array_sort(T.hashed_ngram_ids_expr("text", n)).alias("hashed"),
         F.array_sort(canonical).alias("canonical"),
     )
     for r in got.collect():

@@ -159,11 +159,9 @@ def test_repetition_signals_on_constructed_docs(spark):
     ]
     df = spark.createDataFrame(rows, "doc_id bigint, text string")
     out = {
-        r["doc_id"]: (r["t2"], r["d3"])
+        r["doc_id"]: (r["rf"]["top_2gram_ratio"], r["rf"]["dup_3gram_ratio"])
         for r in df.select(
-            "doc_id",
-            T.top_ngram_ratio(F.col("text"), 2).alias("t2"),
-            T.dup_ngram_ratio(F.col("text"), 3).alias("d3"),
+            "doc_id", F.explode(T.repetition_features_expr("text")).alias("rf")
         ).collect()
     }
     assert out[1] == (1.0, 1.0)
@@ -172,71 +170,17 @@ def test_repetition_signals_on_constructed_docs(spark):
     assert out[4] == (0.0, 0.0)
 
 
-def test_repetition_features_matches_single_signal_fns(spark):
-    """The fused regex-pipeline repetition_features must stay
-    bit-identical to the independently-implemented top_ngram_ratio /
-    dup_ngram_ratio (HOF gram build + _run_fold) over real corpus
-    docs AND the constructed edge shapes — the two formulations share
-    no gram-extraction code, so this is a real cross-check."""
-    from vector_search_application_spark.functions import text as T
+def test_repetition_features_matches_single_signal_fns(text_twins):
+    """The fused regex pipeline repetition_features_expr (hashed gram
+    ids, sorted-array flag folds) must stay value-identical to the
+    DuckDB single-signal twins top_ngram_ratio_sql /
+    dup_ngram_ratio_sql, which count true '_'-joined string grams,
+    over the real corpus docs AND the edge shapes — the two
+    formulations share no gram-extraction code, so this is a real
+    cross-check."""
+    from tests.conftest import repetition_twin_pairs
 
-    docs = corpus.docs(spark, SF_SMOKE).select("doc_id", "text").unionByName(
-        spark.createDataFrame(
-            [
-                (100001, "ab ab ab ab ab ab"),
-                (100002, "a b c d e f g h"),
-                (100003, "one"),
-                (100004, ""),
-                (100005, "  --  !!  "),
-                (100006, "x1 y2 x1 y2 x1 y2 z"),
-            ],
-            "doc_id bigint, text string",
-        )
-    )
-    fused = docs.select(
-        "doc_id", F.explode(T.repetition_features(F.col("text"))).alias("rf")
-    ).select("doc_id", "rf.top_2gram_ratio", "rf.dup_3gram_ratio")
-    single = docs.select(
-        "doc_id",
-        T.top_ngram_ratio(F.col("text"), 2).alias("t2"),
-        T.dup_ngram_ratio(F.col("text"), 3).alias("d3"),
-    )
-    # full outer + eqNullSafe: an inner join with != is blind to rows
-    # the fused path DROPS (explode of an empty array) and to
-    # NULL-vs-value disagreements (NULL != x is NULL, not counted)
-    assert fused.count() == single.count()
-    bad = (
-        fused.join(single, "doc_id", "full_outer")
-        .filter(
-            ~F.col("top_2gram_ratio").eqNullSafe(F.col("t2"))
-            | ~F.col("dup_3gram_ratio").eqNullSafe(F.col("d3"))
-        )
-        .count()
-    )
-    assert bad == 0
-
-
-def test_ngrams_matches_oracle_on_fixture(spark, duck):
-    """Engine and oracle gram arrays agree element-for-element on a
-    sample of real docs (join-key '_' and 1-based indexing parity)."""
-    from tests.conftest import register_views
-    from vector_search_application_spark.functions import portable as P
-    from vector_search_application_spark.functions import text as T
-
-    docs = corpus.docs(spark, SF_SMOKE).filter(F.col("doc_id") < 20)
-    eng = {
-        r["doc_id"]: r["g"]
-        for r in docs.select(
-            "doc_id", T.ngrams(P.tokens(F.col("text")), 2).alias("g")
-        ).collect()
-    }
-    register_views(duck, SF_SMOKE)
-    got = duck.execute(
-        f"SELECT doc_id, {T.ngrams_sql(P.tokens_sql('text'), 2)} AS g "
-        "FROM documents WHERE doc_id < 20"
-    ).fetchall()
-    for doc_id, g in got:
-        assert eng[doc_id] == g, doc_id
+    assert text_twins(repetition_twin_pairs()) == []
 
 
 def test_domain_mix_weights_sum_to_target(spark):
@@ -258,7 +202,7 @@ def test_training_manifest_composition_invariants(spark):
 
     docs = corpus.docs(spark, SF_SMOKE)
     feat = docs.select(
-        "doc_id", "text", F.explode(T.quality_features(F.col("text"))).alias("qf")
+        "doc_id", "text", F.explode(T.quality_features_expr("text")).alias("qf")
     )
     keep_ids = {
         r["doc_id"]

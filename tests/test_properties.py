@@ -225,9 +225,10 @@ def test_shingle_jaccard_invariant_under_renaming(a, b, rep):
 
 
 # ---------------------------------------------------------------------------
-# repetition flag-fold arithmetic (functions/text._mx_from_flags /
-# _dup_from_flags): the Column recurrences re-written literally in
-# Python, checked against Counter ground truth on random gram lists
+# repetition flag-fold arithmetic (the mx_from_flags / dup_from_flags
+# folds of functions/text.repetition_features_expr): the recurrences
+# re-written literally in Python, checked against Counter ground truth
+# on random gram lists
 # ---------------------------------------------------------------------------
 
 def _py_flags(grams):
@@ -272,7 +273,7 @@ def test_flag_folds_match_counter_ground_truth(grams):
 @given(st.text(alphabet="ab _.x", max_size=80),
        st.integers(min_value=2, max_value=5))
 def test_consuming_gram_extraction_is_complete(text, n):
-    """The n shifted consuming regex passes behind hashed_ngram_ids
+    """The n shifted consuming regex passes behind hashed_ngram_ids_expr
     must yield exactly the position-complete n-gram multiset of the
     token list (what transform(sequence, slice) builds)."""
     toks = py_tokens(text)

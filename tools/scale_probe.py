@@ -729,7 +729,7 @@ hashed at extraction, so sorts and folds run on longs — equality
 classes, and therefore values, unchanged). The shingle pipelines that
 only COMPARE shingles (decontamination, rare-shingle Jaccard
 blocking, boilerplate counts) got the same treatment via
-hashed_ngram_ids; MinHash/SimHash keep string shingles because their
+hashed_ngram_ids_expr; MinHash/SimHash keep string shingles because their
 md5 signature families pin exact values.
 Absolute context for the largest remaining rows: training_manifest_full
 is the whole quality -> dedup -> split -> decontaminate -> pack chain

@@ -55,14 +55,6 @@ def md5_long_sql(expr: str, seed: str = "") -> str:
     return f"('0x' || substr(md5({payload}), 1, 15))::BIGINT"
 
 
-def sha256_hex(col: Column) -> Column:
-    return F.sha2(col, 256)
-
-
-def sha256_hex_sql(expr: str) -> str:
-    return f"sha256({expr})"
-
-
 # ---------------------------------------------------------------------------
 # tokenizer
 # ---------------------------------------------------------------------------
@@ -98,9 +90,20 @@ def tokens_py(text: str) -> list[str]:
     return _TOKEN_RE.findall(text.lower())
 
 
+def lower_sql(expr: str) -> str:
+    """DuckDB twin of Spark ``lower``. Java lowercases İ (U+0130) to
+    i + U+0307 COMBINING DOT ABOVE, so Spark splits "İstanbul" into
+    ['i', 'stanbul']; DuckDB lowercases it to a bare i, one token. The
+    replace spells the Java mapping out first. Java's other special
+    lowercase (final sigma) stays non-ASCII and one character, so no
+    token, length or [a-z0-9] count changes. Every DuckDB twin of a
+    Spark ``lower`` calls this (tests/test_text_twins.py pins them)."""
+    return f"lower(replace({expr}, chr(304), 'i' || chr(775)))"
+
+
 def tokens_sql(expr: str) -> str:
     return (
-        f"list_filter(string_split_regex(lower({expr}), '{TOKEN_SPLIT_RE}'),"
+        f"list_filter(string_split_regex({lower_sql(expr)}, '{TOKEN_SPLIT_RE}'),"
         " t -> t <> '')"
     )
 

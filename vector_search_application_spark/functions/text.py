@@ -2,10 +2,15 @@
 heuristic, quality scoring, token statistics, document fingerprinting.
 
 Beyond-the-reference surface (the reference has no text analytics);
-first-class declared queries in registry_text. All pure JVM column
-expressions — at 100 TB these run map-side inside whole-stage codegen
-with zero shuffles (fingerprint needs one explode + re-agg keyed by
-doc id, which AQE coalesces).
+first-class declared queries in registry_text. Each feature has ONE
+Spark form and one DuckDB twin (``*_sql``) for the oracle. The Spark
+form is a Column builder where the feature is a few JVM calls
+(stopword_ratio, ws_token_count, re_token_count, bpe_tokens) and one
+parsed expression string (``*_expr``) where it is a tree of lambda
+HOFs, whose Column form cost ~150 py4j round-trips per plan build.
+Both kinds run map-side inside the scan with zero shuffles. The
+token-count, quality and repetition pairs are pinned row for row over
+the sf0.001 documents plus an edge corpus (tests/test_text_twins.py).
 """
 
 from __future__ import annotations
@@ -95,20 +100,9 @@ def stopword_ratio_sql(expr: str) -> str:
 PUNCT_KEEP = "abcdefghijklmnopqrstuvwxyz0123456789 "
 
 
-def punct_ratio(text: Column) -> Column:
-    low = F.lower(text)
-    kept = F.length(low) - F.length(F.translate(low, PUNCT_KEEP, ""))
-    return F.when(
-        F.length(text) > 0,
-        (F.length(text) - kept).cast("double") / F.length(text),
-    ).otherwise(F.lit(0.0))
-
-
 def punct_ratio_sql(expr: str) -> str:
-    kept = (
-        f"(length(lower({expr}))"
-        f" - length(translate(lower({expr}), '{PUNCT_KEEP}', '')))"
-    )
+    low = P.lower_sql(expr)
+    kept = f"(length({low}) - length(translate({low}, '{PUNCT_KEEP}', '')))"
     return (
         f"CASE WHEN length({expr}) > 0 THEN "
         f"(length({expr}) - {kept})::DOUBLE / length({expr})"
@@ -116,46 +110,11 @@ def punct_ratio_sql(expr: str) -> str:
     )
 
 
-def uniq_token_ratio(text: Column) -> Column:
-    toks = P.tokens(text)
-    return F.when(
-        F.size(toks) > 0,
-        F.size(F.array_distinct(toks)).cast("double") / F.size(toks),
-    ).otherwise(F.lit(0.0))
-
-
 def uniq_token_ratio_sql(expr: str) -> str:
     toks = P.tokens_sql(expr)
     return (
         f"CASE WHEN len({toks}) > 0 THEN "
         f"len(list_distinct({toks}))::DOUBLE / len({toks}) ELSE 0.0 END"
-    )
-
-
-def quality_score(text: Column) -> Column:
-    """[0,1] quality heuristic: length band + low punctuation +
-    stopword presence (fluency proxy) + lexical diversity.
-
-    Delegates to quality_features so the tokenizer runs once behind the
-    bind-once HOF barrier — the inline formulation re-tokenized 4x per
-    row with no CSE (measured ~5x slower on the data-card projection)."""
-    return quality_features(text)[0]["quality"]
-
-
-def _quality_score_inline(text: Column) -> Column:
-    """The direct formulation quality_features mirrors — kept for the
-    parity test that pins the two expressions equal."""
-    n = F.size(P.tokens(text))
-    len_ok = F.when((n >= 5) & (n <= 1000), F.lit(1.0)).otherwise(F.lit(0.0))
-    low_punct = F.greatest(
-        F.lit(0.0), F.lit(1.0) - punct_ratio(text) * F.lit(5.0)
-    )
-    sw_ok = F.least(F.lit(1.0), stopword_ratio(text) * F.lit(10.0))
-    return P.rounded(
-        F.lit(0.25) * len_ok
-        + F.lit(0.25) * low_punct
-        + F.lit(0.25) * sw_ok
-        + F.lit(0.25) * uniq_token_ratio(text)
     )
 
 
@@ -171,72 +130,33 @@ def quality_score_sql(expr: str) -> str:
 
 
 def quality_score_expr(text_sql: str) -> Column:
-    """``quality_score`` over a SQL column reference — the expr-string
-    fast path (see quality_features_expr)."""
+    """[0,1] quality heuristic: length band + low punctuation +
+    stopword presence (fluency proxy) + lexical diversity. The
+    ``quality`` field of quality_features_expr, so the tokenizer runs
+    once behind its bind-once barrier — the inline formulation
+    re-tokenized 4x per row with no CSE (measured ~5x slower on the
+    data-card projection)."""
     return quality_features_expr(text_sql)[0]["quality"]
 
 
-def quality_features(text: Column) -> Column:
-    """1-element ``array<struct<punct_ratio, uniq_ratio, quality,
-    n_tokens, stopword_ratio>>`` with the token array bound ONCE as a
-    lambda variable — callers ``explode()`` it so the tokenizer (the
-    expensive regex) runs once per row instead of 5x. A plain
-    shared-Project split gets re-inlined by CollapseProject (see
-    operators/dedup.py simhash); a Generate node is a real barrier.
-    Math is identical to punct_ratio / uniq_token_ratio /
-    quality_score / token_count / stopword_ratio."""
-    sw = F.array(*[F.lit(w) for w in STOPWORDS])
-
-    def build(bound: Column) -> Column:
-        # punct_ratio binds alongside the token array: HOF lambdas get
-        # no CSE, so an unbound pr referenced twice (low_punct + the
-        # rounded struct field) paid two lower+translate passes per row
-        toks, pr = bound["toks"], bound["pr"]
-        n = F.size(toks)
-        n_sw = F.size(F.filter(toks, lambda t: F.array_contains(sw, t)))
-        swr = F.when(n > 0, n_sw.cast("double") / n).otherwise(F.lit(0.0))
-        ur = F.when(
-            n > 0, F.size(F.array_distinct(toks)).cast("double") / n
-        ).otherwise(F.lit(0.0))
-        len_ok = F.when((n >= 5) & (n <= 1000), F.lit(1.0)).otherwise(F.lit(0.0))
-        low_punct = F.greatest(F.lit(0.0), F.lit(1.0) - pr * F.lit(5.0))
-        sw_ok = F.least(F.lit(1.0), swr * F.lit(10.0))
-        quality = P.rounded(
-            F.lit(0.25) * len_ok
-            + F.lit(0.25) * low_punct
-            + F.lit(0.25) * sw_ok
-            + F.lit(0.25) * ur
-        )
-        return F.struct(
-            P.rounded(pr).alias("punct_ratio"),
-            P.rounded(ur).alias("uniq_ratio"),
-            quality.alias("quality"),
-            n.cast("int").alias("n_tokens"),
-            swr.alias("stopword_ratio"),
-        )
-
-    return F.transform(
-        F.array(
-            F.struct(
-                P.tokens(text).alias("toks"),
-                punct_ratio(text).alias("pr"),
-            )
-        ),
-        build,
-    )
-
-
 def quality_features_expr(text_sql: str) -> Column:
-    """``quality_features`` over a SQL column reference, built as ONE
-    parsed expression string (r13): the Column-builder form costs ~150
-    py4j round-trips per plan build (lambda HOFs are the worst — each
-    _create_lambda is several gateway calls), which at ~1.5 ms per
-    round-trip put ~0.15 s of pure driver latency on every plan that
-    featurizes text. Same structure, same rounding, same zero-token
-    branches — pinned value-equal to the Column form on the real
-    corpus by tests/test_curation_ops.py::test_quality_features_expr_parity.
-    Callers with a plain column pass its name here; arbitrary Column
-    inputs keep the builder form above."""
+    """1-element ``array<struct<punct_ratio, uniq_ratio, quality,
+    n_tokens, stopword_ratio>>`` over a SQL column reference, with the
+    token array and the punct ratio bound ONCE as a lambda variable —
+    callers ``explode()`` it so the tokenizer (the expensive regex)
+    runs once per row instead of 5x. A plain shared-Project split gets
+    re-inlined by CollapseProject (see operators/dedup.py simhash); a
+    Generate node is a real barrier. The punct ratio binds too because
+    HOF lambdas get no CSE: referenced twice unbound, it paid two
+    lower+translate passes per row.
+
+    ONE parsed expression string (r13): the Column-builder form cost
+    ~150 py4j round-trips per plan build (each lambda is several
+    gateway calls), ~0.15 s of driver latency on every plan that
+    featurizes text. Pinned row for row to the DuckDB twins
+    (punct_ratio_sql, uniq_token_ratio_sql, quality_score_sql,
+    token_count_sql, stopword_ratio_sql) by
+    tests/test_curation_ops.py::test_quality_features_expr_parity."""
     sw = "array(" + ", ".join(f"'{w}'" for w in STOPWORDS) + ")"
     toks = f"array_remove(split(lower({text_sql}), '{P.TOKEN_SPLIT_RE}'), '')"
     kept = (
@@ -295,47 +215,23 @@ def re_token_count(text: Column) -> Column:
 
 
 def re_token_count_sql(expr: str) -> str:
-    return f"len(regexp_extract_all(lower({expr}), '{RE_TOKEN_PAT}'))"
+    return f"len(regexp_extract_all({P.lower_sql(expr)}, '{RE_TOKEN_PAT}'))"
 
 
 # --- repetition signals (Gopher-style quality rules) ----------------------
-# Per-row array expressions: gram frequencies computed as
-# distinct-grams x scan — O(u*n) per document, fine for per-row corpus
-# docs; a pipeline facing book-length texts would explode grams and
-# count via groupBy(doc_id, gram) instead (one shuffle keyed on the
-# doc), trading per-row cost for a keyed aggregation. Ratios are exact
-# int/int divisions, identical across engines; rounded anyway to stay
-# inside the portable-parity contract (functions/portable.py).
-
-
-def _gram_expr(t: Column, n: int) -> Column:
-    """Gram array from an ALREADY-BOUND token array ``t`` (a lambda
-    variable — callers must not pass the raw tokenizer expression, see
-    ngrams). The short-doc case must be an explicit branch:
-    sequence(1, 0) DESCENDS in Spark ([1, 0]), it does not return
-    empty."""
-    idx = F.sequence(F.lit(1), F.size(t) - (n - 1))
-    grams = F.transform(
-        idx,
-        lambda i: F.concat_ws("_", *[F.element_at(t, i + j) for j in range(n)]),
-    )
-    return F.when(F.size(t) >= n, grams).otherwise(
-        F.array().cast("array<string>")
-    )
-
-
-def ngrams(toks: Column, n: int) -> Column:
-    """Adjacent word n-grams joined by '_' (empty below n tokens).
-
-    The token array binds as a lambda variable before element_at
-    indexes it — toks is usually the regex tokenizer expression, and
-    HOF lambdas re-evaluate free subexpressions per element (measured:
-    the inline form re-tokenized ~2*len times per row, 7.4 s -> 0.5 s
-    at sf0.1 for the gram stage alone)."""
-    return F.transform(F.array(toks), lambda t: _gram_expr(t, n))[0]
+# Per-row array expressions: the Spark form sorts hashed gram ids once
+# (repetition_features_expr); the DuckDB twins count true string grams
+# as distinct-grams x scan, O(u*n) per document. Both are fine for
+# per-row corpus docs; a pipeline facing book-length texts would
+# explode grams and count via groupBy(doc_id, gram) instead (one
+# shuffle keyed on the doc), trading per-row cost for a keyed
+# aggregation. Ratios are exact int/int divisions, identical across
+# engines; rounded anyway to stay inside the portable-parity contract
+# (functions/portable.py).
 
 
 def ngrams_sql(toks: str, n: int) -> str:
+    """Adjacent token n-grams joined by '_' (empty below n tokens)."""
     parts = " || '_' || ".join(f"{toks}[i + {j}]" for j in range(n))
     return (
         f"list_transform(range(1, greatest(len({toks}) - {n - 2}, 1)),"
@@ -343,68 +239,9 @@ def ngrams_sql(toks: str, n: int) -> str:
     )
 
 
-def _run_fold(g: Column) -> Column:
-    """struct<mx, dup> over a gram array: longest equal-run length and
-    total length of runs >= 2, computed on the SORTED array in ONE
-    linear fold.
-
-    Why this shape: higher-order functions evaluate interpreted (no
-    whole-stage codegen), so per-element lambda cost dominates. The
-    natural distinct x filter frequency count is O(u*n) lambda evals
-    (~2,800 per 55-token doc) and measured ~2 ms/row; sort + one fold
-    is O(n) evals (~55) for the same integers."""
-    acc0 = F.struct(
-        F.lit(None).cast("string").alias("prev"),
-        F.lit(0).alias("run"),
-        F.lit(0).alias("mx"),
-        F.lit(0).alias("dup"),
-    )
-
-    def step(acc, e):
-        same = acc["prev"].isNotNull() & (e == acc["prev"])
-        closed_mx = F.greatest(acc["mx"], acc["run"])
-        closed_dup = acc["dup"] + F.when(acc["run"] > 1, acc["run"]).otherwise(
-            F.lit(0)
-        )
-        return F.struct(
-            e.alias("prev"),
-            F.when(same, acc["run"] + 1).otherwise(F.lit(1)).alias("run"),
-            F.when(same, acc["mx"]).otherwise(closed_mx).alias("mx"),
-            F.when(same, acc["dup"]).otherwise(closed_dup).alias("dup"),
-        )
-
-    def finish(acc):
-        return F.struct(
-            F.greatest(acc["mx"], acc["run"]).alias("mx"),
-            (
-                acc["dup"]
-                + F.when(acc["run"] > 1, acc["run"]).otherwise(F.lit(0))
-            ).alias("dup"),
-        )
-
-    return F.aggregate(F.array_sort(g), acc0, step, finish)
-
-
-def top_ngram_ratio(text: Column, n: int = 2) -> Column:
-    """Fraction of the document's n-gram instances taken by its single
-    most frequent n-gram (Gopher: high -> boilerplate/repetition).
-
-    The gram array binds ONCE as a lambda variable (HOF lambdas get no
-    CSE — inlining it re-tokenizes per element); frequency comes from
-    the linear run fold, not a distinct x filter scan (_run_fold).
-    The ratio is an exact int/int division, so the DuckDB oracle may
-    count frequencies any way it likes and still match."""
-
-    def ratio(g: Column) -> Column:
-        return F.when(
-            F.size(g) > 0,
-            P.rounded(_run_fold(g)["mx"].cast("double") / F.size(g)),
-        ).otherwise(F.lit(0.0))
-
-    return F.transform(F.array(ngrams(P.tokens(text), n)), ratio)[0]
-
-
 def top_ngram_ratio_sql(expr: str, n: int = 2) -> str:
+    """Fraction of the document's n-gram instances taken by its single
+    most frequent n-gram (Gopher: high -> boilerplate/repetition)."""
     toks = P.tokens_sql(expr)
     g = ngrams_sql(toks, n)
     freqs = "list_transform(list_distinct(g), x -> len(list_filter(g, y -> y = x)))"
@@ -426,24 +263,12 @@ _TRIPLE_RE = (
 )
 
 
-def joined_tokens(text: Column) -> Column:
-    """The P.tokens token list as ONE \\x1f-joined string, built by a
-    single linear regexp_replace — identical content to
+def joined_tokens_sql(text_sql: str) -> str:
+    """Spark SQL: the P.tokens token list as ONE \\x1f-joined string,
+    built by a single linear regexp_replace — identical content to
     ``array_join(P.tokens(text), TOKEN_SEP)`` (separator runs collapse
     to one \\x1f; btrim clears the leading/trailing separator that
     split turns into empty tokens) without materializing the array."""
-    return F.btrim(
-        F.regexp_replace(F.lower(text), P.TOKEN_SPLIT_RE, TOKEN_SEP),
-        F.lit(TOKEN_SEP),
-    )
-
-
-def _strip_first_token(s: Column) -> Column:
-    return F.regexp_replace(s, f"^[^{TOKEN_SEP}]+{TOKEN_SEP}", "")
-
-
-def joined_tokens_sql(text_sql: str) -> str:
-    """Spark-SQL string twin of ``joined_tokens`` (keep in lockstep)."""
     return (
         f"btrim(regexp_replace(lower({text_sql}),"
         f" '{P.TOKEN_SPLIT_RE}', '{TOKEN_SEP}'), '{TOKEN_SEP}')"
@@ -454,158 +279,17 @@ def _strip_first_token_sql(s: str) -> str:
     return f"regexp_replace({s}, '^[^{TOKEN_SEP}]+{TOKEN_SEP}', '')"
 
 
-def _eq_flags(g: Column) -> Column:
-    """``array<int>`` of length n-1 over the SORTED gram-hash array:
-    flags[i] = 1 iff sorted[i+1] == sorted[i]. The sort binds ONCE
-    behind a transform(array(...)) barrier — HOF lambdas get no CSE,
-    and an unbound sort inside a per-element lambda re-sorts per
-    element (measured 68 s vs 3 s at the x100 probe)."""
-    n = F.size(g)
-    return F.transform(
-        F.array(F.array_sort(g)),
-        lambda s: F.zip_with(
-            F.slice(s, 1, n - 1),
-            F.slice(s, 2, n - 1),
-            lambda a, b: (a == b).cast("int"),
-        ),
-    )[0]
-
-
-def _mx_from_flags(fl: Column) -> Column:
-    """Max gram frequency = 1 + the longest run of 1s in the
-    neighbor-equality flags. Arithmetic-only fold over a 2-int
-    accumulator: run' = (run+1)*f zeroes the run on every 0-flag, so
-    there is no When/null-prev branching per element."""
-    acc0 = F.struct(F.lit(0).alias("run"), F.lit(0).alias("mx"))
-
-    def step(acc, f):
-        run = (acc["run"] + 1) * f
-        return F.struct(
-            run.alias("run"), F.greatest(acc["mx"], run).alias("mx")
-        )
-
-    return 1 + F.aggregate(
-        fl, acc0, step, lambda acc: F.greatest(acc["mx"], acc["run"])
-    )
-
-
-def _dup_from_flags(fl: Column) -> Column:
-    """Duplicate-gram mass from the neighbor-equality flags: a maximal
-    run of k 1-flags is a run of k+1 equal grams, contributing k+1
-    instances. On each 0-flag the closing run pays run + min(run, 1)
-    (the +1 counts the run's first gram, only when a run existed)."""
-    acc0 = F.struct(F.lit(0).alias("run"), F.lit(0).alias("dup"))
-
-    def step(acc, f):
-        closed = acc["dup"] + (1 - f) * (
-            acc["run"] + F.least(acc["run"], F.lit(1))
-        )
-        return F.struct(
-            ((acc["run"] + 1) * f).alias("run"), closed.alias("dup")
-        )
-
-    return F.aggregate(
-        fl,
-        acc0,
-        step,
-        lambda acc: acc["dup"] + acc["run"] + F.least(acc["run"], F.lit(1)),
-    )
-
-
-def repetition_features(text: Column) -> Column:
-    """1-element ``array<struct<top_2gram_ratio, dup_3gram_ratio>>``
-    computing BOTH Gopher repetition signals — callers ``explode()``
-    it. Values are bit-identical to top_ngram_ratio(2) /
-    dup_ngram_ratio(3) (pinned by tests/test_pipeline_ops.py::test_repetition_features_matches_single_signal_fns).
-
-    Shape, chosen by measurement (all value-identical variants, A/B'd
-    interleaved in one session on the x100 probe corpus):
-    - tokens live as ONE joined string (joined_tokens: one linear
-      regexp_replace, no token-array alloc);
-    - n-grams come from CONSUMING regex passes at shifted token
-      offsets (2 passes for 2-grams, 3 for 3-grams, each linear and
-      non-overlapping; order doesn't matter because the stats sort) —
-      ~2.4x cheaper than the per-element element_at+concat_ws HOF
-      build, which was the dominant cost;
-    - each gram immediately becomes its xxhash64 LONG: the stats
-      depend only on gram equality classes, which hashing preserves
-      (a within-document 64-bit collision — ~1e4 grams/doc, p ~ 5e-12
-      per doc — is the only way values could differ from the string
-      form; the DuckDB oracle twin keeps counting true string grams,
-      so the driver hash gate continuously re-proves this);
-    - frequencies come from neighbor-equality FLAGS over the
-      once-sorted long array (_eq_flags) and arithmetic-only 2-int
-      folds (_mx_from_flags / _dup_from_flags) — 4.4x faster than the
-      previous string sort + (prev, run, acc) struct fold at x100
-      (12.7 s -> 2.9 s, 500k docs), because the interpreted
-      per-element step drops from 8 null-checking string-comparing
-      expressions to 2-3 int ops, and long sorts beat string sorts.
-    Rejected on measurement: per-char zero-width lookahead gram
-      extraction (~1.4x whole-query cost), run-finding via
-      backreference regex on an RS-joined sorted gram string
-      (array_join dominated), neighbor-flag folds over STRING arrays
-      (object-array slice/zip_with allocs dominated — flags only win
-      after the grams are hashed to longs), struct grams (struct sort
-      slower than string sort), pyspark.ml NGram (marginal),
-      explode+groupBy (2-4x slower, see ngrams note).
-    Each stage binds once as a lambda variable (HOF lambdas get no
-    CSE; a bare multi-use projection would re-run the tokenizer, and
-    an unbound array_sort inside a lambda re-sorts PER ELEMENT —
-    measured 68 s vs 3 s at x100)."""
-
-    def grams(s: Column) -> Column:
-        s1 = _strip_first_token(s)
-        g2 = F.concat(
-            F.regexp_extract_all(s, F.lit(_PAIR_RE), 0),
-            F.regexp_extract_all(s1, F.lit(_PAIR_RE), 0),
-        )
-        g3 = F.concat(
-            F.regexp_extract_all(s, F.lit(_TRIPLE_RE), 0),
-            F.regexp_extract_all(s1, F.lit(_TRIPLE_RE), 0),
-            F.regexp_extract_all(
-                _strip_first_token(_strip_first_token(s)), F.lit(_TRIPLE_RE), 0
-            ),
-        )
-        return F.struct(
-            F.transform(g2, lambda x: F.xxhash64(x)).alias("gt"),
-            F.transform(g3, lambda x: F.xxhash64(x)).alias("gd"),
-        )
-
-    def ratios(gs: Column) -> Column:
-        gt, gd = gs["gt"], gs["gd"]
-        top = F.when(
-            F.size(gt) > 0,
-            P.rounded(
-                _mx_from_flags(_eq_flags(gt)).cast("double") / F.size(gt)
-            ),
-        ).otherwise(F.lit(0.0))
-        dup = F.when(
-            F.size(gd) > 0,
-            P.rounded(
-                _dup_from_flags(_eq_flags(gd)).cast("double") / F.size(gd)
-            ),
-        ).otherwise(F.lit(0.0))
-        return F.struct(
-            top.alias("top_2gram_ratio"), dup.alias("dup_3gram_ratio")
-        )
-
-    return F.transform(
-        F.transform(F.array(joined_tokens(text)), grams), ratios
-    )
-
-
-def hashed_ngram_ids(text: Column, n: int) -> Column:
-    """``array<bigint>``: xxhash64 of every token n-gram of ``text``
-    (with multiplicity, arbitrary order). The gram strings are built
-    by n shifted CONSUMING regex passes over the joined-token string
-    (the repetition_features shape) and hashed immediately — callers
-    that only need gram EQUALITY (dedup blocking, decontamination
-    overlap counts, distinct-set sizes) get long-array semantics
-    for the whole downstream pipeline: long sorts/joins/group-bys
-    instead of multi-byte string ones, and no concat_ws allocation
-    per gram. Measured on the x100 probe corpus: the 5-gram shingle
-    explode+groupBy stage went 10.6 s -> 2.8 s vs the
-    concat_ws(slice) build.
+def hashed_ngram_ids_expr(text_sql: str, n: int) -> Column:
+    """``array<bigint>``: xxhash64 of every token n-gram of the SQL
+    column ``text_sql`` (with multiplicity, arbitrary order). The gram
+    strings come from n shifted CONSUMING regex passes over the
+    joined-token string (the repetition_features_expr shape) and are
+    hashed immediately — callers that only need gram EQUALITY (dedup
+    blocking, decontamination overlap counts, distinct-set sizes) get
+    long sorts/joins/group-bys instead of multi-byte string ones, and
+    no concat_ws allocation per gram. Measured on the x100 probe
+    corpus: the 5-gram shingle explode+groupBy stage went 10.6 s ->
+    2.8 s vs the concat_ws(slice) build.
 
     NOT value-interchangeable with string grams where the gram text
     surfaces (boilerplate reports) or feeds a pinned hash family
@@ -613,34 +297,10 @@ def hashed_ngram_ids(text: Column, n: int) -> Column:
     Within-corpus 64-bit collisions are the only way counts could
     differ from the string form (~2.6e-5 for 25M distinct shingles);
     the DuckDB oracle twins keep counting true string grams, so the
-    driver hash gate continuously re-proves the equivalence."""
-    pat = TOKEN_SEP.join([f"[^{TOKEN_SEP}]+"] * n)
-
-    def grams(s: Column) -> Column:
-        parts = [s]
-        cur = s
-        for _ in range(n - 1):
-            cur = _strip_first_token(cur)
-            parts.append(cur)
-        return F.concat(*[
-            F.transform(
-                F.regexp_extract_all(p, F.lit(pat), 0),
-                lambda x: F.xxhash64(x),
-            )
-            for p in parts
-        ])
-
-    return F.transform(F.array(joined_tokens(text)), grams)[0]
-
-
-def hashed_ngram_ids_expr(text_sql: str, n: int) -> Column:
-    """``hashed_ngram_ids`` over a SQL column reference, built as ONE
-    parsed expression string (r14 expr-string pattern — the Column form
-    costs ~60 ms of py4j lambda-HOF construction per plan build, paid
-    by every shingle consumer per execution). Same trees: n shifted
-    consuming regex passes over the joined-token string, each gram
-    hashed to xxhash64 immediately. Pinned sameSemantics-identical to
-    the Column form by tests/test_expr_parity.py."""
+    driver hash gate continuously re-proves the equivalence, and
+    tests/test_hashed_grams.py pins the multiset against
+    xxhash64(concat_ws(slice)). One parsed string: the Column form
+    cost ~60 ms of py4j lambda construction per plan build."""
     pat = TOKEN_SEP.join([f"[^{TOKEN_SEP}]+"] * n)
     parts = ["s"]
     for _ in range(n - 1):
@@ -656,13 +316,40 @@ def hashed_ngram_ids_expr(text_sql: str, n: int) -> Column:
 
 
 def repetition_features_expr(text_sql: str) -> Column:
-    """``repetition_features`` over a SQL column reference, as ONE
-    parsed expression string (r14): the Column form builds ~20 nested
-    lambda HOFs (~150 ms of py4j per plan build). Identical structure —
-    consuming-regex gram passes, xxhash64 gram ids, neighbor-equality
-    flags over the once-sorted array, arithmetic-only folds — pinned
-    sameSemantics-identical to the Column form by
-    tests/test_expr_parity.py::test_repetition_features_expr_parity."""
+    """1-element ``array<struct<top_2gram_ratio, dup_3gram_ratio>>``
+    over a SQL column reference computing BOTH Gopher repetition
+    signals — callers ``explode()`` it. Pinned row for row to
+    top_ngram_ratio_sql(2) / dup_ngram_ratio_sql(3) by
+    tests/test_pipeline_ops.py::test_repetition_features_matches_single_signal_fns.
+
+    Shape, chosen by measurement (all value-identical variants, A/B'd
+    interleaved in one session on the x100 probe corpus):
+    - tokens live as ONE joined string (joined_tokens_sql);
+    - n-grams come from CONSUMING regex passes at shifted token
+      offsets (2 passes for 2-grams, 3 for 3-grams, each linear and
+      non-overlapping; order doesn't matter because the stats sort) —
+      ~2.4x cheaper than a per-element element_at+concat_ws HOF build;
+    - each gram immediately becomes its xxhash64 LONG: the stats
+      depend only on gram equality classes, which hashing preserves
+      (a within-document 64-bit collision — ~1e4 grams/doc, p ~ 5e-12
+      per doc — is the only way values could differ from the string
+      form; the DuckDB twins count true string grams, so the driver
+      hash gate continuously re-proves this);
+    - frequencies come from neighbor-equality FLAGS over the
+      once-sorted long array and arithmetic-only 2-int folds — 4.4x
+      faster than a string sort + (prev, run, acc) struct fold at x100
+      (12.7 s -> 2.9 s, 500k docs): the interpreted per-element step
+      drops from 8 null-checking string compares to 2-3 int ops.
+    Rejected on measurement: per-char zero-width lookahead gram
+    extraction (~1.4x whole-query cost), run-finding via backreference
+    regex on an RS-joined sorted gram string (array_join dominated),
+    flag folds over STRING arrays (slice/zip_with allocs dominated),
+    struct grams (struct sort slower than string sort), pyspark.ml
+    NGram (marginal), explode+groupBy (2-4x slower).
+    Each stage binds once as a lambda variable (HOF lambdas get no
+    CSE; an unbound array_sort inside a lambda re-sorts PER ELEMENT —
+    measured 68 s vs 3 s at x100). One parsed string: the Column form
+    built ~20 nested lambda HOFs (~150 ms of py4j per plan build)."""
     s1 = _strip_first_token_sql("s")
     s2 = _strip_first_token_sql(s1)
     g2 = (
@@ -688,6 +375,8 @@ def repetition_features_expr(text_sql: str) -> Column:
             f" (a, b) -> CAST((a = b) AS INT)))[0]"
         )
 
+    # max gram frequency = 1 + the longest run of 1-flags; run' =
+    # (run+1)*f zeroes the run on every 0-flag without branching
     def mx_from_flags(fl: str) -> str:
         return (
             f"1 + aggregate({fl},"
@@ -697,6 +386,8 @@ def repetition_features_expr(text_sql: str) -> Column:
             f" acc -> greatest(acc.mx, acc.run))"
         )
 
+    # a maximal run of k 1-flags is k+1 equal grams: on each 0-flag
+    # the closing run pays run + min(run, 1)
     def dup_from_flags(fl: str) -> str:
         return (
             f"aggregate({fl},"
@@ -727,21 +418,9 @@ def repetition_features_expr(text_sql: str) -> Column:
     )
 
 
-def dup_ngram_ratio(text: Column, n: int = 3) -> Column:
-    """Fraction of n-gram instances whose n-gram occurs more than once
-    in the document (Gopher's duplicate-n-gram-fraction). Same
-    bind-once + linear-fold discipline as top_ngram_ratio."""
-
-    def ratio(g: Column) -> Column:
-        return F.when(
-            F.size(g) > 0,
-            P.rounded(_run_fold(g)["dup"].cast("double") / F.size(g)),
-        ).otherwise(F.lit(0.0))
-
-    return F.transform(F.array(ngrams(P.tokens(text), n)), ratio)[0]
-
-
 def dup_ngram_ratio_sql(expr: str, n: int = 3) -> str:
+    """Fraction of n-gram instances whose n-gram occurs more than once
+    in the document (Gopher's duplicate-n-gram-fraction)."""
     toks = P.tokens_sql(expr)
     g = ngrams_sql(toks, n)
     dup = (

@@ -149,7 +149,7 @@ def shingle_arrays(
     # predicate CONTAINING this expression and pushes it into the scan
     # ahead of the size guard — on a doc shorter than n tokens the
     # unguarded sequence(1, size-n+1) DESCENDS through 0 and slice
-    # throws START=0 (functions/text.ngrams documents the same trap)
+    # throws START=0 (Spark's sequence(1, 0) is [1, 0], not empty)
     grams = (
         f"CASE WHEN size(toks) >= {n} THEN"
         f" transform(sequence(1, size(toks) - {n - 1}),"
@@ -157,13 +157,6 @@ def shingle_arrays(
         f" ELSE array() END"
     )
     return toks.selectExpr("id", f"array_distinct({grams}) AS shs")
-
-
-def shingles(docs: DataFrame, id_col: str, text_col: str, n: int = SHINGLE_N) -> DataFrame:
-    """Distinct n-token shingles per doc: (id, sh), exploded tall."""
-    return shingle_arrays(docs, id_col, text_col, n).select(
-        "id", F.explode("shs").alias("sh")
-    )
 
 
 def md5_shingle_arrays(
@@ -207,10 +200,10 @@ def hashed_shingle_arrays(
 ) -> DataFrame:
     """(id, shs): each doc's distinct n-token shingle set as an
     ``array<bigint>`` of xxhash64 gram ids (functions.text.
-    hashed_ngram_ids). Same rows as shingle_arrays — docs shorter than
-    n tokens drop — but every downstream sort/join/group-by runs on
-    longs. Use ONLY where shingles are compared, never displayed or
-    fed to the md5 signature families (see hashed_ngram_ids)."""
+    hashed_ngram_ids_expr). Same rows as shingle_arrays — docs shorter
+    than n tokens drop — but every downstream sort/join/group-by runs
+    on longs. Use ONLY where shingles are compared, never displayed or
+    fed to the md5 signature families (see hashed_ngram_ids_expr)."""
     from ..functions import text as T
 
     g = T.hashed_ngram_ids_expr(f"`{text_col}`", n)
@@ -222,8 +215,8 @@ def hashed_shingle_arrays(
 def hashed_shingles(
     docs: DataFrame, id_col: str, text_col: str, n: int = SHINGLE_N
 ) -> DataFrame:
-    """Exploded (id, sh bigint) twin of ``shingles`` on hashed gram
-    ids — the equality-only fast path."""
+    """(id, sh bigint): ``hashed_shingle_arrays`` exploded tall — the
+    equality-only fast path."""
     return hashed_shingle_arrays(docs, id_col, text_col, n).select(
         "id", F.explode("shs").alias("sh")
     )
@@ -457,7 +450,7 @@ def exact_substring_spans(
 
     Scale shape: the window explode is linear in corpus tokens and the
     window id is hashed IN-ROW (xxhash64 over the joined tokens — the
-    hashed_ngram_ids trade: the oracle twin groups true window STRINGS,
+    hashed_ngram_ids_expr trade: the oracle twin groups true window STRINGS,
     so the driver hash gate continuously re-proves 64-bit collision
     innocence); the duplicate-hash aggregate is a bucketed map-side
     count; the join-back moves only 8-byte keys; and the island merge
@@ -528,7 +521,7 @@ def jaccard_dedup_pairs(
     Shingles here are xxhash64 gram ids, not strings: everything
     downstream (df count, rare filter, candidate expansion, jaccard
     verify) compares shingles for equality only, so the long-keyed
-    pipeline is value-identical (hashed_ngram_ids documents the
+    pipeline is value-identical (hashed_ngram_ids_expr documents the
     collision bound) and the shuffles carry 8-byte keys.
     """
     sharr = tracked_persist(hashed_shingle_arrays(docs, id_col, text_col))

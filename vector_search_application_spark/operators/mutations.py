@@ -95,11 +95,6 @@ def upsert(old: DataFrame, new: DataFrame, key: str) -> DataFrame:
     return new.unionByName(surviving_old)
 
 
-def delete_ids(df: DataFrame, ids: DataFrame, key: str) -> DataFrame:
-    """M2: delete-by-id-list as an anti join."""
-    return df.join(ids.select(key), key, "left_anti")
-
-
 def cleanup_old(old: DataFrame, new: DataFrame, key: str) -> DataFrame:
     """M3: rows present in the store but absent from the new load —
     the reference's scroll-all + set-difference loop collapsed to one

@@ -202,7 +202,7 @@ def q_boilerplate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # shingles never surface in the output (per-doc counts only) and
     # never feed a pinned hash family, so this is an equality-only
-    # pipeline: hashed gram ids (functions.text.hashed_ngram_ids) make
+    # pipeline: hashed gram ids (functions.text.hashed_ngram_ids_expr) make
     # the persisted table, the (source, sh) count, and the membership
     # join long-keyed, and the consuming-regex gram build avoids the
     # per-shingle slice+concat_ws allocation (no explode-below-guard
@@ -572,8 +572,8 @@ def q_source_data_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     Then one map-side-combinable rollup on source; every downstream
     cell derives from exact integer counts. The seeded text (a
     multi-KB concat) binds ONCE behind the explode barrier — inlined
-    into each of hash/quality/PII it re-concatenated per feature (HOF
-    CSE discipline, see functions/text.quality_features)."""
+    into each of hash/quality/PII it re-concatenated per feature (the
+    Generate-barrier discipline, see functions/text.quality_features_expr)."""
     from ..functions import text as T
     from .registry_pipeline import _EMAIL_RE, MIN_QUALITY
 
@@ -588,40 +588,30 @@ def q_source_data_card(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     ).otherwise(F.col("text"))
 
-    def build(t: F.Column) -> F.Column:
-        # the email regex only runs on rows containing '@' (an email
-        # REQUIRES one, so the gate is value-identical and the oracle
-        # needs no twin): measured at the x100 probe corpus the regex
-        # was the card's dominant cost — ~19-23 s ungated vs ~7 s
-        # gated, because Java regex backtracks at every position of
-        # every multi-KB document that can never match
-        has_pii = (
-            F.when(
-                F.contains(t, F.lit("@")),
-                F.regexp_count(t, F.lit(_EMAIL_RE)) > 0,
-            )
-            .otherwise(F.lit(False))
-        )
-        return F.struct(
-            F.sha2(t, 256).alias("h"),
-            (T.quality_score(t) >= MIN_QUALITY).cast("int").alias("q_pass"),
-            has_pii.cast("int").alias("has_pii"),
-        )
-
+    # the email regex only runs on rows containing '@' (an email
+    # REQUIRES one, so the gate is value-identical and the oracle needs
+    # no twin): measured at the x100 probe corpus the regex was the
+    # card's dominant cost — ~19-23 s ungated vs ~7 s gated, because
+    # Java regex backtracks at every position of every multi-KB
+    # document that can never match
+    t = F.col("t")
+    has_pii = F.when(
+        F.contains(t, F.lit("@")), F.regexp_count(t, F.lit(_EMAIL_RE)) > 0
+    ).otherwise(F.lit(False))
     featured = docs.select(
         "doc_id",
         "source",
         "lang",
         "n_chars",
-        F.explode(F.transform(F.array(text), build)).alias("cf"),
+        F.explode(F.array(text)).alias("t"),
     ).select(
         "doc_id",
         "source",
         "lang",
         "n_chars",
-        F.col("cf.h").alias("h"),
-        F.col("cf.q_pass").alias("q_pass"),
-        F.col("cf.has_pii").alias("has_pii"),
+        F.sha2(t, 256).alias("h"),
+        (T.quality_score_expr("t") >= MIN_QUALITY).cast("int").alias("q_pass"),
+        has_pii.cast("int").alias("has_pii"),
     )
     from pyspark.sql import Window
 

@@ -434,9 +434,9 @@ def q_quality_filter_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     -> low quality -> keep), first failing rule wins, reported as
     per-stage attrition counts — the dashboard number every corpus
     pipeline watches. The features come from the single-pass
-    quality_features struct (the tokenizer runs once per row, not once
-    per rule); then one map-side-combinable count. Nothing about this
-    plan changes at 100 TB."""
+    quality_features_expr struct (the tokenizer runs once per row, not
+    once per rule); then one map-side-combinable count. Nothing about
+    this plan changes at 100 TB."""
     from ..functions import text as T
 
     docs = corpus.docs(spark, sf_dir)

@@ -183,11 +183,12 @@ def q_text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     taken by the most frequent 2-gram, and the share of 3-gram
     instances whose 3-gram repeats — the filters that catch boilerplate
     and degenerate generations. Per-row expressions (map-only, zero
-    shuffles); functions/text.ngrams documents the explode+groupBy
-    alternative for book-length documents. Both signals come from ONE
-    joined-token string via repetition_features (consuming-regex gram
-    extraction + sorted-array folds; the function's docstring records
-    the measured variant matrix), with explode as the Generate barrier
+    shuffles); the repetition section of functions/text.py documents
+    the explode+groupBy alternative for book-length documents. Both
+    signals come from ONE joined-token string via
+    repetition_features_expr (consuming-regex gram extraction +
+    sorted-array folds; the function's docstring records the measured
+    variant matrix), with explode as the Generate barrier
     that keeps CollapseProject from re-inlining the shared work into
     each output column."""
     docs = corpus.docs(spark, sf_dir)
