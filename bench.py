@@ -55,7 +55,7 @@ HEADLINE = [
     "dedup_minhash_lsh",     # MinHash+LSH near-dup
     "dedup_ngram_jaccard",   # rare-shingle-blocked true Jaccard
     "dedup_simhash",         # per-row SimHash + pigeonhole band join
-    "dedup_components",      # pair clustering -> canonical (iterative)
+    "dedup_components",      # pair clustering -> canonical (min id)
     "embedding_neardup",     # embedding-cosine near-dup self-join
     "ivf_topk",              # IVF-pruned ANN (scale path)
     "ivf_topk_batch",        # batched IVF (per-query cell pruning)

@@ -5,6 +5,9 @@ same operators over the testdata corpora; these tests isolate the exact
 math on inputs the corpora may never produce.
 """
 
+import random
+
+import pytest
 from pyspark.sql import functions as F
 
 from vector_search_application_spark.operators import dedup, fusion
@@ -147,60 +150,128 @@ def test_paginate_bounded_window_and_guard(spark):
     assert [r["doc_id"] for r in kp.collect()] == [10, 11, 12, 13, 14]
 
 
-def test_connected_components_chain_star_singleton(spark):
-    """Min-label propagation must reach the transitive closure: a chain
-    (needs multiple iterations), a star, and untouched singletons."""
-    from vector_search_application_spark.operators import dedup
+def _union_find_labels(pairs, ids):
+    """Ground truth: union-find attaching the larger root under the
+    smaller, so every root is its component's minimum."""
+    parent = {i: i for i in ids}
 
-    # chain 1-2-3-4-5, star 10-(11,12,13), pair 20-21; 30/31 singletons
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (4, 5), (10, 11), (10, 12), (10, 13), (20, 21)],
-        ["id_a", "id_b"],
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {i: find(i) for i in ids}
+
+
+def _count_loops(monkeypatch):
+    """A list that grows by one per min_label_components call."""
+    loop, loops = dedup.min_label_components, []
+    monkeypatch.setattr(
+        dedup, "min_label_components", lambda *a, **k: loops.append(1) or loop(*a, **k)
     )
-    nodes = spark.createDataFrame(
-        [(i,) for i in [1, 2, 3, 4, 5, 10, 11, 12, 13, 20, 21, 30, 31]], ["id"]
-    )
-    got = {
-        r["id"]: r["canonical_id"]
-        for r in dedup.connected_components(pairs, nodes).collect()
-    }
-    assert got == {1: 1, 2: 1, 3: 1, 4: 1, 5: 1,
-                   10: 10, 11: 10, 12: 10, 13: 10,
-                   20: 20, 21: 20, 30: 30, 31: 31}
+    return loops
 
 
-def test_connected_components_double_step_parities(spark):
-    """The first propagation is read directly off the closed edge
-    list; the loop then propagates TWICE per convergence check and
-    detects the fixpoint on the second step alone. Chains of every
-    diameter from 1 to 8 — both parities, across three loop iterations
-    — must land on the exact min-label closure, including diameters
-    where the fixpoint is reached on the FIRST step of an iteration and
-    the second step must report no change rather than a phantom one."""
-    from vector_search_application_spark.operators import dedup
+def _chain(diameter, start=0):
+    return [(i, i + 1) for i in range(start, start + diameter)]
 
-    for n in range(2, 10):  # chain 0-1-...-n-1, diameter n-1
-        pairs = spark.createDataFrame(
-            [(i, i + 1) for i in range(n - 1)], ["id_a", "id_b"]
-        )
-        nodes = spark.createDataFrame([(i,) for i in range(n)], ["id"])
+
+def _components_graphs():
+    """(name, pairs, ids of nodes in no pair): a chain, a star, a pair
+    and singletons; chains of diameter 1 to 8 one by one (both
+    parities of the loop's two-propagations-per-check, across three
+    iterations, including diameters whose fixpoint is reached on the
+    first step of an iteration, where the second must report no
+    change); a seeded random graph plus a diameter-30 chain; no pairs."""
+    rng = random.Random(11)
+    base = list(range(60))
+    rand_pairs = [
+        (a, b)
+        for a, b in ((rng.choice(base), rng.choice(base)) for _ in range(40))
+        if a != b
+    ]
+    mixed = [(1, 2), (2, 3), (3, 4), (4, 5), (10, 11), (10, 12), (10, 13), (20, 21)]
+    return [
+        ("chain/star/pair", mixed, [30, 31]),
+        *[(f"chain of diameter {d}", _chain(d), []) for d in range(1, 9)],
+        ("random + diameter-30 chain", rand_pairs + _chain(30, 100), base),
+        ("no pairs", [], [1, 2, 3]),
+    ]
+
+
+@pytest.mark.parametrize("path", ["driver", "distributed"])
+def test_connected_components_matches_union_find(spark, monkeypatch, path):
+    """Both paths of connected_components give union-find's min-id
+    label to every node, once each, under the input's id type
+    (bigint, and int for the first graph). The driver path has no
+    iteration cap: a diameter-60 chain converges at the default
+    max_iters, where the loop refuses anything past 50 hops."""
+    loops = _count_loops(monkeypatch)
+    graphs = _components_graphs()
+    if path == "distributed":
+        # below any row count, so even the empty pair list takes the loop
+        monkeypatch.setattr(dedup, "CC_DRIVER_PAIRS", -1)
+    else:
+        graphs.append(("chain of diameter 60", _chain(60), []))
+    cases = [(*g, "bigint") for g in graphs] + [(*graphs[0], "int")]
+    for name, pairs, lone, id_type in cases:
+        ids = sorted({x for p in pairs for x in p} | set(lone))
+        pairs_df = spark.createDataFrame(pairs, "id_a bigint, id_b bigint")
+        nodes_df = spark.createDataFrame([(i,) for i in ids], "id bigint")
+        if id_type == "int":
+            pairs_df = pairs_df.selectExpr("int(id_a) AS id_a", "int(id_b) AS id_b")
+            nodes_df = nodes_df.selectExpr("int(id) AS id")
+        comps = dedup.connected_components(pairs_df, nodes_df)
+        schema = [(f.name, f.dataType.simpleString(), f.nullable) for f in comps.schema]
+        assert schema == [("id", id_type, True), ("canonical_id", id_type, True)], name
+        rows = comps.collect()
+        assert len(rows) == len(ids), name
+        want = _union_find_labels(pairs, ids)
+        assert {r.id: r.canonical_id for r in rows} == want, name
+    assert len(loops) == (len(cases) if path == "distributed" else 0)
+
+
+def test_connected_components_cap_boundary(spark, monkeypatch):
+    """A pair list of exactly CC_DRIVER_PAIRS rows is labelled on the
+    driver and one row more takes the distributed loop; on both sides
+    the pair pipeline runs once (an accumulator in a UDF inside the
+    pairs counts every row once)."""
+    loops = _count_loops(monkeypatch)
+    monkeypatch.setattr(dedup, "CC_DRIVER_PAIRS", 4)
+    seen = spark.sparkContext.accumulator(0)
+
+    def counted(x):
+        seen.add(1)
+        return x
+
+    count = F.udf(counted, "bigint").asNondeterministic()
+    for n_pairs, n_loops in ((4, 0), (5, 1)):
+        seen.value = 0
+        pairs = spark.createDataFrame(_chain(n_pairs), "id_a bigint, id_b bigint")
+        pairs = pairs.select(count("id_a").alias("id_a"), "id_b")
+        lone = n_pairs + 1
         got = {
-            r["id"]: r["canonical_id"]
-            for r in dedup.connected_components(pairs, nodes).collect()
+            r.id: r.canonical_id
+            for r in dedup.connected_components(pairs, spark.range(lone + 1)).collect()
         }
-        assert got == {i: 0 for i in range(n)}, f"chain of {n}"
+        assert got == {**{i: 0 for i in range(lone)}, lone: lone}
+        assert len(loops) == n_loops, n_pairs
+        assert seen.value == n_pairs
 
 
-def test_connected_components_refusal_boundary(spark):
-    """max_iters=k allows 1 + 2k propagations: a chain whose far end is
-    exactly 2k hops from the min converges to the full closure, and one
-    hop more raises — never partial labels."""
-    import pytest
+def test_connected_components_refusal_boundary(spark, monkeypatch):
+    """On the distributed path max_iters=k allows 1 + 2k propagations:
+    a chain whose far end is exactly 2k hops from the min converges to
+    the full closure, and one hop more raises — never partial labels."""
+    monkeypatch.setattr(dedup, "CC_DRIVER_PAIRS", 0)
 
     def chain(diameter):
-        pairs = spark.createDataFrame(
-            [(i, i + 1) for i in range(diameter)], ["id_a", "id_b"]
-        )
+        pairs = spark.createDataFrame(_chain(diameter), ["id_a", "id_b"])
         nodes = spark.createDataFrame([(i,) for i in range(diameter + 1)], ["id"])
         return pairs, nodes
 
@@ -292,56 +363,6 @@ def test_release_matches_memoized_twin_by_plan(spark):
     assert memoized() is not old
     assert not any(d is old for d in cache._LIVE)
     cache.release_all()
-
-
-def test_connected_components_star_matches_union_find(spark):
-    """Large-star/small-star must find exactly the union-find
-    components on random graphs PLUS a diameter-30 chain (which the
-    min-label variant refuses under its iteration cap)."""
-    import random
-
-    import pytest as _pytest
-
-    from vector_search_application_spark.operators import dedup
-
-    rng = random.Random(11)
-    base = list(range(60))
-    rand_pairs = [
-        (a, b)
-        for a, b in ((rng.choice(base), rng.choice(base)) for _ in range(40))
-        if a != b
-    ]
-    chain = [(i, i + 1) for i in range(100, 130)]  # diameter 30
-    all_pairs = rand_pairs + chain
-    all_ids = sorted(set(base) | {x for p in chain for x in p})
-
-    # union-find ground truth; attaching max root under min root makes
-    # every root the minimum of its component
-    parent = {i: i for i in all_ids}
-
-    def find(x):
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b in all_pairs:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-    want = {i: find(i) for i in all_ids}
-
-    pairs_df = spark.createDataFrame(all_pairs, ["id_a", "id_b"])
-    nodes_df = spark.createDataFrame([(i,) for i in all_ids], ["id"])
-    got = {
-        r["id"]: r["canonical_id"]
-        for r in dedup.connected_components_star(pairs_df, nodes_df).collect()
-    }
-    assert got == want
-
-    # the min-label variant refuses the same chain under a small cap
-    with _pytest.raises(RuntimeError, match="did not converge"):
-        dedup.connected_components(pairs_df, nodes_df, max_iters=5)
 
 
 def test_exact_cascade_batch_matches_single(spark):

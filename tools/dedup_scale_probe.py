@@ -401,8 +401,9 @@ because BUCKET COUNT, not plan shape, is the quadratic term:
    rate ~2.4e-15, zero expected false pairs below ~1e9 docs.
 2. **False-pair giant component.** Those ~260k random cross-replica
    edges over 600k nodes put the pair graph past the Erdos-Renyi
-   threshold; `dedup_components` star-contraction exceeded its
-   25-iteration cap on the giant component's diameter — the operator
+   threshold; the min-label loop behind `dedup_components` (the path
+   `connected_components` takes above `CC_DRIVER_PAIRS` pairs) exceeded
+   its 25-iteration cap on the giant component's diameter — the operator
    refused (by design) rather than returning split components. The
    64-bit fingerprint removes the random edges; components converge
    again.

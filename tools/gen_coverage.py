@@ -133,6 +133,9 @@ NOTES = {
     "path (read_targz_json, tests/test_sources.py)",
     "E1": "deterministic embedder declared; the real-model mapInPandas "
     "stage is tested in tests/test_embed_udf.py (Python workers)",
+    "dedup-components": "one operator, dedup.connected_components: a "
+    "driver union-find up to CC_DRIVER_PAIRS pairs, the min-label loop "
+    "above; dedup_components_star calls the loop directly",
 }
 
 

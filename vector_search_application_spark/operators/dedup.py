@@ -692,13 +692,14 @@ def closed_edges(
     pairs: DataFrame, id_a: str, id_b: str, src: str, dst: str
 ) -> DataFrame:
     """(src, dst): both directions of every pair plus a self-loop on
-    each endpoint — the closed-neighbourhood edge list the component
-    operators iterate over — generated in ONE pass over ``pairs`` (one
-    inline Generate), so an expensive candidate join upstream (banded
-    simhash, LSH buckets) is planned and executed once; a union of the
-    two directions would reference the pairs subtree twice. Repeated
-    rows (a pair listed twice, one self-loop per incident pair) are
-    kept: consumers take minima over them or filter them."""
+    each endpoint — the closed-neighbourhood edge list
+    min_label_components iterates over — generated in ONE pass over
+    ``pairs`` (one inline Generate), so an expensive candidate join
+    upstream (banded simhash, LSH buckets) is planned and executed
+    once; a union of the two directions would reference the pairs
+    subtree twice. Repeated rows (a pair listed twice, one self-loop
+    per incident pair) are kept: consumers take minima over them or
+    filter them."""
     a, b = F.col(id_a), F.col(id_b)
 
     def edge(s, d):
@@ -709,6 +710,26 @@ def closed_edges(
     )
 
 
+# Pair lists up to this many rows are labelled on the driver; longer
+# ones take the distributed min-label loop. Seconds to label 3-node
+# chains from pre-checkpointed pairs and force the output (4 vCPU,
+# local[4], best of 2; driver labels written back as 123L literals):
+#
+#   pairs     500   2,000  5,000  10,000  20,000  30,000  50,000
+#   driver    0.56  0.57   0.74   0.76    0.97    1.34    2.10
+#   min-label 1.33  1.32   1.11   0.80    0.88    0.84    1.38
+#
+# The loop's column is its best case, one iteration: every two more
+# hops of component diameter add an iteration, and the driver's cost
+# does not depend on the graph's shape. So the cap sits at the upper
+# end of the shallow break-even.
+CC_DRIVER_PAIRS = 20_000
+
+# SQL literal suffix per id type, so driver-side labels re-enter the
+# plan typed like the ids they label
+_ID_LITERAL_SUFFIX = {"int": "", "bigint": "L"}
+
+
 def connected_components(
     pairs: DataFrame,
     nodes: DataFrame,
@@ -716,10 +737,67 @@ def connected_components(
     id_b: str = "id_b",
     max_iters: int = 25,
 ) -> DataFrame:
-    """(id, canonical_id): cluster duplicate PAIRS into components and
-    elect the min id as each component's canonical representative —
-    the step a training pipeline runs after any pair-producing dedup
-    (keep rows where id = canonical_id; singletons map to themselves).
+    """(id, canonical_id) for every row of ``nodes``: cluster duplicate
+    PAIRS into components and elect the min id as each component's
+    canonical representative — the step a training pipeline runs after
+    any pair-producing dedup (keep rows where id = canonical_id;
+    singletons map to themselves).
+
+    The pair list is materialized once (an eager localCheckpoint —
+    ``pairs`` is usually an expensive candidate join), and at most
+    CC_DRIVER_PAIRS + 1 of its rows are read back. A graph that fits
+    is labelled on the driver by union-find with the min id as root:
+    any shape, no iteration cap, and only the non-root labels re-enter
+    the plan, as a local relation of typed literals left-joined onto
+    ``nodes``. A larger graph (or ids neither INT nor BIGINT) runs
+    min_label_components over the same checkpoint, which refuses
+    rather than return partial labels when some node is more than
+    2 * max_iters hops from its component min. Wherever the loop
+    converges the two paths give the same labels: the min-label
+    fixpoint is each component's min id."""
+    pairs = pairs.select(id_a, id_b).localCheckpoint(eager=True)
+    id_type = pairs.dtypes[0][1]
+    suffix = _ID_LITERAL_SUFFIX.get(id_type)
+    head = [] if suffix is None else pairs.limit(CC_DRIVER_PAIRS + 1).collect()
+    if suffix is None or len(head) > CC_DRIVER_PAIRS:
+        return min_label_components(pairs, nodes, id_a, id_b, max_iters)
+
+    parent: dict = {}  # non-root id -> an id nearer its root
+
+    def find(x):
+        root = x
+        while root in parent:
+            root = parent[root]
+        while x != root:
+            parent[x], x = root, parent[x]
+        return root
+
+    for a, b in head:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    moved = P.local_values(
+        pairs.sparkSession,
+        f"id {id_type}, canonical_id {id_type}",
+        [f"{x}{suffix}, {find(x)}{suffix}" for x in list(parent)],
+    )
+    return (
+        nodes.select("id")
+        .join(moved, "id", "left")
+        .select("id", F.coalesce("canonical_id", "id").alias("canonical_id"))
+    )
+
+
+def min_label_components(
+    pairs: DataFrame,
+    nodes: DataFrame,
+    id_a: str = "id_a",
+    id_b: str = "id_b",
+    max_iters: int = 25,
+) -> DataFrame:
+    """(id, canonical_id): connected_components' distributed path.
+    ``pairs`` must be materialized (a checkpoint): every propagation
+    and the singleton split read it.
 
     Min-label propagation: each propagation every node takes the min
     label over its closed neighbourhood (itself and its neighbours);
@@ -731,11 +809,7 @@ def connected_components(
     with D the largest distance from a node to its component min
     (at most the component diameter) the loop takes ceil(D / 2)
     iterations, 1 + 2 * ceil(D / 2) propagations, and the refusal
-    below fires when D > 2 * max_iters. Near-dup clusters are shallow
-    (pairs/stars/short chains), so this converges in a handful of
-    rounds even at corpus scale; for adversarially long chains
-    connected_components_star (O(log n) rounds) is the drop-in
-    upgrade.
+    below fires when D > 2 * max_iters.
 
     Scale shape per propagation: one key-join (edges ⋈ labels on src)
     + one groupBy(dst) that takes the new label as the min and the
@@ -748,13 +822,7 @@ def connected_components(
     table is the (typically tiny) duplicate-touched slice of the
     corpus; singletons are appended as their own canonical at the end.
     """
-    # materialize the edge list ONCE: `pairs` is usually the output of
-    # an expensive candidate join (banded simhash, LSH buckets) and is
-    # referenced by every propagation's join plus the singleton split —
-    # left as lineage it would recompute per propagation
-    edges = closed_edges(pairs, id_a, id_b, "src", "dst").localCheckpoint(
-        eager=True
-    )
+    edges = closed_edges(pairs, id_a, id_b, "src", "dst")
     singletons = (
         nodes.select("id")
         .join(edges.select(F.col("src").alias("id")), "id", "left_anti")
@@ -812,93 +880,6 @@ def connected_components(
     raise RuntimeError(
         f"connected_components did not converge in {max_iters} iterations "
         f"({1 + 2 * max_iters} propagations — some node is more than "
-        f"{2 * max_iters} hops from its component min); raise max_iters, "
-        "or use connected_components_star for adversarially long chains "
+        f"{2 * max_iters} hops from its component min); raise max_iters "
         "— returning partial labels would silently split components"
     )
-
-
-def connected_components_star(
-    pairs: DataFrame,
-    nodes: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    max_iters: int = 40,
-) -> DataFrame:
-    """(id, canonical_id) via alternating large-star/small-star
-    (Kiveris et al., "Connected Components in MapReduce and Beyond") —
-    the scale sibling of ``connected_components``: min-label
-    propagation needs DIAMETER rounds (fine for shallow dup clusters,
-    fatal on long chains), the star operations converge in
-    O(log n) rounds on ANY graph shape.
-
-    large-star: every node links its strictly-larger neighbors to the
-    minimum of its closed neighborhood; small-star: links its
-    smaller-or-equal neighbors there. Alternating the two contracts
-    every component to a star whose center is the component minimum.
-    Each operation is one groupBy(min) + explode — the same
-    key-partitioned shape per round as label propagation; edges are
-    localCheckpoint'ed per round (plans stay one-round deep).
-    Convergence = edge multiset stable (count + order-insensitive
-    hash), checked from the materialized result at no extra pass.
-    """
-    both = closed_edges(pairs, id_a, id_b, "u", "v")
-    edges = both.filter(F.col("u") != F.col("v")).distinct()
-    edges = edges.localCheckpoint(eager=True)
-    all_nodes = nodes.select("id")
-
-    def _large_star(e: DataFrame) -> DataFrame:
-        # group the CLOSED neighborhood of u (self-loop included);
-        # m = min(Γ(u) ∪ {u}); link every strictly-larger neighbor to m
-        nbrs = closed_edges(e, "u", "v", "u", "v")
-        m = nbrs.groupBy("u").agg(F.min("v").alias("m"))
-        return (
-            nbrs.join(m, "u")
-            .filter(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
-        )
-
-    def _small_star(e: DataFrame) -> DataFrame:
-        # orient every edge max -> min, group the SMALLER neighborhood;
-        # m = min(N⁻(u) ∪ {u}); link u and each smaller neighbor to m
-        oriented = e.select(
-            F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
-        )
-        m = oriented.groupBy("u").agg(F.min("v").alias("m"))  # all v < u
-        linked = (
-            oriented.join(m, "u")
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .unionByName(m.select("u", F.col("m").alias("v")))
-        )
-        return linked.filter(F.col("u") != F.col("v")).distinct()
-
-    def _sig(e: DataFrame):
-        row = e.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.bit_xor(F.xxhash64("u", "v")).alias("h"),
-        ).first()
-        return row["n"], row["h"]
-
-    sig = _sig(edges)
-    for _ in range(max_iters):
-        edges = _small_star(_large_star(edges))
-        # lazy: the _sig aggregate below materializes the checkpoint —
-        # one action per round instead of two (r13)
-        edges = edges.localCheckpoint(eager=False)
-        new_sig = _sig(edges)
-        if new_sig == sig:
-            break
-        sig = new_sig
-    else:
-        raise RuntimeError(
-            f"star contraction did not stabilize in {max_iters} rounds"
-        )
-    # stars: every remaining edge points a node at its component min
-    members = edges.select(F.col("u").alias("id"), F.col("v").alias("canonical_id"))
-    # star centers and singletons label themselves
-    centers = all_nodes.join(
-        members.select("id").distinct(), "id", "left_anti"
-    ).select("id", F.col("id").alias("canonical_id"))
-    return members.unionByName(centers)
