@@ -183,25 +183,20 @@ def _chain(diameter, start=0):
 
 def _components_graphs():
     """(name, pairs, ids of nodes in no pair): a chain, a star, a pair
-    and singletons; chains of diameter 1 to 8 one by one (both
-    parities of the loop's two-propagations-per-check, across three
-    iterations, including diameters whose fixpoint is reached on the
-    first step of an iteration, where the second must report no
-    change); a seeded random graph plus a diameter-30 chain; no pairs."""
-    rng = random.Random(11)
-    base = list(range(60))
-    rand_pairs = [
-        (a, b)
-        for a, b in ((rng.choice(base), rng.choice(base)) for _ in range(40))
-        if a != b
-    ]
+    and singletons; a chain of diameter 3; no pairs."""
     mixed = [(1, 2), (2, 3), (3, 4), (4, 5), (10, 11), (10, 12), (10, 13), (20, 21)]
     return [
         ("chain/star/pair", mixed, [30, 31]),
-        *[(f"chain of diameter {d}", _chain(d), []) for d in range(1, 9)],
-        ("random + diameter-30 chain", rand_pairs + _chain(30, 100), base),
+        ("chain of diameter 3", _chain(3), []),
         ("no pairs", [], [1, 2, 3]),
     ]
+
+
+def _labels(spark, pairs, ids, **kw):
+    pairs_df = spark.createDataFrame(pairs, "id_a bigint, id_b bigint")
+    nodes_df = spark.createDataFrame([(i,) for i in ids], "id bigint")
+    comps = dedup.connected_components(pairs_df, nodes_df, **kw)
+    return {r.id: r.canonical_id for r in comps.collect()}
 
 
 @pytest.mark.parametrize("path", ["driver", "distributed"])
@@ -234,6 +229,45 @@ def test_connected_components_matches_union_find(spark, monkeypatch, path):
         want = _union_find_labels(pairs, ids)
         assert {r.id: r.canonical_id for r in rows} == want, name
     assert len(loops) == (len(cases) if path == "distributed" else 0)
+
+
+def test_connected_components_double_step_parities(spark, monkeypatch):
+    """The distributed loop reads the first propagation directly off
+    the closed edge list, then propagates TWICE per convergence check
+    and detects the fixpoint on the second step alone. Chains of every
+    diameter from 1 to 8 — both parities, across three loop iterations
+    — must land on the exact min-label closure, including diameters
+    where the fixpoint is reached on the FIRST step of an iteration and
+    the second step must report no change rather than a phantom one."""
+    loops = _count_loops(monkeypatch)
+    monkeypatch.setattr(dedup, "CC_DRIVER_PAIRS", 0)
+    for d in range(1, 9):
+        got = _labels(spark, _chain(d), range(d + 1))
+        assert got == {i: 0 for i in range(d + 1)}, f"chain of diameter {d}"
+    assert len(loops) == 8
+
+
+def test_connected_components_star_matches_union_find(spark, monkeypatch):
+    """A seeded random graph plus a diameter-30 chain gets exactly the
+    union-find components on the driver path and on the distributed
+    loop at its default cap; the loop refuses the same graph under
+    max_iters=5 rather than return partial labels."""
+    rng = random.Random(11)
+    base = list(range(60))
+    rand_pairs = [
+        (a, b)
+        for a, b in ((rng.choice(base), rng.choice(base)) for _ in range(40))
+        if a != b
+    ]
+    pairs = rand_pairs + _chain(30, 100)
+    ids = sorted(set(base) | {x for p in pairs for x in p})
+    want = _union_find_labels(pairs, ids)
+    assert _labels(spark, pairs, ids) == want
+
+    monkeypatch.setattr(dedup, "CC_DRIVER_PAIRS", 0)
+    assert _labels(spark, pairs, ids) == want
+    with pytest.raises(RuntimeError, match="did not converge"):
+        _labels(spark, pairs, ids, max_iters=5)
 
 
 def test_connected_components_cap_boundary(spark, monkeypatch):
