@@ -275,7 +275,7 @@ def bench_batch_throughput(spark, sf_dir: str) -> tuple[dict, dict]:
     docs = corpus.docs(spark, sf_dir)
     bm25_queries = docs.filter(F.col("doc_id") < n_bm25).select(
         F.col("doc_id").alias("query_id"),
-        F.concat_ws(" ", F.slice(P.tokens(F.col("text")), 1, 8)).alias("qtext"),
+        F.expr(f"concat_ws(' ', slice({P.tokens_spark_sql('text')}, 1, 8)) AS qtext"),
     )
     postings = bm25.build_postings(docs, id_col="doc_id", text_col="text")
     bm25_res = topk_ops.topk_per_group(
@@ -307,8 +307,9 @@ def bench_batch_throughput(spark, sf_dir: str) -> tuple[dict, dict]:
             bm25.query_terms_batch(
                 docs.filter(F.col("doc_id") < n_hybrid).select(
                     F.col("doc_id").alias("query_id"),
-                    F.concat_ws(" ", F.slice(P.tokens(F.col("text")), 1, 8)).alias(
-                        "qtext"
+                    F.expr(
+                        f"concat_ws(' ', slice({P.tokens_spark_sql('text')}, 1, 8))"
+                        " AS qtext"
                     ),
                 )
             ),
@@ -348,9 +349,9 @@ def bench_batch_throughput(spark, sf_dir: str) -> tuple[dict, dict]:
         prods, fusion_qs, "partNumber_airgas_text", "manufacturerPartNumber_text"
     ).select("query_id", "id", "score", F.lit("exact").alias("search_type"))
     prod_postings = bm25.build_postings(prods, id_col="id", text_col="sparse_text")
-    fusion_qterms = part.filter(F.col("p_partkey") < n_fusion).select(
-        F.col("p_partkey").alias("query_id"),
-        F.explode(F.array_distinct(P.tokens(F.col("p_name")))).alias("term"),
+    fusion_qterms = part.filter(F.col("p_partkey") < n_fusion).selectExpr(
+        "p_partkey AS query_id",
+        f"explode(array_distinct({P.tokens_spark_sql('p_name')})) AS term",
     )
     ranked_br = topk_ops.topk_per_group(
         bm25.bm25_score_terms_batch(prod_postings, fusion_qterms),

@@ -167,7 +167,7 @@ def test_banded_lsh_pair_recall_beats_single_table(spark):
         .select(
             "id_a",
             "id_b",
-            P.rounded(P.cosine(F.col("va"), F.col("vb"))).alias("cos"),
+            P.rounded(F.expr(P.cosine_spark_sql("va", "vb"))).alias("cos"),
         )
         .filter(F.col("cos") >= NEARDUP_COSINE_THRESHOLD)
         .collect()
@@ -480,7 +480,7 @@ def test_banded_lsh_boundary_recall(spark):
         for r in a.join(b, F.col("id_b") == F.col("id_a") + 100_000)
         .select(
             "id_a", "id_b",
-            P.rounded(P.cosine(F.col("va"), F.col("vb"))).alias("c"),
+            P.rounded(F.expr(P.cosine_spark_sql("va", "vb"))).alias("c"),
         )
         .filter(F.col("c") >= NEARDUP_COSINE_THRESHOLD)
         .collect()
@@ -655,7 +655,7 @@ def _mog_recalls(spark, vecs, getter, qids):
             vecs.crossJoin(q)
             .select(
                 F.col("vec_id").alias("id"),
-                P.rounded(P.cosine(F.col("embedding"), F.col("qvec"))).alias(
+                P.rounded(F.expr(P.cosine_spark_sql("embedding", "qvec"))).alias(
                     "score"
                 ),
             )
@@ -762,7 +762,7 @@ def test_ivf_kmeans_clustered_recall(spark):
             vecs.crossJoin(q)
             .select(
                 F.col("vec_id").alias("id"),
-                P.rounded(P.cosine(F.col("embedding"), F.col("qvec"))).alias(
+                P.rounded(F.expr(P.cosine_spark_sql("embedding", "qvec"))).alias(
                     "score"
                 ),
             )

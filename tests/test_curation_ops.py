@@ -24,7 +24,7 @@ def test_chunks_reconstruct_documents(spark):
     orig = {
         r.doc_id: r.toks
         for r in docs.select(
-            "doc_id", P.tokens(F.col("text")).alias("toks")
+            "doc_id", F.expr(P.tokens_spark_sql("text")).alias("toks")
         ).collect()
     }
     rows = RC.q_doc_chunk_windows(spark, SF_SMOKE).collect()

@@ -62,7 +62,7 @@ def test_hashed_ngram_ids_match_string_gram_hashes(spark, edge_docs, n):
         f" ELSE array()::array<bigint> END"
     )
     base = edge_docs.select(
-        "doc_id", F.col("text"), P.tokens(F.col("text")).alias("toks")
+        "doc_id", F.col("text"), F.expr(P.tokens_spark_sql("text")).alias("toks")
     )
     got = base.select(
         "doc_id",

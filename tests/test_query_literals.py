@@ -52,21 +52,28 @@ EDGE_TEXTS = [
 ]
 
 
-def test_tokens_py_parity(spark):
-    row = spark.range(1).select(
-        *[P.tokens(F.lit(t)).alias(f"c{i}") for i, t in enumerate(EDGE_TEXTS)]
-    ).first()
-    for i, t in enumerate(EDGE_TEXTS):
-        assert P.tokens_py(t) == row[f"c{i}"], repr(t)
-
-
-def test_hash_embed_py_parity(spark):
-    docs = spark.range(len(EDGE_TEXTS)).select(
+def _edge_docs(spark):
+    """(id, t): EDGE_TEXTS as a DataFrame column, id = list position."""
+    return spark.range(len(EDGE_TEXTS)).select(
         "id",
         F.element_at(
             F.array(*[F.lit(t) for t in EDGE_TEXTS]), (F.col("id") + 1).cast("int")
         ).alias("t"),
     )
+
+
+def test_tokens_py_parity(spark):
+    rows = _edge_docs(spark).selectExpr(
+        "id", f"{P.tokens_spark_sql('t')} AS toks"
+    ).collect()
+    assert len(rows) == len(EDGE_TEXTS)
+    for r in rows:
+        t = EDGE_TEXTS[r["id"]]
+        assert P.tokens_py(t) == r["toks"], repr(t)
+
+
+def test_hash_embed_py_parity(spark):
+    docs = _edge_docs(spark)
     jvm: dict = {}
     for r in E.embed_postings(docs, "id", "t").collect():
         jvm.setdefault(r["id"], {})[r["dim"]] = r["comp"]
@@ -86,9 +93,10 @@ def _range_embed_query_postings(spark, text: str):
 
 
 def _range_query_terms(spark, text: str):
-    """The spark.range form query_terms replaced, verbatim."""
-    return spark.range(1).select(
-        F.explode(F.array_distinct(P.tokens(F.lit(text)))).alias("term")
+    """The spark.range form query_terms replaced, with the tokenizer in
+    its string form: the text enters as a column, not a SQL literal."""
+    return spark.range(1).select(F.lit(text).alias("t")).selectExpr(
+        f"explode(array_distinct({P.tokens_spark_sql('t')})) AS term"
     )
 
 
@@ -169,11 +177,49 @@ def test_read_builders_run_no_jobs(spark):
     assert built["dense"].count() == 5 and built["sparse"].count() > 0
 
 
-def test_indexed_lookup_bucket_ids_run_no_jobs(spark):
+def test_indexed_lookup_bucket_ids_run_no_jobs(spark, tmp_path):
     """The persisted layout's single-query probe collects its bucket
-    ids from a projection of the local term relation: no job. Reading
-    the layout itself may still list its bucket directories in a job."""
+    ids from a projection of the local term relation, and builds its
+    slice from the probed bucket directories alone: neither runs a job,
+    though the layout has more bucket directories than Spark lists on
+    the driver. The slice holds exactly the probed buckets' rows; a
+    probe that hits no written bucket gives the empty slice with the
+    layout's schema."""
+    n_buckets = bm25.BM25_N_TERM_BUCKETS
     qterms = bm25.query_terms(spark, "wireless audio speaker")
-    ids = bm25._term_buckets(qterms, bm25.BM25_N_TERM_BUCKETS)
+    ids = bm25._term_buckets(qterms, n_buckets)
     assert _jobs(spark, ids.collect) == []
-    assert len(ids.collect()) == 3
+    buckets = sorted(r["b"] for r in ids.collect())
+    assert len(buckets) == 3
+
+    docs = spark.range(300).selectExpr(
+        "id AS doc_id", "concat('wireless audio speaker w', id, ' t', id % 40) AS text"
+    )
+    path = str(tmp_path / "postings")
+    bm25.write_bm25_indexed(docs, path)
+    _, _, schema = bm25._read_bm25_index(spark, path)
+    built = {}
+
+    def probe():
+        built["slice"] = bm25._probed_postings(spark, path, ids, schema)
+
+    assert _jobs(spark, probe) == []
+    want = (
+        spark.read.parquet(path)
+        .filter(F.col(bm25.TERM_BUCKET_COL).isin(buckets))
+        .drop(bm25.TERM_BUCKET_COL)
+    )
+    assert built["slice"].schema == want.schema
+    assert sorted(built["slice"].collect()) == sorted(want.collect())
+    assert {r["term"] for r in built["slice"].collect()} >= {
+        "wireless", "audio", "speaker"
+    }
+
+    one = spark.range(3).selectExpr("id AS doc_id", "'hex' AS text")
+    small = str(tmp_path / "one_term")
+    bm25.write_bm25_indexed(one, small)
+    hex_ids = bm25._term_buckets(bm25.query_terms(spark, "hex"), n_buckets)
+    assert hex_ids.first()["b"] not in buckets
+    empty = bm25._probed_postings(spark, small, ids, schema)
+    assert empty.schema == want.schema
+    assert empty.collect() == []

@@ -2,6 +2,7 @@
 checkpoint-based resume across separate runs."""
 
 import os
+import re
 
 from pyspark.sql import functions as F
 
@@ -630,6 +631,31 @@ def test_stream_neardup_ingest_matches_global_rule(spark, tmp_path):
     # even though its only partner was itself dropped
     assert 1 in settled and 30 not in settled
     assert (60 in settled) == (60 not in dropped)
+
+
+def test_stream_neardup_ingest_reads_listed_epochs(spark, tmp_path):
+    """The settled table is read from its listed epoch directories: no
+    glob reaches the reader, whose streaming-metadata probe would take
+    it as a file name and log a FileNotFoundException."""
+    from vector_search_application_spark.streaming.ingest import (
+        stream_neardup_ingest,
+    )
+
+    sf = tmp_path / "listed_sf"
+    os.makedirs(sf)
+    spark.sql(
+        "SELECT CAST(id AS BIGINT) AS doc_id,"
+        " concat('plain words about topic ', id, ' and more ', id) AS text"
+        " FROM range(1, 30)"
+    ).write.parquet(str(sf / "documents.parquet"))
+    got = stream_neardup_ingest(spark, str(sf))
+    leaves = got._jdf.queryExecution().analyzed().collectLeaves()
+    reads = [leaves.apply(i).relation() for i in range(leaves.size())]
+    assert reads
+    for rel in reads:
+        paths = rel.location().rootPaths().toString() + rel.options().toString()
+        assert not re.search(r"[*?\[{]", paths), paths
+    assert got.count() > 0
 
 
 def test_stream_neardup_ingest_empty_source(spark, tmp_path):

@@ -15,9 +15,12 @@ from vector_search_application_spark.functions import text as T
 def test_spark_text_features_match_duckdb_twins(text_twins):
     text = F.col("text")
     assert text_twins({
-        "tokens": (P.tokens(text), P.tokens_sql("text")),
+        "tokens": (F.expr(P.tokens_spark_sql("text")), P.tokens_sql("text")),
         "ws_tokens": (T.ws_token_count(text), T.ws_token_count_sql("text")),
         "re_tokens": (T.re_token_count(text), T.re_token_count_sql("text")),
+        "stopword_ratio": (
+            T.stopword_ratio_expr("text"), T.stopword_ratio_sql("text")
+        ),
         **quality_twin_pairs(),
         **repetition_twin_pairs(),
     }) == []

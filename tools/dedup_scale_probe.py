@@ -119,7 +119,7 @@ def measure_lsh_recall(spark) -> dict[str, float]:
             (r.id_a, r.id_b)
             for r in joined.select(
                 "id_a", "id_b",
-                P.rounded(P.cosine(F.col("va"), F.col("vb"))).alias("c"),
+                P.rounded(F.expr(P.cosine_spark_sql("va", "vb"))).alias("c"),
             ).filter(F.col("c") >= NEARDUP_COSINE_THRESHOLD).collect()
         }
 

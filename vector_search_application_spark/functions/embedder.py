@@ -131,9 +131,8 @@ def embed_postings(
     # groupBy treats every NULL-id doc as ONE group, pooling their
     # tokens into a phantom dense-index entry that can outrank real
     # top-k rows and joins to no document
-    toks = docs.filter(F.col(id_col).isNotNull()).select(
-        F.col(id_col).alias("id"),
-        F.explode(P.tokens(F.col(text_col))).alias("term"),
+    toks = docs.filter(F.col(id_col).isNotNull()).selectExpr(
+        f"`{id_col}` AS id", f"explode({P.tokens_spark_sql(f'`{text_col}`')}) AS term"
     )
     h = P.md5_long(F.col("term"))
     contrib = toks.select("id", hash_dim(h, dim).alias("dim"), hash_sign(h).alias("sign"))

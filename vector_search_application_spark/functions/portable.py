@@ -1,12 +1,19 @@
-"""Portable deterministic primitives: paired Spark-Column and DuckDB-SQL
-builders.
+"""Portable deterministic primitives: one Spark form and one DuckDB-SQL
+twin of each.
 
 The driver's correctness gate runs every declared query in BOTH engines
 and hash-compares values, so each deterministic function here has two
 implementations generated from the same constants:
 
-  ``foo(col)``      -> pyspark Column expression (JVM-side, codegen'd)
-  ``foo_sql(expr)`` -> DuckDB SQL fragment computing the identical value
+  ``foo_spark_sql(expr)`` -> Spark SQL fragment, for ``selectExpr`` /
+                             ``F.expr`` (one parse instead of a py4j
+                             round-trip per Column node)
+  ``foo_sql(expr)``       -> DuckDB SQL fragment computing the identical
+                             value
+
+``md5_long`` and ``rounded``, a few JVM calls each, stay Column
+builders beside their ``*_sql`` twins. Driver-side values have Python
+twins (``tokens_py``, ``round_half_up``), each pinned to the JVM form.
 
 Conventions that make the hashes match:
   - every float that reaches an output is ``round(x, ROUND_DIGITS)``
@@ -59,34 +66,15 @@ def md5_long_sql(expr: str, seed: str = "") -> str:
 # tokenizer
 # ---------------------------------------------------------------------------
 
-def tokens(col: Column) -> Column:
-    """array<string> of non-empty lowercase tokens.
-
-    Implemented as a DIRECT regex split + array_remove — the same
-    shape as the DuckDB twin (string_split_regex + list_filter).
-    Two rejected alternatives, both measured on the x100 probe corpus:
-    a higher-order-function filter (interpreted per element, ~3x
-    slower) and the earlier regexp_replace-collapse + trim + split
-    (value-identical, but the replace pass REWRITES every multi-KB
-    string before splitting — ~10% slower warm and ~5x slower on the
-    cold JIT path). Splitting on [^a-z0-9]+ yields empty strings only
-    at a leading/trailing separator run, which array_remove clears,
-    so the token list is identical across all three forms (edge cases
-    pinned in the tokenizer A/B: empty, all-separator, unicode,
-    newline/tab).
-    """
-    return F.array_remove(F.split(F.lower(col), TOKEN_SPLIT_RE), "")
-
-
 _TOKEN_RE = re.compile("[a-z0-9]+")
 
 
 def tokens_py(text: str) -> list[str]:
-    """Python twin of ``tokens`` for driver-side values (query terms,
-    query embeddings): the non-empty [a-z0-9] runs of the lowercased
-    text are exactly what splitting on [^a-z0-9]+ and dropping the
-    empty strings leaves. Pinned against the JVM form over an edge
-    corpus (tests/test_query_literals.py::test_tokens_py_parity)."""
+    """Python twin of ``tokens_spark_sql`` for driver-side values
+    (query terms, query embeddings): the non-empty [a-z0-9] runs of the
+    lowercased text are exactly what splitting on [^a-z0-9]+ and
+    dropping the empty strings leaves. Pinned against the JVM form over
+    an edge corpus (tests/test_query_literals.py::test_tokens_py_parity)."""
     return _TOKEN_RE.findall(text.lower())
 
 
@@ -109,16 +97,21 @@ def tokens_sql(expr: str) -> str:
 
 
 def tokens_spark_sql(expr: str) -> str:
-    """Spark-SQL string form of ``tokens`` — the identical
-    array_remove(split(lower(..))) expression as ONE parsed string, for
-    builders that assemble plans as SQL text (the r13 expr-string
-    pattern: each Column call is a py4j round-trip; one parsed string
-    is one). Keep in lockstep with ``tokens``."""
+    """array<string> of non-empty lowercase tokens of the SQL
+    expression ``expr`` — the only Spark form of the tokenizer.
+
+    A DIRECT regex split + array_remove, the same shape as the DuckDB
+    twin (string_split_regex + list_filter). Two rejected alternatives,
+    both measured on the x100 probe corpus: a higher-order-function
+    filter (interpreted per element, ~3x slower) and the earlier
+    regexp_replace-collapse + trim + split (value-identical, but the
+    replace pass REWRITES every multi-KB string before splitting — ~10%
+    slower warm and ~5x slower on the cold JIT path). Splitting on
+    [^a-z0-9]+ yields empty strings only at a leading/trailing
+    separator run, which array_remove clears, so the token list is
+    identical across all three forms (edge cases pinned in the
+    tokenizer A/B: empty, all-separator, unicode, newline/tab)."""
     return f"array_remove(split(lower({expr}), '{TOKEN_SPLIT_RE}'), '')"
-
-
-def token_count(col: Column) -> Column:
-    return F.size(tokens(col))
 
 
 def token_count_sql(expr: str) -> str:
@@ -128,24 +121,17 @@ def token_count_sql(expr: str) -> str:
 # ---------------------------------------------------------------------------
 # vector math (arrays accumulated in DOUBLE on both sides)
 # ---------------------------------------------------------------------------
-
-def dot(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
+# The Spark forms are parsed SQL strings: the zip_with/aggregate lambda
+# trees cost ~80 ms of py4j construction per cosine as Columns.
 
 def dot_sql(a: str, b: str) -> str:
     return f"list_dot_product(({a})::DOUBLE[], ({b})::DOUBLE[])"
 
 
 def dot_spark_sql(a: str, b: str) -> str:
-    """Spark-SQL string form of ``dot`` — same zip_with double products
-    and left-assoc accumulation, for builders that assemble plans as
-    parsed SQL (operators/ann.py literal-vector paths). Keep in lockstep
-    with ``dot``; parity breaks silently otherwise."""
+    """Dot product of two array expressions: zip_with double products,
+    accumulated left-assoc from 0.0 (the IEEE order the Python twins in
+    operators/ann.py replicate)."""
     return (
         f"aggregate(zip_with({a}, {b},"
         " (x, y) -> cast(x as double) * cast(y as double)),"
@@ -153,20 +139,12 @@ def dot_spark_sql(a: str, b: str) -> str:
     )
 
 
-def norm(a: Column) -> Column:
-    return F.sqrt(dot(a, a))
-
-
 def norm_sql(a: str) -> str:
     return f"sqrt({dot_sql(a, a)})"
 
 
-def cosine(a: Column, b: Column) -> Column:
-    """Cosine similarity; zero-norm inputs score 0.0 (the reference's
-    zero-vector embedding-failure fallback, app/services/search_service.py:136).
-    """
-    denom = norm(a) * norm(b)
-    return F.when(denom > F.lit(0.0), dot(a, b) / denom).otherwise(F.lit(0.0))
+def norm_spark_sql(a: str) -> str:
+    return f"sqrt({dot_spark_sql(a, a)})"
 
 
 def cosine_sql(a: str, b: str) -> str:
@@ -175,16 +153,23 @@ def cosine_sql(a: str, b: str) -> str:
     )
 
 
-def cosine_spark_sql(a: str, b: str) -> str:
-    """Spark-SQL string form of ``cosine`` — the same dot/norm
-    expression trees (dot_spark_sql) under the same zero-denominator
-    CASE, as one parsed string (the Column form costs ~80 ms of py4j
-    lambda construction per call). Keep in lockstep with ``cosine``;
-    parity breaks silently otherwise."""
-    denom = f"sqrt({dot_spark_sql(a, a)}) * sqrt({dot_spark_sql(b, b)})"
-    return (
-        f"CASE WHEN {denom} > 0.0D THEN ({dot_spark_sql(a, b)}) / ({denom})"
-        f" ELSE 0.0D END"
+def cosine_case_spark_sql(dot: str, na: str, nb: str) -> str:
+    """dot / (na * nb), and 0.0 where that denominator is not positive:
+    the reference's zero-vector embedding-failure fallback
+    (app/services/search_service.py:136). The one spelling of that
+    CASE; every Spark cosine goes through it."""
+    denom = f"({na}) * ({nb})"
+    return f"CASE WHEN {denom} > 0.0D THEN ({dot}) / ({denom}) ELSE 0.0D END"
+
+
+def cosine_spark_sql(a: str, b: str, na: str | None = None, nb: str | None = None) -> str:
+    """Cosine similarity of two array expressions. ``na`` / ``nb`` are
+    expressions holding norms the caller bound once (a column, a lambda
+    variable, a literal); by default each norm is recomputed inline."""
+    return cosine_case_spark_sql(
+        dot_spark_sql(a, b),
+        norm_spark_sql(a) if na is None else na,
+        norm_spark_sql(b) if nb is None else nb,
     )
 
 

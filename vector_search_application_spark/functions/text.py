@@ -5,10 +5,11 @@ Beyond-the-reference surface (the reference has no text analytics);
 first-class declared queries in registry_text. Each feature has ONE
 Spark form and one DuckDB twin (``*_sql``) for the oracle. The Spark
 form is a Column builder where the feature is a few JVM calls
-(stopword_ratio, ws_token_count, re_token_count, bpe_tokens) and one
+(ws_strip_upper, ws_token_count, re_token_count, bpe_tokens) and one
 parsed expression string (``*_expr``) where it is a tree of lambda
-HOFs, whose Column form cost ~150 py4j round-trips per plan build.
-Both kinds run map-side inside the scan with zero shuffles. The
+HOFs, whose Column form cost ~150 py4j round-trips per plan build; the
+token arrays inside them come from portable.tokens_spark_sql. Both
+kinds run map-side inside the scan with zero shuffles. The
 token-count, quality and repetition pairs are pinned row for row over
 the sf0.001 documents plus an edge corpus (tests/test_text_twins.py).
 """
@@ -70,13 +71,18 @@ def ws_strip_upper(col: Column) -> Column:
 RE_TOKEN_PAT = f"[a-z]+|[0-9]+|[^a-z0-9{WS_CLASS}]"
 
 
-def stopword_ratio(text: Column) -> Column:
-    toks = P.tokens(text)
-    sw = F.array(*[F.lit(w) for w in STOPWORDS])
-    n_sw = F.size(F.filter(toks, lambda t: F.array_contains(sw, t)))
-    return F.when(F.size(toks) > 0, n_sw.cast("double") / F.size(toks)).otherwise(
-        F.lit(0.0)
-    )
+def _stopword_ratio_spark_sql(toks: str) -> str:
+    """Spark SQL: the stopword share of the token array ``toks``, 0.0
+    for no tokens. Shared by stopword_ratio_expr and the bound token
+    array of quality_features_expr."""
+    sw = "array(" + ", ".join(f"'{w}'" for w in STOPWORDS) + ")"
+    n = f"size({toks})"
+    n_sw = f"size(filter({toks}, t -> array_contains({sw}, t)))"
+    return f"CASE WHEN {n} > 0 THEN CAST({n_sw} AS DOUBLE) / {n} ELSE 0.0D END"
+
+
+def stopword_ratio_expr(text_sql: str) -> Column:
+    return F.expr(_stopword_ratio_spark_sql(P.tokens_spark_sql(text_sql)))
 
 
 def stopword_ratio_sql(expr: str) -> str:
@@ -157,8 +163,6 @@ def quality_features_expr(text_sql: str) -> Column:
     (punct_ratio_sql, uniq_token_ratio_sql, quality_score_sql,
     token_count_sql, stopword_ratio_sql) by
     tests/test_curation_ops.py::test_quality_features_expr_parity."""
-    sw = "array(" + ", ".join(f"'{w}'" for w in STOPWORDS) + ")"
-    toks = f"array_remove(split(lower({text_sql}), '{P.TOKEN_SPLIT_RE}'), '')"
     kept = (
         f"(length(lower({text_sql}))"
         f" - length(translate(lower({text_sql}), '{PUNCT_KEEP}', '')))"
@@ -169,8 +173,7 @@ def quality_features_expr(text_sql: str) -> Column:
         f" ELSE 0.0D END"
     )
     n = "size(b.toks)"
-    n_sw = f"size(filter(b.toks, t -> array_contains({sw}, t)))"
-    swr = f"CASE WHEN {n} > 0 THEN CAST({n_sw} AS DOUBLE) / {n} ELSE 0.0D END"
+    swr = _stopword_ratio_spark_sql("b.toks")
     ur = (
         f"CASE WHEN {n} > 0 THEN"
         f" CAST(size(array_distinct(b.toks)) AS DOUBLE) / {n}"
@@ -184,7 +187,8 @@ def quality_features_expr(text_sql: str) -> Column:
         f" + 0.25D * ({sw_ok}) + 0.25D * ({ur}) AS DOUBLE), 6)"
     )
     return F.expr(
-        f"transform(array(named_struct('toks', {toks}, 'pr', {pr})),"
+        f"transform(array(named_struct('toks', {P.tokens_spark_sql(text_sql)},"
+        f" 'pr', {pr})),"
         f" b -> named_struct("
         f"'punct_ratio', round(CAST(b.pr AS DOUBLE), 6),"
         f" 'uniq_ratio', round(CAST({ur} AS DOUBLE), 6),"
@@ -264,9 +268,9 @@ _TRIPLE_RE = (
 
 
 def joined_tokens_sql(text_sql: str) -> str:
-    """Spark SQL: the P.tokens token list as ONE \\x1f-joined string,
-    built by a single linear regexp_replace — identical content to
-    ``array_join(P.tokens(text), TOKEN_SEP)`` (separator runs collapse
+    """Spark SQL: the P.tokens_spark_sql token list as ONE \\x1f-joined
+    string, built by a single linear regexp_replace — identical content
+    to ``array_join(tokens, TOKEN_SEP)`` (separator runs collapse
     to one \\x1f; btrim clears the leading/trailing separator that
     split turns into empty tokens) without materializing the array."""
     return (

@@ -371,7 +371,7 @@ def lsh_neardup_pairs(
     vb = vtab.select(F.col("__vid").alias("id_b"), F.col("__v").alias("vb"))
     scored = cand.join(va, "id_a").join(vb, "id_b").select(
         "id_a", "id_b",
-        P.rounded(P.cosine(F.col("va"), F.col("vb"))).alias("cosine"),
+        P.rounded(F.expr(P.cosine_spark_sql("va", "vb"))).alias("cosine"),
     )
     # candidates are already unique pairs; the threshold is the last cut
     return scored.filter(F.col("cosine") >= threshold)
@@ -443,7 +443,7 @@ def lsh_incremental_pairs(
         .select(
             "batch_id",
             "corpus_id",
-            P.rounded(P.cosine(F.col("va"), F.col("vb"))).alias("cosine"),
+            P.rounded(F.expr(P.cosine_spark_sql("va", "vb"))).alias("cosine"),
         )
     )
     return scored.filter(F.col("cosine") >= threshold)
@@ -465,17 +465,13 @@ def _py_norm(arr) -> float:
 
 
 def _cos_lit_sql(vec_col: str, arr, digits: int = 6) -> str:
-    """round(cosine(vec_col, <literal vector>), digits) replicating
-    P.cosine/P.rounded exactly: zip_with double products, left-assoc
-    aggregate sum, zero-denominator -> 0.0. The literal side's norm is
-    precomputed in Python — same IEEE left-assoc accumulation."""
-    dot_vc = P.dot_spark_sql(vec_col, _lit_vec(arr))
-    dot_vv = P.dot_spark_sql(vec_col, vec_col)
-    denom = f"(sqrt({dot_vv}) * CAST('{_py_norm(arr)!r}' AS DOUBLE))"
-    return (
-        f"round(CAST(CASE WHEN {denom} > 0.0D THEN ({dot_vc}) / {denom}"
-        f" ELSE 0.0D END AS DOUBLE), {digits})"
+    """round(cosine(vec_col, <literal vector>), digits). The literal
+    side's norm is precomputed in Python — same IEEE left-assoc
+    accumulation as the in-plan norm."""
+    cos = P.cosine_spark_sql(
+        vec_col, _lit_vec(arr), nb=f"CAST('{_py_norm(arr)!r}' AS DOUBLE)"
     )
+    return f"round(CAST({cos} AS DOUBLE), {digits})"
 
 
 def _centroid_table_from(
@@ -493,7 +489,7 @@ def _centroid_table_from(
         F.struct(
             F.col(id_col).cast("bigint").alias("cid"),
             F.col(vec_col).alias("cvec"),
-            F.expr(f"sqrt({P.dot_spark_sql(vec_col, vec_col)})").alias("cnorm"),
+            F.expr(P.norm_spark_sql(vec_col)).alias("cnorm"),
         ).alias("c")
     )
     # collect_list order is partition-arbitrary; sort_array restores the
@@ -564,12 +560,9 @@ def _cell_over_cents_sql(
     aggregate() folds an argmax over the scored array, iterating in
     ascending centroid-id order with strict > so ties keep the lowest
     id (the order the ranking-window formulation produced)."""
-    dot_vc = P.dot_spark_sql(vec_col, "c.cvec")
-    dot_vv = P.dot_spark_sql(vec_col, vec_col)
     cos = (
-        f"round(CAST(CASE WHEN nv * c.cnorm > 0.0D"
-        f" THEN ({dot_vc}) / (nv * c.cnorm)"
-        f" ELSE 0.0D END AS DOUBLE), {digits})"
+        f"round(CAST({P.cosine_spark_sql(vec_col, 'c.cvec', 'nv', 'c.cnorm')}"
+        f" AS DOUBLE), {digits})"
     )
     scored = f"transform({cents_col}, c -> named_struct('cid', c.cid, 's', {cos}))"
     argmax = (
@@ -580,7 +573,7 @@ def _cell_over_cents_sql(
         " ELSE acc END,"
         " acc -> acc.cell)"
     )
-    return f"transform(array(sqrt({dot_vv})), nv -> {argmax})[0]"
+    return f"transform(array({P.norm_spark_sql(vec_col)}), nv -> {argmax})[0]"
 
 
 def _py_cosine(a, b) -> float:
@@ -818,18 +811,15 @@ def _probe_over_cents_sql(
     a pure map expression. Sorting array<struct(neg_score, cid)> uses
     struct field order, so one array_sort delivers the exact
     (score desc, id asc) ranking."""
-    dot_vc = P.dot_spark_sql(vec_col, "c.cvec")
-    dot_vv = P.dot_spark_sql(vec_col, vec_col)
     cos = (
-        f"round(CAST(CASE WHEN nv * c.cnorm > 0.0D"
-        f" THEN ({dot_vc}) / (nv * c.cnorm)"
-        f" ELSE 0.0D END AS DOUBLE), {digits})"
+        f"round(CAST({P.cosine_spark_sql(vec_col, 'c.cvec', 'nv', 'c.cnorm')}"
+        f" AS DOUBLE), {digits})"
     )
     scored = (
         f"transform({cents_col}, c -> named_struct('ns', -{cos}, 'cid', c.cid))"
     )
     ranked = f"slice(transform(array_sort({scored}), s -> s.cid), 1, {n_probe})"
-    return f"transform(array(sqrt({dot_vv})), nv -> {ranked})[0]"
+    return f"transform(array({P.norm_spark_sql(vec_col)}), nv -> {ranked})[0]"
 
 
 def ivf_topk_batch(
@@ -872,7 +862,7 @@ def ivf_topk_batch(
     scored = cand.select(
         "query_id",
         F.col("id"),
-        P.rounded(P.cosine(F.col("v"), F.col("qvec"))).alias("score"),
+        P.rounded(F.expr(P.cosine_spark_sql("v", "qvec"))).alias("score"),
     )
     return topk_per_group(scored, "query_id", k, id_col="id")
 
@@ -1063,7 +1053,7 @@ def ivf_indexed_topk_batch(
     scored = cand.select(
         "query_id",
         F.col("id"),
-        P.rounded(P.cosine(F.col("v"), F.col("qvec"))).alias("score"),
+        P.rounded(F.expr(P.cosine_spark_sql("v", "qvec"))).alias("score"),
     )
     return topk_per_group(scored, "query_id", k, id_col="id")
 
@@ -1259,9 +1249,11 @@ def pq_codes(
             F.expr(f"slice(embedding, s * {PQ_SUBDIM} + 1, {PQ_SUBDIM})").alias("xv"),
         )
         dist = P.rounded(
-            P.dot(F.col("xv"), F.col("xv"))
-            - 2 * P.dot(F.col("xv"), F.col("cw"))
-            + P.dot(F.col("cw"), F.col("cw"))
+            F.expr(
+                f"{P.dot_spark_sql('xv', 'xv')}"
+                f" - {P.dot_spark_sql('xv', 'cw')} * 2"
+                f" + {P.dot_spark_sql('cw', 'cw')}"
+            )
         )
         dists = xs.join(F.broadcast(codebook), "s").select(
             "vec_id", "s", "j", dist.alias("dist")
@@ -1311,7 +1303,7 @@ def _pq_luts(codebook: DataFrame, query: DataFrame) -> DataFrame:
     to be broadcast."""
     qsub = f"slice(qvec, s * {PQ_SUBDIM} + 1, {PQ_SUBDIM})"
     lut_tall = codebook.crossJoin(F.broadcast(query)).select(
-        "s", "j", P.rounded(P.dot(F.expr(qsub), F.col("cw"))).alias("w")
+        "s", "j", P.rounded(F.expr(P.dot_spark_sql(qsub, "cw"))).alias("w")
     )
     return (
         lut_tall.groupBy("s")
@@ -1344,7 +1336,7 @@ def _pq_luts_batch(
         F.col(query_id_col).alias("query_id"),
         "s",
         "j",
-        P.rounded(P.dot(F.expr(qsub), F.col("cw"))).alias("w"),
+        P.rounded(F.expr(P.dot_spark_sql(qsub, "cw"))).alias("w"),
     )
     return (
         lut_tall.groupBy("query_id", "s")
@@ -1362,18 +1354,20 @@ def _pq_luts_batch(
     )
 
 
+# the ADC score: each code's entry of the row's lookup table, folded
+# left-assoc in subspace order
+_ADC_SCORE_SQL = (
+    "aggregate(zip_with(codes, luts, (c, l) -> element_at(l, cast(c AS INT) + 1)),"
+    " 0.0D, (acc, x) -> acc + x)"
+)
+
+
 def _pq_adc_candidates(codes: DataFrame, luts: DataFrame, n: int) -> DataFrame:
     """Top-n (vec_id) by ADC score: fold the broadcast LUT over each
     row's code array — one in-row left-assoc fold, no vector math."""
     adc = codes.crossJoin(F.broadcast(luts)).select(
         "vec_id",
-        P.rounded(
-            F.expr(
-                "aggregate(zip_with(codes, luts,"
-                " (c, l) -> element_at(l, cast(c AS INT) + 1)),"
-                " 0.0D, (acc, x) -> acc + x)"
-            )
-        ).alias("adc_score"),
+        P.rounded(F.expr(_ADC_SCORE_SQL)).alias("adc_score"),
     )
     return (
         adc.orderBy(F.desc("adc_score"), F.asc("vec_id"))
@@ -1400,7 +1394,7 @@ def _exact_rescore(
         .crossJoin(F.broadcast(query))
         .select(
             "vec_id",
-            P.rounded(P.cosine(F.col("embedding"), F.col("qvec"))).alias("score"),
+            P.rounded(F.expr(P.cosine_spark_sql("embedding", "qvec"))).alias("score"),
         )
     )
     return rescored.orderBy(F.desc("score"), F.asc("vec_id")).limit(k)
@@ -1595,13 +1589,7 @@ def ivfpq_indexed_topk_batch(
         .select(
             "query_id",
             "vec_id",
-            P.rounded(
-                F.expr(
-                    "aggregate(zip_with(codes, luts,"
-                    " (c, l) -> element_at(l, cast(c AS INT) + 1)),"
-                    " 0.0D, (acc, x) -> acc + x)"
-                )
-            ).alias("score"),
+            P.rounded(F.expr(_ADC_SCORE_SQL)).alias("score"),
         )
     )
     cand = topk_per_group(adc, "query_id", k * oversample).select(
@@ -1622,7 +1610,7 @@ def ivfpq_indexed_topk_batch(
         .select(
             "query_id",
             "vec_id",
-            P.rounded(P.cosine(F.col("v"), F.col("qvec"))).alias("score"),
+            P.rounded(F.expr(P.cosine_spark_sql("v", "qvec"))).alias("score"),
         )
     )
     return topk_per_group(rescored, "query_id", k)
@@ -1653,13 +1641,7 @@ def pq_topk_batch(
     adc = codes.crossJoin(F.broadcast(luts_q)).select(
         "query_id",
         "vec_id",
-        P.rounded(
-            F.expr(
-                "aggregate(zip_with(codes, luts,"
-                " (c, l) -> element_at(l, cast(c AS INT) + 1)),"
-                " 0.0D, (acc, x) -> acc + x)"
-            )
-        ).alias("score"),
+        P.rounded(F.expr(_ADC_SCORE_SQL)).alias("score"),
     )
     cand = topk_per_group(adc, "query_id", k * oversample).select(
         "query_id", "vec_id"
@@ -1681,7 +1663,7 @@ def pq_topk_batch(
         .select(
             "query_id",
             "vec_id",
-            P.rounded(P.cosine(F.col("embedding"), F.col("qvec"))).alias("score"),
+            P.rounded(F.expr(P.cosine_spark_sql("embedding", "qvec"))).alias("score"),
         )
     )
     return topk_per_group(rescored, "query_id", k)

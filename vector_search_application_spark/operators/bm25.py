@@ -119,7 +119,7 @@ def doc_frequency(postings: DataFrame) -> DataFrame:
 def query_terms(spark, query_text: str) -> DataFrame:
     """Distinct tokens of the query string as a one-column (term)
     LocalRelation, tokenized on the driver by P.tokens_py (pinned to
-    P.tokens): building or collecting it runs no Spark job."""
+    P.tokens_spark_sql): building or collecting it runs no Spark job."""
     terms = dict.fromkeys(P.tokens_py(query_text))
     return P.local_values(spark, "term STRING", [f"'{t}'" for t in terms])
 
@@ -247,9 +247,9 @@ def query_terms_batch(
     """(query_id, term): distinct tokens per query — the batch twin of
     query_terms, built from a queries DataFrame so the whole batch
     stays one JVM plan."""
-    return queries.select(
-        F.col(qid_col).alias("query_id"),
-        F.explode(F.array_distinct(P.tokens(F.col(text_col)))).alias("term"),
+    return queries.selectExpr(
+        f"`{qid_col}` AS query_id",
+        f"explode(array_distinct({P.tokens_spark_sql(f'`{text_col}`')})) AS term",
     )
 
 
@@ -369,7 +369,8 @@ def write_bm25_indexed(
     build_id = uuid.uuid4().hex
     _layout_meta.write_json_meta(
         spark, path, BM25_BUILD_META,
-        {"build_id": build_id, "n_buckets": n_buckets},
+        {"build_id": build_id, "n_buckets": n_buckets,
+         "schema": postings._jdf.schema().toDDL()},
     )
     # stats derive from the WRITTEN layout (a 2-column scan), so they
     # describe exactly the postings a lookup will probe
@@ -380,13 +381,13 @@ def write_bm25_indexed(
 
 
 def _read_bm25_index(spark, path: str):
-    """((n_docs, avgdl), n_buckets) for a persisted BM25 layout, from
-    one ``first()`` of the stats row, refusing a torn build — both
-    directions, same contract as the IVF layouts' _read_indexed_cents:
-    a stamped-stats/meta mismatch AND an unstamped stats row beside a
-    stamped layout each mean a rebuild died between the writes; only a
-    fully pre-stamp pair passes unverified (then n_buckets falls back
-    to the default)."""
+    """((n_docs, avgdl), n_buckets, postings DDL schema or None) for a
+    persisted BM25 layout, from one ``first()`` of the stats row,
+    refusing a torn build — both directions, same contract as the IVF
+    layouts' _read_indexed_cents: a stamped-stats/meta mismatch AND an
+    unstamped stats row beside a stamped layout each mean a rebuild
+    died between the writes; only a fully pre-stamp pair passes
+    unverified (then n_buckets falls back to the default)."""
     row = spark.read.parquet(bm25_stats_path(path)).first().asDict()
     meta = _layout_meta.read_json_meta(spark, path, BM25_BUILD_META)
     if "build_id" in row:
@@ -404,8 +405,9 @@ def _read_bm25_index(spark, path: str):
             f"{meta.get('build_id')!r} but the stats row beside it is "
             f"unstamped — a rebuild died between the writes; rebuild it"
         )
-    n_buckets = (meta or {}).get("n_buckets", BM25_N_TERM_BUCKETS)
-    return (row["n_docs"], row["avgdl"]), int(n_buckets)
+    meta = meta or {}
+    n_buckets = int(meta.get("n_buckets", BM25_N_TERM_BUCKETS))
+    return (row["n_docs"], row["avgdl"]), n_buckets, meta.get("schema")
 
 
 def _term_buckets(terms: DataFrame, n_buckets: int) -> DataFrame:
@@ -413,18 +415,30 @@ def _term_buckets(terms: DataFrame, n_buckets: int) -> DataFrame:
     return terms.select(_term_bucket(F.col("term"), n_buckets).alias("b"))
 
 
-def _probed_postings(spark, path: str, bucket_ids: DataFrame):
+def _probed_postings(spark, path: str, bucket_ids: DataFrame, schema):
     """The pruned slice of a persisted layout: the (b) rows of
     ``bucket_ids`` (a bounded driver set of <= |terms| ints, the
-    probe_cells_tbl pattern — the ids MUST be literals so they land as
-    PartitionFilters and prune bucket directories before file I/O)
-    select the only directories that can hold a matching posting row."""
+    probe_cells_tbl pattern) name the only bucket directories read, so
+    no job lists all n_buckets of them. A probed bucket no term was
+    written to has no directory; if none has one, the slice is empty.
+    The stored DDL ``schema`` spares schema inference its footer job
+    (None, for a layout written without one, infers)."""
     buckets = sorted({r["b"] for r in bucket_ids.collect()})
-    return (
-        spark.read.parquet(path)
-        .filter(F.col(TERM_BUCKET_COL).isin(buckets))
-        .drop(TERM_BUCKET_COL)
-    )
+    dirs = {
+        int(d.rpartition("=")[2]): d
+        for d in _layout_meta.glob_paths(
+            spark, f"{path.rstrip('/')}/{TERM_BUCKET_COL}=*"
+        )
+    }
+    probed = [dirs[b] for b in buckets if b in dirs]
+    reader = spark.read.option("basePath", path)
+    if schema is not None:
+        reader = reader.schema(schema)
+    sliced = reader.parquet(*(probed or [min(dirs.values())]))
+    if not probed:  # same schema, no rows
+        sliced = sliced.limit(0)
+    # the ids stay a PartitionFilter too, as on a read of the root
+    return sliced.filter(F.col(TERM_BUCKET_COL).isin(buckets)).drop(TERM_BUCKET_COL)
 
 
 def bm25_indexed_topk(
@@ -438,10 +452,10 @@ def bm25_indexed_topk(
     aggregates over that slice exactly as the in-memory scorer's
     term-probe does, and stats are the persisted corpus-global row's
     values)."""
-    stats, n_buckets = _read_bm25_index(spark, path)
+    stats, n_buckets, schema = _read_bm25_index(spark, path)
     qterms = query_terms(spark, query_text)
     # a projection of the local term relation: collected with no job
-    postings = _probed_postings(spark, path, _term_buckets(qterms, n_buckets))
+    postings = _probed_postings(spark, path, _term_buckets(qterms, n_buckets), schema)
     scored = bm25_score_terms(postings, qterms, stats=stats)
     return scored.orderBy(F.desc("score"), F.asc("id")).limit(k)
 
@@ -461,12 +475,12 @@ def bm25_indexed_topk_batch(
     persisted stats row's values. Equals bm25_topk_batch row-for-row."""
     from .topk import topk_per_group
 
-    stats, n_buckets = _read_bm25_index(spark, path)
+    stats, n_buckets, schema = _read_bm25_index(spark, path)
     qterms = query_terms_batch(queries, qid_col=qid_col, text_col=text_col)
     # the batch's term set is distributed: deduplicated on the
     # executors, so at most n_buckets ids reach the driver
     postings = _probed_postings(
-        spark, path, _term_buckets(qterms, n_buckets).distinct()
+        spark, path, _term_buckets(qterms, n_buckets).distinct(), schema
     )
     scored = bm25_score_terms_batch(postings, qterms, stats=stats)
     return topk_per_group(scored, "query_id", k, id_col="id")

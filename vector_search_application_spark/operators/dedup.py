@@ -458,8 +458,8 @@ def exact_substring_spans(
     anything — boilerplate floods make windows MORE duplicated, not
     candidate pairs more numerous (there are no pairs).
     """
-    toks = docs.select(
-        F.col(id_col).alias("id"), P.tokens(F.col(text_col)).alias("toks")
+    toks = docs.selectExpr(
+        f"`{id_col}` AS id", f"{P.tokens_spark_sql(f'`{text_col}`')} AS toks"
     ).filter(F.size("toks") >= window)
     # CASE-total for the same InferFiltersFromGenerate reason as
     # shingle_arrays

@@ -94,8 +94,7 @@ def flat_with_norm(
 
 def _flat_cosine_sql(pa: str, pb: str, dim: int) -> str:
     chain = " + ".join(f"{pa}{i} * {pb}{i}" for i in range(1, dim + 1))
-    denom = f"{pa}norm * {pb}norm"
-    return f"CASE WHEN {denom} > 0.0D THEN ({chain}) / ({denom}) ELSE 0.0D END"
+    return P.cosine_case_spark_sql(chain, f"{pa}norm", f"{pb}norm")
 
 
 def score_pairs(
@@ -158,9 +157,10 @@ def score_against_query(
     Built as ONE parsed expression string (r14): the Column-form cosine
     costs ~80 ms of py4j lambda-HOF construction per plan build, paid
     by every dense branch (hybrid/fusion chains build it per
-    execution). cosine_spark_sql is the pinned string twin — the same
-    zip_with/aggregate trees, so values and plans are identical
-    (tests/test_expr_parity.py pins sameSemantics with the Column form).
+    execution). cosine_spark_sql builds the same zip_with/aggregate
+    trees the Column form did, so values and plans are identical
+    (tests/test_expr_parity.py pins sameSemantics with a test-local
+    copy of the Column form).
     """
     cols = [f"`{id_col}`"] + [f"`{c}`" for c in (extra_cols or [])]
     score = (

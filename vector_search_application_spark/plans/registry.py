@@ -592,7 +592,7 @@ def q_fusion_max_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     qterms = (
         corpus._read(spark, sf_dir, "part")
         .filter(F.col("p_partkey") == 123)
-        .select(F.explode(F.array_distinct(P.tokens(F.col("p_name")))).alias("term"))
+        .selectExpr(f"explode(array_distinct({P.tokens_spark_sql('p_name')})) AS term")
     )
     postings = bm25.build_postings(prods, id_col="id", text_col="sparse_text")
     vec_br = topk.topk(
@@ -1036,9 +1036,9 @@ def q_fusion_max_dedup_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact_br = exact.exact_match_batch(
         prods, qs, "partNumber_airgas_text", exact.EXACT_PRIMARY_SCORE
     ).select("query_id", "id", "score", F.lit("exact").alias("search_type"))
-    qterms = part.filter(F.col("p_partkey") <= FUSION_BATCH_NQ).select(
-        F.col("p_partkey").alias("query_id"),
-        F.explode(F.array_distinct(P.tokens(F.col("p_name")))).alias("term"),
+    qterms = part.filter(F.col("p_partkey") <= FUSION_BATCH_NQ).selectExpr(
+        "p_partkey AS query_id",
+        f"explode(array_distinct({P.tokens_spark_sql('p_name')})) AS term",
     )
     postings = bm25.build_postings(prods, id_col="id", text_col="sparse_text")
     vector_br = topk.topk_per_group(

@@ -81,8 +81,8 @@ _CHUNK_SQL = _chunk_sql_from("documents")
 def chunk_windows(docs: DataFrame) -> DataFrame:
     """The chunk derivation over any (doc_id, text) DataFrame — the
     engine-side twin of _chunk_sql_from."""
-    toks = docs.select(
-        "doc_id", P.tokens(F.col("text")).alias("toks")
+    toks = docs.selectExpr(
+        "doc_id", f"{P.tokens_spark_sql('text')} AS toks"
     ).filter(F.size("toks") >= 1)
     st = toks.select(
         "doc_id",
@@ -282,7 +282,7 @@ def q_temperature_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = corpus.docs(spark, sf_dir)
     per_source = docs.groupBy("source").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-        F.sum(P.token_count(F.col("text"))).cast("bigint").alias("n_tokens"),
+        F.expr(f"CAST(sum(size({P.tokens_spark_sql('text')})) AS BIGINT) AS n_tokens"),
     )
     tot = per_source.groupBy().agg(F.sum("n_tokens").alias("total_tokens"))
     share = P.rounded(
@@ -755,7 +755,7 @@ def q_retrieval_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.cache import tracked_persist
 
     kept_toks = tracked_persist(
-        kept.select("doc_id", P.tokens(F.col("text")).alias("toks")).filter(
+        kept.selectExpr("doc_id", f"{P.tokens_spark_sql('text')} AS toks").filter(
             F.size("toks") >= 1
         )
     )
@@ -925,7 +925,7 @@ def q_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = corpus.docs(spark, sf_dir)
     per_source = docs.groupBy("source").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-        F.sum(P.token_count(F.col("text"))).cast("bigint").alias("n_tokens"),
+        F.expr(f"CAST(sum(size({P.tokens_spark_sql('text')})) AS BIGINT) AS n_tokens"),
     )
     tot = per_source.groupBy().agg(F.sum("n_tokens").alias("total_tokens"))
     share = P.rounded(F.col("n_tokens").cast("double") / F.col("total_tokens"))
@@ -1069,7 +1069,7 @@ def _bpe_train_uncached(spark: SparkSession, sf_dir: str):
 
     docs = corpus.docs(spark, sf_dir)
     words = (
-        docs.select(F.explode(P.tokens(F.col("text"))).alias("w"))
+        docs.selectExpr(f"explode({P.tokens_spark_sql('text')}) AS w")
         .groupBy("w")
         .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
     )
@@ -1197,9 +1197,7 @@ def q_bpe_encode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     BIGINT."""
     _, state = _bpe_train(spark, sf_dir)
     docs = corpus.docs(spark, sf_dir)
-    tokd = docs.select(
-        "doc_id", F.explode(P.tokens(F.col("text"))).alias("w")
-    )
+    tokd = docs.selectExpr("doc_id", f"explode({P.tokens_spark_sql('text')}) AS w")
     enc = tokd.join(F.broadcast(state.select("w", "s")), "w").select(
         "doc_id",
         F.length("w").cast("bigint").alias("n_chars_w"),

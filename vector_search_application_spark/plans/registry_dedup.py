@@ -478,9 +478,7 @@ def q_substring_scrub_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     (including docs too short to window), so the ratio is corpus-true,
     not windowed-subset-true."""
     docs = dedup_docs(spark, sf_dir)
-    toks = docs.select(
-        "doc_id", F.size(P.tokens(F.col("text"))).alias("__nt")
-    )
+    toks = docs.selectExpr("doc_id", f"size({P.tokens_spark_sql('text')}) AS __nt")
     corpus_agg = toks.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),
         F.sum("__nt").cast("bigint").alias("total_tokens"),
@@ -1232,13 +1230,13 @@ def _semantic_verdicts(assigned: DataFrame) -> DataFrame:
     # each row's norm binds ONCE here, so the O(cell²) pair stage below
     # evaluates a single dot-product HOF per pair instead of three
     # (norms recomputed per pair measured 3x slower at sf0.1); the
-    # denominator na*nb is the identical IEEE product P.cosine builds.
+    # denominator na*nb is the IEEE product inline norms would give.
     # persist: the assignment + norm table feeds BOTH pair sides and the
     # final verdict join — without it the broadcast-argmax subtree runs
     # three times. At scale this table is what an index build WRITES,
     # partitioned by cell.
     wb = tracked_persist(
-        assigned.withColumn("nrm", F.expr(f"sqrt({P.dot_spark_sql('v', 'v')})"))
+        assigned.withColumn("nrm", F.expr(P.norm_spark_sql("v")))
     )
     a = wb.selectExpr("id AS id_a", "v AS va", "nrm AS na", "cell")
     b = wb.selectExpr("id AS id_b", "v AS vb", "nrm AS nb", "cell")
@@ -1248,9 +1246,8 @@ def _semantic_verdicts(assigned: DataFrame) -> DataFrame:
         .selectExpr(
             "id_a",
             "id_b",
-            f"round(CAST(CASE WHEN na * nb > 0.0D"
-            f" THEN ({P.dot_spark_sql('va', 'vb')}) / (na * nb)"
-            f" ELSE 0.0D END AS DOUBLE), 6) AS cosine",
+            f"round(CAST({P.cosine_spark_sql('va', 'vb', 'na', 'nb')} AS DOUBLE), 6)"
+            " AS cosine",
         )
     )
     drops = (
@@ -1407,12 +1404,12 @@ def q_semantic_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     # small and broadcasts into the cell join
     cw = tracked_persist(
         ann.ivf_assign(base, cents, keep_vec=True).withColumn(
-            "nrm", F.sqrt(P.dot(F.col("v"), F.col("v")))
+            "nrm", F.expr(P.norm_spark_sql("v"))
         )
     )
     bw = tracked_persist(
         ann.ivf_assign(batch, cents, keep_vec=True).withColumn(
-            "nrm", F.sqrt(P.dot(F.col("v"), F.col("v")))
+            "nrm", F.expr(P.norm_spark_sql("v"))
         )
     )
     b = bw.select(
@@ -1423,14 +1420,10 @@ def q_semantic_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("id").alias("corpus_id"), F.col("v").alias("vc"),
         F.col("nrm").alias("nc"), "cell",
     )
-    denom = F.col("nb") * F.col("nc")
     scored = F.broadcast(b).join(c, "cell").select(
         "bid",
         "corpus_id",
-        P.rounded(
-            F.when(denom > 0.0, P.dot(F.col("vb"), F.col("vc")) / denom)
-            .otherwise(0.0)
-        ).alias("cosine"),
+        P.rounded(F.expr(P.cosine_spark_sql("vb", "vc", "nb", "nc"))).alias("cosine"),
     )
     drops = (
         scored.filter(F.col("cosine") >= SEMDEDUP_THRESHOLD)

@@ -250,7 +250,7 @@ def q_quantized_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     dq = ranges.select("vec_id", F.expr(_DEQ_SPARK).alias("dqv"))
     scored = dq.crossJoin(F.broadcast(q)).select(
         "vec_id",
-        P.rounded(P.cosine(F.col("dqv"), F.col("qvec"))).alias("score"),
+        P.rounded(F.expr(P.cosine_spark_sql("dqv", "qvec"))).alias("score"),
     )
     return scored.orderBy(F.desc("score"), F.asc("vec_id")).limit(K)
 
@@ -304,9 +304,10 @@ def q_binary_quantized_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vec_id",
             "embedding",
             "qvec",
-            P.dot(
-                F.expr(_SIGN_SPARK.format(v="embedding")),
-                F.expr(_SIGN_SPARK.format(v="qvec")),
+            F.expr(
+                P.dot_spark_sql(
+                    _SIGN_SPARK.format(v="embedding"), _SIGN_SPARK.format(v="qvec")
+                )
             ).alias("bin_score"),
         )
         .orderBy(F.desc("bin_score"), F.asc("vec_id"))
@@ -315,7 +316,7 @@ def q_binary_quantized_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         cand.select(
             "vec_id",
-            P.rounded(P.cosine(F.col("embedding"), F.col("qvec"))).alias("score"),
+            P.rounded(F.expr(P.cosine_spark_sql("embedding", "qvec"))).alias("score"),
         )
         .orderBy(F.desc("score"), F.asc("vec_id"))
         .limit(K)

@@ -166,7 +166,7 @@ def q_sequence_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
         (P.md5_long(F.col("doc_id").cast("string"), PACK_SEED) % PACK_SHARDS)
         .cast("bigint")
         .alias("pack_shard"),
-        P.token_count(F.col("text")).cast("bigint").alias("n_tokens"),
+        F.expr(f"CAST(size({P.tokens_spark_sql('text')}) AS BIGINT) AS n_tokens"),
     )
     w = (
         Window.partitionBy("pack_shard")
@@ -273,8 +273,8 @@ def q_vocab_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
     the only shuffle is keyed on the term, and partial aggregation
     collapses each partition's repeats before it."""
     docs = corpus.docs(spark, sf_dir)
-    per_doc = docs.select(
-        F.explode(F.array_distinct(P.tokens(F.col("text")))).alias("term")
+    per_doc = docs.selectExpr(
+        f"explode(array_distinct({P.tokens_spark_sql('text')})) AS term"
     )
     dfreq = per_doc.groupBy("term").agg(
         F.count(F.lit(1)).cast("bigint").alias("doc_freq")
@@ -492,7 +492,7 @@ def q_domain_mix_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = corpus.docs(spark, sf_dir)
     per_source = docs.groupBy("source").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-        F.sum(P.token_count(F.col("text"))).cast("bigint").alias("n_tokens"),
+        F.expr(f"CAST(sum(size({P.tokens_spark_sql('text')})) AS BIGINT) AS n_tokens"),
     )
     tot = per_source.groupBy().agg(
         F.sum("n_tokens").alias("total_tokens"),

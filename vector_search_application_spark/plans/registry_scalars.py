@@ -339,7 +339,9 @@ def q_token_accounting_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.rollup("lang", "source")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-            F.sum(P.token_count(F.col("text"))).cast("bigint").alias("n_tokens"),
+            F.expr(
+                f"CAST(sum(size({P.tokens_spark_sql('text')})) AS BIGINT) AS n_tokens"
+            ),
         )
         .select(
             F.coalesce(F.col("lang"), F.lit("<all>")).alias("lang"),

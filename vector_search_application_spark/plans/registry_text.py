@@ -28,7 +28,7 @@ def q_text_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     feature extraction and thresholding shape is what scales; swapping
     in real per-language stopword tables is a constants change)."""
     docs = corpus.docs(spark, sf_dir)
-    ratio = T.stopword_ratio(F.col("text"))
+    ratio = T.stopword_ratio_expr("text")
     return docs.select(
         "doc_id",
         P.rounded(ratio).alias("stopword_ratio"),
@@ -75,8 +75,9 @@ def q_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         T.ws_token_count(F.col("text")).cast("int").alias("n_ws_tokens"),
         T.re_token_count(F.col("text")).cast("int").alias("n_re_tokens"),
-        F.size(F.array_distinct(P.tokens(F.col("text")))).cast("int").alias(
-            "n_distinct"
+        F.expr(
+            f"CAST(size(array_distinct({P.tokens_spark_sql('text')})) AS INT)"
+            " AS n_distinct"
         ),
         F.length("text").cast("bigint").alias("n_chars_actual"),
     )
@@ -122,7 +123,7 @@ def q_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
         " ELSE 0L END"
     )
     return (
-        docs.select("doc_id", P.tokens(F.col("text")).alias("toks"))
+        docs.selectExpr("doc_id", f"{P.tokens_spark_sql('text')} AS toks")
         .filter(F.size("toks") > 0)
         .selectExpr("doc_id", f"CAST({fold} % {T.FP_MOD}L AS BIGINT) AS fingerprint")
     )

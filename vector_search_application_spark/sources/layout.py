@@ -58,13 +58,19 @@ def table_has_data(spark: SparkSession, path: str) -> bool:
     return False
 
 
+def glob_paths(spark: SparkSession, pattern: str) -> list[str]:
+    """The paths matching the Hadoop glob ``pattern``, sorted, listed on
+    the driver through the Hadoop FS (no Spark job). A reader handed
+    these reads literal paths: a glob given to ``spark.read`` reaches
+    its streaming-metadata probe as a file name and logs a
+    FileNotFoundException."""
+    fs, hpath, _ = _fs(spark, pattern)
+    return sorted(st.getPath().toString() for st in fs.globStatus(hpath) or [])
+
+
 def is_bucketed(spark: SparkSession, path: str) -> bool:
     """True when ``path`` is a bucketed layout (``__bucket=N`` dirs)."""
-    fs, _, jvm = _fs(spark, path)
-    st = fs.globStatus(jvm.org.apache.hadoop.fs.Path(
-        path.rstrip("/") + f"/{BUCKET_COL}=*"
-    ))
-    return st is not None and len(st) > 0
+    return bool(glob_paths(spark, path.rstrip("/") + f"/{BUCKET_COL}=*"))
 
 
 LAYOUT_META = "_LAYOUT.json"

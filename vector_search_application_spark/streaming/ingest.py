@@ -1097,4 +1097,5 @@ def stream_neardup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     q.awaitTermination()
     if not _layout.table_has_data(spark, out):
         return docs.limit(0)
-    return spark.read.parquet(os.path.join(out, "b*")).select("doc_id", "text")
+    epochs = _layout.glob_paths(spark, os.path.join(out, "b*"))
+    return spark.read.parquet(*epochs).select("doc_id", "text")
