@@ -611,6 +611,17 @@ def test_ivf_indexed_unstamped_cents_refuses(spark, tmp_path):
     assert ann.ivf_indexed_topk(spark, path, q).count() == K
 
 
+def test_indexed_cents_read_without_inference(spark, tmp_path):
+    """Reading an IVF layout's cents table runs one job, the build-id
+    ``first()``: the meta stores the table's schema, so no
+    footer-reading schema-inference job runs before it."""
+    from tests.test_query_literals import _jobs
+
+    path = str(tmp_path / "ivf")
+    ann.write_ivf_indexed(corpus.vectors(spark, SF_SMOKE), path)
+    assert len(_jobs(spark, lambda: ann._read_indexed_cents(spark, path))) == 1
+
+
 def _mog_fixture(
     spark, n_clusters=16, per_cluster=60, dim=32, sigma=0.05,
     interleaved=False,

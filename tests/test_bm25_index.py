@@ -134,3 +134,17 @@ def test_bm25_indexed_collects_only_bucket_ids():
     assert "bucket_ids.collect()" in src
     batch = " ".join(inspect.getsource(bm25.bm25_indexed_topk_batch).split())
     assert "_term_buckets(qterms, n_buckets).distinct()" in batch
+
+
+def test_indexed_lookup_reads_stats_without_inference(spark, tmp_path):
+    """Building the layout lookup runs one job, the stats row's
+    ``first()``: the row is read under its known schema, so no
+    footer-reading schema-inference job runs before it, and the
+    postings slice is read under the schema the build meta stores."""
+    from tests.test_query_literals import _jobs
+
+    docs = corpus.docs(spark, SF_SMOKE)
+    path = str(tmp_path / "postings")
+    bm25.write_bm25_indexed(docs, path)
+    assert len(_jobs(spark, lambda: bm25._read_bm25_index(spark, path))) == 1
+    assert len(_jobs(spark, lambda: bm25.bm25_indexed_topk(spark, path, QUERY_TEXT, K))) == 1

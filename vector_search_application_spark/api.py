@@ -47,8 +47,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .functions import embedder as E
+from .functions import portable as P
 from .functions import scalars
-from .functions.cache import release, release_all, tracked_persist
+from .functions.cache import (
+    carry_forward,
+    release,
+    release_all,
+    tracked_persist,
+)
 from .operators import bm25, exact, fusion
 from .plans import corpus
 from .plans.constants import (
@@ -442,13 +448,20 @@ class Engine:
         prevent. The reference's load-data / import endpoints write
         into the live Qdrant collection (app/main.py:106-160) — a load
         that reported success but never became searchable would be a
-        silent parity break. New rows win on id (M1 upsert semantics);
-        the corpus and both derived indexes re-point and re-persist.
-        The merged corpus is eagerly localCheckpoint'ed below, which
-        cuts lineage to ``table_dir`` — so the ingested parquet is
-        safe for the caller to delete once this returns (http_shim's
-        load-data path relies on exactly that to clean its scratch
-        dir)."""
+        silent parity break. New rows win on id (M1 upsert semantics).
+
+        The write updates all three tables by delta, as the reference's
+        upsert updates its collection in place: each next version is
+        the old one without the touched ids' rows, plus the batch's
+        rows (cache.carry_forward). Only the batch is embedded and
+        tokenized; the BM25 stats and dictionary move by arithmetic
+        (bm25.upsert_postings), ready before the swap, so the first
+        reads after a write rebuild nothing. Each version is an eager
+        localCheckpoint at the partition count of the one before,
+        which cuts lineage to ``table_dir`` — so the ingested parquet
+        is safe for the caller to delete once this returns
+        (http_shim's load-data path relies on exactly that to clean
+        its scratch dir) — and to the superseded versions."""
         import gc
 
         old_products, old_dense, old_sparse = self._snapshot()
@@ -494,6 +507,15 @@ class Engine:
                 loaded, extra_cols=("__file", "__pos")
             )
         loaded = loaded.select(*old_products.columns, "__file", "__pos")
+        # the touched ids, on the driver: at most one per upserted row.
+        # They drop the superseded rows of all three tables as a
+        # literal filter, with no join. A row with a NULL id matches
+        # no upserted id, so it stays.
+        ids = sorted(
+            {r[0] for r in loaded.select("id").collect()} - {None}
+        )
+        touched = P.in_sql("id", [str(i) for i in ids])
+        keep = f"id IS NULL OR NOT ({touched})"
         # an id may repeat WITHIN one upload; the reference's Qdrant
         # upsert applies points in order so the LAST wins. Without
         # this both rows land in the served corpus: search returns
@@ -510,23 +532,24 @@ class Engine:
             .filter(F.col("__rn") == 1)
             .drop("__file", "__pos", "__rn")
         )
-        merged = loaded.unionByName(
-            old_products.join(
-                loaded.select("id").distinct(), "id", "left_anti"
-            )
+        # Materialize AND cut lineage: the loaded plan's FileScan pins
+        # table_dir's current file listing, and the normal import ->
+        # importdelta flow overwrites those files next call — a lazy
+        # persist would later re-read deleted parquet and fail with
+        # FileNotFoundException (import_delta localCheckpoints for the
+        # same reason).
+        new_products = carry_forward(old_products, keep, loaded)
+        # Both indexes move by delta: only the batch, read back from
+        # the new checkpoint, is embedded and tokenized. Every dense
+        # row (id, dim, comp) and posting (id, term, tf, doc_len)
+        # depends on its own document only, so this equals a rebuild
+        # over new_products (tests/test_delta_index.py).
+        batch = new_products.filter(touched)
+        new_dense = carry_forward(
+            old_dense, keep, E.embed_postings(batch, "id", "dense_text")
         )
-        # Materialize AND cut lineage: the merged plan's FileScan
-        # pins table_dir's current file listing, and the normal
-        # import -> importdelta flow overwrites those files next
-        # call — a lazy persist would later re-read deleted parquet
-        # and fail with FileNotFoundException (import_delta
-        # localCheckpoints for the same reason).
-        new_products = merged.localCheckpoint(eager=True)
-        new_dense = tracked_persist(
-            E.embed_postings(new_products, "id", "dense_text")
-        )
-        new_sparse = bm25.build_postings(
-            new_products, id_col="id", text_col="sparse_text"
+        new_sparse = bm25.upsert_postings(
+            old_sparse, batch, ids, id_col="id", text_col="sparse_text"
         )
         # One-tuple swap: a reader's _snapshot() before this line
         # sees the old trio, after it the new one — never a mix.
@@ -537,14 +560,14 @@ class Engine:
         # the superseded plans — and, through their lineage, the
         # previous corpus's checkpoint RDD — reachable forever
         # (measured: one orphaned corpus checkpoint per absorb). A
-        # localCheckpoint'ed old_products is NOT in the CacheManager —
-        # its blocks are freed by the ContextCleaner once the RDD is
+        # localCheckpoint'ed table is NOT in the CacheManager — its
+        # blocks are freed by the ContextCleaner once the RDD is
         # unreachable, so drop the references and nudge GC rather than
-        # letting stale full-corpus checkpoint copies pile up across a
-        # tight import loop.
+        # letting stale checkpoint copies pile up across a tight
+        # import loop.
         for df in (old_products, old_dense, old_sparse):
             release(df)
-        del old_products, old_dense, old_sparse, merged, loaded
+        del old_products, old_dense, old_sparse, batch, loaded
         gc.collect()
 
     def load_data(self, path: str, table_dir: str) -> int:

@@ -109,9 +109,9 @@ def embed_postings(
     sparse index. The driver's gate still embeds per query
     (release_all() clears the memo with the cached blocks). Callers
     that embed a STREAM of distinct inputs — foreachBatch micro-
-    batches (streaming/ingest.py), the Engine's per-import-cycle
-    rebuilds (api.py, which tracked_persists each index and releases
-    it when the next import supersedes it) — keep the default
+    batches (streaming/ingest.py), the Engine's writes (api.py, which
+    embeds only each write's upserted documents and carries the rest
+    of its dense index forward in a checkpoint) — keep the default
     index=False: memoizing per-batch plans would pin a persisted copy
     of every batch until release_all().
     """

@@ -217,3 +217,9 @@ def local_values(spark, schema: str, rows: list[str]) -> DataFrame:
     body = ", ".join(f"({r})" for r in rows)
     names = ", ".join(n for n, _ in cols)
     return spark.sql(f"SELECT * FROM VALUES {body} AS v({names})")
+
+
+def in_sql(col: str, literals: list[str]) -> str:
+    """``col IN (...)`` over driver-side SQL literals, as one predicate
+    string (one parse, however many values); false for none."""
+    return f"{col} IN ({', '.join(literals)})" if literals else "false"

@@ -914,13 +914,21 @@ def write_ivf_indexed(
     # the LONG write lands first, and ivf_indexed_topk refuses a
     # mismatch — torn builds fail loudly instead of serving wrong
     # neighbors.
+    _write_stamped_cents(vectors.sparkSession, path, cent_tbl)
+
+
+def _write_stamped_cents(spark, path: str, cent_tbl: DataFrame) -> None:
+    """The build-id stamp of a written layout: the meta (the build id,
+    and the stamped cents table's DDL schema, so a lookup reads the
+    table without a schema-inference job), then the stamped cents
+    table last."""
     build_id = uuid.uuid4().hex
+    stamped = cent_tbl.withColumn("build_id", F.lit(build_id))
     _layout_meta.write_json_meta(
-        vectors.sparkSession, path, IVF_BUILD_META, {"build_id": build_id}
+        spark, path, IVF_BUILD_META,
+        {"build_id": build_id, "schema": stamped._jdf.schema().toDDL()},
     )
-    cent_tbl.withColumn("build_id", F.lit(build_id)).write.mode(
-        "overwrite"
-    ).parquet(ivf_cents_path(path))
+    stamped.write.mode("overwrite").parquet(ivf_cents_path(path))
 
 
 IVF_BUILD_META = "_IVF_BUILD.json"
@@ -950,11 +958,20 @@ def _read_indexed_cents(spark, path: str) -> DataFrame:
     a rebuild died between the layout+meta write and the cents write,
     leaving the NEW layout beside PRE-STAMP-ERA centroids. Only when
     BOTH artifacts predate the stamp (no meta, no column) is the pair
-    known-consistent-by-age and allowed through unverified."""
-    cent_tbl = spark.read.parquet(ivf_cents_path(path))
+    known-consistent-by-age and allowed through unverified.
+
+    A meta that stores the cents table's schema spares the read its
+    schema-inference job; an unstamped table read under it shows a
+    NULL build_id."""
     meta = _layout_meta.read_json_meta(spark, path, IVF_BUILD_META)
+    reader = spark.read
+    if meta is not None and "schema" in meta:
+        reader = reader.schema(meta["schema"])
+    cent_tbl = reader.parquet(ivf_cents_path(path))
+    cents_bid = None
     if "build_id" in cent_tbl.columns:
         cents_bid = cent_tbl.select("build_id").first()["build_id"]
+    if cents_bid is not None:
         if meta is None or meta.get("build_id") != cents_bid:
             raise ValueError(
                 f"IVF index at {path} is torn: cents build_id "
@@ -962,7 +979,6 @@ def _read_indexed_cents(spark, path: str) -> DataFrame:
                 f"{None if meta is None else meta.get('build_id')!r} "
                 f"— rebuild it"
             )
-        cent_tbl = cent_tbl.drop("build_id")
     elif meta is not None:
         raise ValueError(
             f"IVF index at {path} is torn: the layout carries build_id "
@@ -970,7 +986,7 @@ def _read_indexed_cents(spark, path: str) -> DataFrame:
             f"is unstamped (pre-stamp era) — a rebuild died between "
             f"the layout write and the cents write; rebuild it"
         )
-    return cent_tbl
+    return cent_tbl.drop("build_id")
 
 
 def ivf_indexed_topk(
@@ -1498,13 +1514,7 @@ def write_ivfpq_indexed(
         "overwrite"
     ).partitionBy("cell").parquet(path)
     codebook.write.mode("overwrite").parquet(ivf_codebook_path(path))
-    build_id = uuid.uuid4().hex
-    _layout_meta.write_json_meta(
-        vectors.sparkSession, path, IVF_BUILD_META, {"build_id": build_id}
-    )
-    cent_tbl.withColumn("build_id", F.lit(build_id)).write.mode(
-        "overwrite"
-    ).parquet(ivf_cents_path(path))
+    _write_stamped_cents(vectors.sparkSession, path, cent_tbl)
 
 
 def ivfpq_indexed_topk(

@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import portable as P
-from ..functions.cache import plan_memo, tracked_persist
+from ..functions.cache import carry_forward, plan_memo, tracked_persist
 from ..plans.constants import BM25_B, BM25_K1, K
 from ..sources import layout as _layout_meta
 
@@ -91,8 +91,11 @@ def build_postings(
 
 
 def corpus_stats(postings: DataFrame) -> DataFrame:
-    """One-row (n_docs, avgdl) DataFrame; scorers take its two values
-    as literals (``_index_aggregates``, ``_read_bm25_index``).
+    """One-row (n_docs, avgdl) DataFrame: the stats row
+    write_bm25_indexed stores beside a layout, whose two values the
+    layout's scorers take as literals (``_read_bm25_index``). The
+    in-memory index derives the same two values from exact totals
+    (``_aggregates``).
 
     DELIBERATE: stats derive from the postings, so documents that
     tokenize to ZERO terms (empty/None/all-separator text) are outside
@@ -146,16 +149,30 @@ def _bm25_weight(k1: float, b: float):
     return F.expr(f"({idf}) * ({tf_part})")
 
 
+_AGGREGATES = ("bm25_index_aggregates",)
+
+
+def _aggregates(n_docs: int, total_len: int, dictionary: DataFrame):
+    """``_index_aggregates``' value: ((n_docs, avgdl), dictionary,
+    Σ doc_len). avgdl is Σ/n on the driver: both are exact integers
+    below 2**53, so the quotient is correctly rounded, the same double
+    Spark's avg(doc_len) gives (it sums the ints in a double, then
+    divides; pinned against corpus_stats by tests/test_delta_index.py).
+    No document, no avgdl, as avg over no rows."""
+    return (n_docs, total_len / n_docs if n_docs else None), dictionary, total_len
+
+
 def _index_aggregates(postings: DataFrame):
-    """((n_docs, avgdl), dictionary) for a FULL postings index — index
-    metadata (the reference's sparse index stores exactly idf and avgdl
-    beside the postings), derived ONCE per postings plan through
-    cache.plan_memo, so warm serving stops re-running a distinct+agg
-    over the whole postings table per query (r13: 0.62 s/query at
-    sf0.1 for the stats pass alone):
+    """((n_docs, avgdl), dictionary, Σ doc_len) for a FULL postings
+    index — index metadata (the reference's sparse index stores
+    exactly idf and avgdl beside the postings), derived ONCE per
+    postings plan through cache.plan_memo, so warm serving stops
+    re-running a distinct+agg over the whole postings table per query
+    (r13: 0.62 s/query at sf0.1 for the stats pass alone):
 
     - the corpus stats are two scalars from one ``first()`` per index
-      version, bound into each scoring plan as literals;
+      version, bound into each scoring plan as literals; the exact
+      Σ doc_len beside them lets ``upsert_postings`` carry them forward;
     - the (term, df) dictionary is tracked_persist'ed and probed per
       query with the query terms, instead of aggregating the
       term-probed posting slice, which re-scanned every posting row of
@@ -168,14 +185,93 @@ def _index_aggregates(postings: DataFrame):
     to the slice-derived form — df of a term over its probed slice IS
     df of the term — so oracle hashes cannot move (verified by the
     bm25 rows in tests/test_registry_oracle.py)."""
-    return plan_memo(
+
+    def build():
+        n_docs, total_len = (
+            postings.select("id", "doc_len")
+            .distinct()
+            .agg(F.count(F.lit(1)), F.sum("doc_len"))
+            .first()
+        )
+        return _aggregates(
+            n_docs, total_len or 0, tracked_persist(doc_frequency(postings))
+        )
+
+    return plan_memo(postings, _AGGREGATES, build)
+
+
+def upsert_postings(
+    postings: DataFrame,
+    docs: DataFrame,
+    ids: list[int],
+    id_col: str = "doc_id",
+    text_col: str = "text",
+) -> DataFrame:
+    """The next version of a full postings index after an upsert, by
+    delta: the rows of the ``ids`` give way to the postings of ``docs``
+    (the upserted documents, whose ids are exactly ``ids``), and the
+    index aggregates are carried forward instead of rebuilt. Exact,
+    because every posting row depends on its own document only: the
+    result equals build_postings over the upserted corpus row for row
+    (tests/test_delta_index.py).
+
+    - The table is cache.carry_forward's checkpoint, at the old
+      version's partition count.
+    - n_docs and Σ doc_len move by the ids' old and new documents
+      (doc_len = Σ tf over a document's rows); avgdl is their quotient.
+    - The dictionary changes only for the terms whose df moves; a term
+      whose df reaches 0 leaves it.
+
+    One collect brings the changes to the driver: a row per moved term
+    and per touched document version, so bounded by the upsert's
+    vocabulary and size. The result is seeded into
+    ``_index_aggregates``' memo: the first read of the new version runs
+    no ``first()`` and builds no dictionary."""
+    (n_docs, _), dictionary, total_len = _index_aggregates(postings)
+    touched = P.in_sql("id", [str(i) for i in ids])
+    new = carry_forward(
         postings,
-        ("bm25_index_aggregates",),
-        lambda: (
-            tuple(corpus_stats(postings).first()),
-            tracked_persist(doc_frequency(postings)),
-        ),
+        f"NOT ({touched})",
+        build_postings(docs, id_col=id_col, text_col=text_col, persist=False),
     )
+    changes = (
+        postings.filter(touched)
+        .withColumn("sign", F.lit(-1))
+        .unionByName(new.filter(touched).withColumn("sign", F.lit(1)))
+    )
+    # one shuffle, two groupings: a row per term (its df change d) and
+    # a row per (id, sign) document version (its doc_len as Σ tf);
+    # terms are never NULL, so a NULL term marks a document row
+    moved = (
+        changes.groupingSets([["term"], ["id", "sign"]], "term", "id", "sign")
+        .agg(F.sum("sign").alias("d"), F.sum("tf").alias("len"))
+        .filter("term IS NULL OR d != 0")
+        .collect()
+    )
+    df_moves = {r["term"]: r["d"] for r in moved if r["term"] is not None}
+    for r in moved:
+        if r["term"] is None:
+            n_docs += r["sign"]
+            total_len += r["sign"] * r["len"]
+    changed = P.in_sql("term", [f"'{t}'" for t in df_moves])
+    moves = P.local_values(
+        docs.sparkSession,
+        "term STRING, df BIGINT",
+        [f"'{t}', {d}L" for t, d in df_moves.items()],
+    )
+    new_dictionary = carry_forward(
+        dictionary,
+        f"NOT ({changed})",
+        dictionary.filter(changed)
+        .unionByName(moves)
+        .groupBy("term")
+        .agg(F.sum("df").alias("df"))
+        .filter("df > 0"),
+    )
+    plan_memo(
+        new, _AGGREGATES, lambda: _aggregates(n_docs, total_len, new_dictionary)
+    )
+    return new
 
 
 def _weights(probed: DataFrame, dfreq: DataFrame, stats, k1, b, *keys):
@@ -213,7 +309,7 @@ def bm25_score_terms(
     in_query = F.col("term").isin([r["term"] for r in qterms.collect()])
     probed = postings.filter(in_query)
     if stats is None:
-        stats, dictionary = _index_aggregates(postings)
+        stats, dictionary, _ = _index_aggregates(postings)
         dfreq = dictionary.filter(in_query)
     else:
         # pruned persisted-layout slice: df aggregates over the
@@ -287,7 +383,7 @@ def bm25_score_terms_batch(
     terms_only = qterms.select("term").distinct()
     probed = postings.join(F.broadcast(terms_only), "term")
     if stats is None:
-        stats, dictionary = _index_aggregates(postings)
+        stats, dictionary, _ = _index_aggregates(postings)
         dfreq = dictionary.join(F.broadcast(terms_only), "term")
     else:
         dfreq = doc_frequency(probed)
@@ -325,6 +421,10 @@ def bm25_score_terms_batch(
 BM25_BUILD_META = "_BM25_BUILD.json"
 BM25_N_TERM_BUCKETS = 64
 TERM_BUCKET_COL = "__tbucket"
+
+
+# corpus_stats' row as write_bm25_indexed stamps it
+_STATS_SCHEMA = "n_docs BIGINT, avgdl DOUBLE, build_id STRING"
 
 
 def bm25_stats_path(path: str) -> str:
@@ -387,11 +487,18 @@ def _read_bm25_index(spark, path: str):
     layouts' _read_indexed_cents: a stamped-stats/meta mismatch AND an
     unstamped stats row beside a stamped layout each mean a rebuild
     died between the writes; only a fully pre-stamp pair passes
-    unverified (then n_buckets falls back to the default)."""
-    row = spark.read.parquet(bm25_stats_path(path)).first().asDict()
+    unverified (then n_buckets falls back to the default).
+
+    The row is read under its known schema, which spares the read a
+    schema-inference job; an unstamped row shows a NULL build_id."""
+    row = (
+        spark.read.schema(_STATS_SCHEMA)
+        .parquet(bm25_stats_path(path))
+        .first()
+    )
     meta = _layout_meta.read_json_meta(spark, path, BM25_BUILD_META)
-    if "build_id" in row:
-        stats_bid = row["build_id"]
+    stats_bid = row["build_id"]
+    if stats_bid is not None:
         if meta is None or meta.get("build_id") != stats_bid:
             raise ValueError(
                 f"BM25 index at {path} is torn: stats build_id "
