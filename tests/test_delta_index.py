@@ -90,12 +90,35 @@ def test_delta_indexes_equal_full_rebuild(spark, tmp_path):
     assert {"quixel", "flimflam"} <= terms
 
 
+def _job_names(spark, fn) -> list[str]:
+    """The name of each Spark job ``fn()`` runs: its final stage's name,
+    "<action> at <call site>"."""
+    tracker = spark.sparkContext.statusTracker()
+    return [
+        tracker.getStageInfo(max(tracker.getJobInfo(j).stageIds)).name
+        for j in _jobs(spark, fn)
+    ]
+
+
+def test_load_data_absorbs_without_schema_inference(spark, tmp_path):
+    """The upload path reads the written table back under the schema it
+    wrote: the only parquet job of a load-data is the write, with no
+    footer-reading schema-inference job before the absorb's id collect."""
+    engine = Engine(spark, SF_SMOKE)
+    src = tmp_path / "batch.json"
+    src.write_text(json.dumps([_doc(f"INF{i}", f"steel valve {i}") for i in range(3)]))
+    names = _job_names(
+        spark, lambda: engine.load_data(str(src), str(tmp_path / "table"))
+    )
+    assert sum(n.startswith("parquet at") for n in names) == 1, names
+
+
 @pytest.fixture(scope="module")
 def cycles(spark, tmp_path_factory):
-    """Three write cycles on a fresh engine: a hybrid read, a 5-product
-    load-data (3 new ids, 2 updates), a hybrid read. Records, per cycle,
-    the jobs of both reads, the served tables' partition counts, the
-    tracked-table and memo sizes and the settled resident-RDD count."""
+    """Three write cycles on a fresh engine: a 5-product load-data (3 new
+    ids, 2 updates), then two hybrid reads. Records, per cycle, the jobs
+    of both reads, the served tables' partition counts, the tracked-table
+    and memo sizes and the settled resident-RDD count."""
     tmp = tmp_path_factory.mktemp("delta_cycles")
     engine = Engine(spark, SF_SMOKE)
     existing = sorted(
@@ -104,14 +127,14 @@ def cycles(spark, tmp_path_factory):
     rec = {"parts": [[df.rdd.getNumPartitions() for df in engine._snapshot()]]}
     engine.query("warm up", "hybrid", 5).collect()
     for c in range(3):
-        before = _jobs(spark, lambda: engine.query(f"cold widget {c}", "hybrid", 5))
         batch = [_doc(f"CYC{c}N{i}", f"cycle {c} widget {i}") for i in range(3)]
         batch += [_doc(p, f"cycle {c} bolt") for p in existing[2 * c:2 * c + 2]]
         src = tmp / f"cycle{c}.json"
         src.write_text(json.dumps(batch))
         engine.load_data(str(src), str(tmp / "table"))
-        after = _jobs(spark, lambda: engine.query(f"cycle {c} widget", "hybrid", 5))
-        rec.setdefault("jobs", []).append((len(before), len(after)))
+        first = _jobs(spark, lambda: engine.query(f"cycle {c} widget", "hybrid", 5))
+        warm = _jobs(spark, lambda: engine.query(f"cold widget {c}", "hybrid", 5))
+        rec.setdefault("jobs", []).append((len(first), len(warm)))
         rec["parts"].append(
             [df.rdd.getNumPartitions() for df in engine._snapshot()]
         )
@@ -125,11 +148,14 @@ def cycles(spark, tmp_path_factory):
 
 def test_first_hybrid_after_write_is_warm(cycles):
     """The write seeds the BM25 stats and dictionary of the new postings:
-    the first hybrid read after it runs no more jobs than the warm
-    hybrid read before it (a rebuild ran the stats first() and the
-    dictionary and index builds on top)."""
-    for before, after in cycles["jobs"]:
-        assert after <= before, cycles["jobs"]
+    the first hybrid read after it runs no more jobs than a second, warm
+    hybrid read of the same version (a rebuild ran the stats first() and
+    the dictionary and index builds on top). The baseline is read after
+    the write because a write changes the dense index's partitioning: a
+    freshly built index is hash-partitioned by id, its carried-forward
+    checkpoint is not, and a read over it plans one more exchange."""
+    for first, warm in cycles["jobs"]:
+        assert first <= warm, cycles["jobs"]
 
 
 def test_partition_counts_stay_fixed(cycles):

@@ -45,6 +45,7 @@ from collections import OrderedDict
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from .functions import embedder as E
 from .functions import portable as P
@@ -223,7 +224,8 @@ class Engine:
             )
         else:
             raise ValueError(f"unknown mode: {mode}")
-        out = out.localCheckpoint(eager=True)  # executes; collects are free
+        # the one collect of the read; the returned rows cost no job
+        out = P.collected(out)
         self._track(f"query_{mode}", (time.perf_counter() - t0) * 1000)
         return out
 
@@ -233,7 +235,7 @@ class Engine:
         their own perf buckets; compare() promises identical results,
         so the logic must not fork per alias)."""
         t0 = time.perf_counter()
-        out = self._dense_branch(q, count).localCheckpoint(eager=True)
+        out = P.collected(self._dense_branch(q, count))
         self._track(bucket, (time.perf_counter() - t0) * 1000)
         return out
 
@@ -317,7 +319,7 @@ class Engine:
     def search_fusion(self, q: str, count: int = 10) -> DataFrame:
         """V4: exact(k) + vector(2k) -> max-score dedup (F3)."""
         t0 = time.perf_counter()
-        out = self._fusion_hits(q, count).localCheckpoint(eager=True)
+        out = P.collected(self._fusion_hits(q, count))
         self._track("fusion", (time.perf_counter() - t0) * 1000)
         return out
 
@@ -366,7 +368,7 @@ class Engine:
                 .orderBy(F.desc("score"), F.asc("id"))
                 .limit(count)
             )
-        out = (
+        out = P.collected(
             enriched.withColumn("_raw_score", F.col("score"))
             .select(
                 scalars.normalize_image_url(
@@ -383,7 +385,6 @@ class Engine:
             )
             .orderBy(F.desc("_raw_score"), F.asc("id"))
             .drop("_raw_score")
-            .localCheckpoint(eager=True)
         )
         self._track("search", (time.perf_counter() - t0) * 1000)
         return out
@@ -399,13 +400,12 @@ class Engine:
         hits = self._dense_branch(
             q, count * POSTFILTER_INFLATION, dense_index=dense_ix
         )
-        out = (
+        out = P.collected(
             hits.join(products, "id")
             .filter(F.col(filter_field) == F.lit(filter_value))
             .select("id", "score")
             .orderBy(F.desc("score"), F.asc("id"))
             .limit(count)
-            .localCheckpoint(eager=True)
         )
         self._track("search", (time.perf_counter() - t0) * 1000)
         return out
@@ -437,7 +437,9 @@ class Engine:
 
     # -- ingest / ops ---------------------------------------------------
 
-    def _absorb_locked(self, table_dir: str) -> None:
+    def _absorb_locked(
+        self, table_dir: str, schema: StructType | None = None
+    ) -> None:
         """Upsert a freshly-written product table into the SERVED
         collection; caller MUST hold ``_ingest_lock`` — and must have
         acquired it BEFORE writing ``table_dir`` (the ingest endpoints
@@ -461,7 +463,12 @@ class Engine:
         which cuts lineage to ``table_dir`` — so the ingested parquet
         is safe for the caller to delete once this returns
         (http_shim's load-data path relies on exactly that to clean
-        its scratch dir) — and to the superseded versions."""
+        its scratch dir) — and to the superseded versions.
+
+        ``schema`` is the written table's schema when the caller knows
+        it (the upload path); reading under it spares a footer-reading
+        schema-inference job. The import paths write other columns and
+        leave it to inference."""
         import gc
 
         old_products, old_dense, old_sparse = self._snapshot()
@@ -480,7 +487,10 @@ class Engine:
         # monotonically_increasing_id() reflected neither for
         # multi-part dirs (splits schedule by size), diverging from the
         # reference's in-request-order Qdrant upsert.
-        loaded = self.spark.read.parquet(table_dir)
+        reader = self.spark.read
+        if schema is not None:
+            reader = reader.schema(schema)
+        loaded = reader.parquet(table_dir)
         if {json_source.SRC_FILE_COL, json_source.SRC_POS_COL}.issubset(
             loaded.columns
         ):
@@ -579,7 +589,10 @@ class Engine:
         raw = json_source.read_json_array(self.spark, path)
         with self._ingest_lock:
             n = json_source.load_products(raw, table_dir)
-            self._absorb_locked(table_dir)
+            # the written schema, analyzed lazily: no job
+            self._absorb_locked(
+                table_dir, json_source.transform_products(raw).schema
+            )
         return n
 
     def import_full(self, import_dir: str, table_dir: str) -> int:

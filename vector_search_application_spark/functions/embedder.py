@@ -32,7 +32,7 @@ from __future__ import annotations
 import hashlib
 import math
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..plans.constants import HASH_EMBED_DIM, ROUND_DIGITS  # noqa: F401 (re-exported)
@@ -96,15 +96,16 @@ def embed_postings(
 ) -> DataFrame:
     """(id, dim, comp): L2-normalized signed-hash embedding, exploded.
 
-    One explode + two keyed aggregations (dim sums, then a per-id norm
-    window) — all map-side-combinable, no corpus-wide shuffle beyond
-    the (id, dim) grouping. Docs with no tokens produce no rows (the
-    zero vector's sparse representation).
+    One explode, one exchange: the tokens are repartitioned by id, so
+    the (id, dim) sums and the per-id norm (a ``sum(s*s) OVER
+    (PARTITION BY id)`` window, the DuckDB twin's form) are both
+    partition-local. Docs with no tokens produce no rows (the zero
+    vector's sparse representation).
 
     index=True memoizes + persists the result per (docs plan, params)
     — r13: the embedded corpus IS the dense index (the reference
     stores exactly this in its vector store), so a warm session embeds
-    once instead of re-running tokenize + md5 + two aggregations per
+    once instead of re-running tokenize + md5 + the dim sums per
     execution, the same policy bm25.build_postings applies to the
     sparse index. The driver's gate still embeds per query
     (release_all() clears the memo with the cached blocks). Callers
@@ -135,18 +136,25 @@ def embed_postings(
         f"`{id_col}` AS id", f"explode({P.tokens_spark_sql(f'`{text_col}`')}) AS term"
     )
     h = P.md5_long(F.col("term"))
-    contrib = toks.select("id", hash_dim(h, dim).alias("dim"), hash_sign(h).alias("sign"))
-    sums = contrib.groupBy("id", "dim").agg(F.sum("sign").alias("s"))
-    norms = sums.groupBy("id").agg(F.sqrt(F.sum(F.col("s") * F.col("s"))).alias("nrm"))
-    return (
-        sums.join(norms, "id")
-        .select(
-            "id",
-            "dim",
-            F.when(
-                F.col("nrm") > 0, P.rounded(F.col("s") / F.col("nrm"))
-            ).otherwise(F.lit(0.0)).alias("comp"),
+    contrib = toks.select(
+        "id", hash_dim(h, dim).alias("dim"), hash_sign(h).alias("sign")
+    ).repartition("id")
+    # every s is a sum of +-1.0, an exact integer in any order, so the
+    # norm window's sum equals a grouped one bit for bit
+    sums = (
+        contrib.groupBy("id", "dim")
+        .agg(F.sum("sign").alias("s"))
+        .withColumn(
+            "nrm",
+            F.sqrt(F.sum(F.col("s") * F.col("s")).over(Window.partitionBy("id"))),
         )
+    )
+    return sums.select(
+        "id",
+        "dim",
+        F.when(F.col("nrm") > 0, P.rounded(F.col("s") / F.col("nrm")))
+        .otherwise(F.lit(0.0))
+        .alias("comp"),
     )
 
 

@@ -219,6 +219,20 @@ def local_values(spark, schema: str, rows: list[str]) -> DataFrame:
     return spark.sql(f"SELECT * FROM VALUES {body} AS v({names})")
 
 
+def collected(df: DataFrame) -> DataFrame:
+    """``df``'s rows as a LocalRelation under ``df``'s schema: the plan
+    runs once, and collecting the result, or a limit of it, runs no
+    Spark job. The rows stay in the JVM (two py4j calls, none per row);
+    PySpark's ``createDataFrame(rows)`` would re-parallelize them, and
+    its collect is a job again."""
+    jdf = df._jdf
+    jss = df.sparkSession._jsparkSession
+    return DataFrame(
+        jss.createDataFrame(jdf.collectAsList(), jdf.schema()),
+        df.sparkSession,
+    )
+
+
 def in_sql(col: str, literals: list[str]) -> str:
     """``col IN (...)`` over driver-side SQL literals, as one predicate
     string (one parse, however many values); false for none."""
