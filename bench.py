@@ -137,7 +137,9 @@ def bench_index_builds(spark, sf_dir: str) -> dict[str, float]:
         "bm25_index_build": lambda: bm25.build_postings(
             prods, id_col="id", text_col="sparse_text", persist=False
         ),
-        "dense_index_build": lambda: E.embed_postings(prods, "id", "dense_text"),
+        "dense_index_build": lambda: E.embed_short_postings(
+            prods, "id", "dense_text"
+        ),
         "pq_index_build": pq_build,
     }
     out: dict[str, float] = {}

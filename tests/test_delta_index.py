@@ -116,9 +116,10 @@ def test_load_data_absorbs_without_schema_inference(spark, tmp_path):
 @pytest.fixture(scope="module")
 def cycles(spark, tmp_path_factory):
     """Three write cycles on a fresh engine: a 5-product load-data (3 new
-    ids, 2 updates), then two hybrid reads. Records, per cycle, the jobs
-    of both reads, the served tables' partition counts, the tracked-table
-    and memo sizes and the settled resident-RDD count."""
+    ids, 2 updates), then two hybrid reads. Records the jobs of a hybrid
+    read before any write and, per cycle, the jobs of both reads, the
+    served tables' partition counts, the tracked-table and memo sizes
+    and the settled resident-RDD count."""
     tmp = tmp_path_factory.mktemp("delta_cycles")
     engine = Engine(spark, SF_SMOKE)
     existing = sorted(
@@ -126,6 +127,7 @@ def cycles(spark, tmp_path_factory):
     )
     rec = {"parts": [[df.rdd.getNumPartitions() for df in engine._snapshot()]]}
     engine.query("warm up", "hybrid", 5).collect()
+    rec["fresh"] = len(_jobs(spark, lambda: engine.query("cold widget", "hybrid", 5)))
     for c in range(3):
         batch = [_doc(f"CYC{c}N{i}", f"cycle {c} widget {i}") for i in range(3)]
         batch += [_doc(p, f"cycle {c} bolt") for p in existing[2 * c:2 * c + 2]]
@@ -156,6 +158,14 @@ def test_first_hybrid_after_write_is_warm(cycles):
     checkpoint is not, and a read over it plans one more exchange."""
     for first, warm in cycles["jobs"]:
         assert first <= warm, cycles["jobs"]
+
+
+def test_hybrid_after_write_within_one_job_of_fresh(cycles):
+    """A read over the carried-forward dense index plans at most the one
+    exchange a freshly built index spares: every hybrid read after a
+    write runs at most one job more than on the fresh engine."""
+    for first, warm in cycles["jobs"]:
+        assert max(first, warm) <= cycles["fresh"] + 1, (cycles["fresh"], cycles["jobs"])
 
 
 def test_partition_counts_stay_fixed(cycles):

@@ -374,41 +374,18 @@ def test_lsh_band_keys_expr_parity(spark):
     assert old.sameSemantics(new)
 
 
-def _three_exchange_embed_postings(docs, id_col, text_col, dim):
-    """The replaced embed_postings body, verbatim but for its dim check:
-    (id, dim) sums, a grouped per-id norm and a join back, three
-    exchanges."""
-    toks = docs.filter(F.col(id_col).isNotNull()).selectExpr(
-        f"`{id_col}` AS id", f"explode({P.tokens_spark_sql(f'`{text_col}`')}) AS term"
-    )
-    h = P.md5_long(F.col("term"))
-    contrib = toks.select("id", E.hash_dim(h, dim).alias("dim"), E.hash_sign(h).alias("sign"))
-    sums = contrib.groupBy("id", "dim").agg(F.sum("sign").alias("s"))
-    norms = sums.groupBy("id").agg(F.sqrt(F.sum(F.col("s") * F.col("s"))).alias("nrm"))
-    return (
-        sums.join(norms, "id")
-        .select(
-            "id",
-            "dim",
-            F.when(
-                F.col("nrm") > 0, P.rounded(F.col("s") / F.col("nrm"))
-            ).otherwise(F.lit(0.0)).alias("comp"),
-        )
-    )
-
-
-def test_embed_postings_one_exchange_parity(spark):
-    """embed_postings shuffles once, by id, and its rows equal the
-    three-exchange form's bit for bit, over repeated ids (their tokens
-    pool into one vector), docs with no tokens and a NULL id."""
+def test_embed_short_postings_parity(spark):
+    """embed_short_postings shuffles once, by id, and its rows equal
+    embed_postings' bit for bit, over repeated ids (their tokens pool
+    into one vector), docs with no tokens and a NULL id."""
     docs = spark.createDataFrame(
         [(i % 97, t) for i, t in enumerate(SHAPE_TEXTS * 40)]
         + [(1000, "steel steel valve"), (1000, "valve brass"),
            (1001, "!! --"), (1002, None), (None, "orphan tokens")],
         "doc_id BIGINT, text STRING",
     )
-    new = E.embed_postings(docs, "doc_id", "text")
-    old = _three_exchange_embed_postings(docs, "doc_id", "text", E.HASH_EMBED_DIM)
+    new = E.embed_short_postings(docs, "doc_id", "text")
+    old = E.embed_postings(docs, "doc_id", "text")
     plan = new._jdf.queryExecution().executedPlan().toString()
     assert len(re.findall(r"\bExchange\b", plan)) == 1, plan
     assert new.dtypes == old.dtypes

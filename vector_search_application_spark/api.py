@@ -45,7 +45,6 @@ from collections import OrderedDict
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
 
 from .functions import embedder as E
 from .functions import portable as P
@@ -94,7 +93,9 @@ class Engine:
         # call _snapshot() once and thread the tables down.
         self._serving: tuple[DataFrame, DataFrame, DataFrame] = (
             products,
-            tracked_persist(E.embed_postings(products, "id", "dense_text")),
+            tracked_persist(
+                E.embed_short_postings(products, "id", "dense_text")
+            ),
             bm25.build_postings(
                 products, id_col="id", text_col="sparse_text"
             ),
@@ -437,14 +438,13 @@ class Engine:
 
     # -- ingest / ops ---------------------------------------------------
 
-    def _absorb_locked(
-        self, table_dir: str, schema: StructType | None = None
-    ) -> None:
-        """Upsert a freshly-written product table into the SERVED
-        collection; caller MUST hold ``_ingest_lock`` — and must have
-        acquired it BEFORE writing ``table_dir`` (the ingest endpoints
-        do), because two imports targeting the same dir must not
-        interleave one's write with the other's read-merge-swap: the
+    def _absorb_locked(self, loaded: DataFrame) -> None:
+        """Upsert a freshly-written product table, ``loaded`` (its
+        parquet read back), into the SERVED collection; caller MUST
+        hold ``_ingest_lock`` — and must have acquired it BEFORE
+        writing the table (the ingest endpoints do), because two
+        imports targeting the same dir must not interleave one's
+        write with the other's read-merge-swap: the
         later write would clobber the earlier rows before they are
         absorbed, reproducing the lost-update this lock exists to
         prevent. The reference's load-data / import endpoints write
@@ -460,14 +460,14 @@ class Engine:
         (bm25.upsert_postings), ready before the swap, so the first
         reads after a write rebuild nothing. Each version is an eager
         localCheckpoint at the partition count of the one before,
-        which cuts lineage to ``table_dir`` — so the ingested parquet
-        is safe for the caller to delete once this returns
+        which cuts lineage to the written table — so the ingested
+        parquet is safe for the caller to delete once this returns
         (http_shim's load-data path relies on exactly that to clean
         its scratch dir) — and to the superseded versions.
 
-        ``schema`` is the written table's schema when the caller knows
-        it (the upload path); reading under it spares a footer-reading
-        schema-inference job. The import paths write other columns and
+        The upload path reads its table back under the schema it wrote
+        (json_source.load_products), sparing a footer-reading
+        schema-inference job; the import paths write other columns and
         leave it to inference."""
         import gc
 
@@ -477,7 +477,7 @@ class Engine:
         # source file path + per-partition position, monotonic within
         # each file — see import_full's docstring) — the only
         # point where it still exists, because the parquet part-file
-        # order of table_dir is the scan's size-descending split
+        # order of the written table is the scan's size-descending split
         # packing, not the name-order a directory iterator processes
         # files in. Tables without the stamp (the single-file upload
         # scratch, delta-merged tables) fall back to parquet read
@@ -487,10 +487,6 @@ class Engine:
         # monotonically_increasing_id() reflected neither for
         # multi-part dirs (splits schedule by size), diverging from the
         # reference's in-request-order Qdrant upsert.
-        reader = self.spark.read
-        if schema is not None:
-            reader = reader.schema(schema)
-        loaded = reader.parquet(table_dir)
         if {json_source.SRC_FILE_COL, json_source.SRC_POS_COL}.issubset(
             loaded.columns
         ):
@@ -529,7 +525,7 @@ class Engine:
         # an id may repeat WITHIN one upload; the reference's Qdrant
         # upsert applies points in order so the LAST wins. Without
         # this both rows land in the served corpus: search returns
-        # the id twice, embed_postings sums both docs into one
+        # the id twice, the embedder sums both docs into one
         # phantom vector, and build_postings' first('doc_len') turns
         # BM25 run-dependent.
         from pyspark.sql import Window as _W
@@ -543,7 +539,7 @@ class Engine:
             .drop("__file", "__pos", "__rn")
         )
         # Materialize AND cut lineage: the loaded plan's FileScan pins
-        # table_dir's current file listing, and the normal import ->
+        # the written table's current file listing, and the normal import ->
         # importdelta flow overwrites those files next call — a lazy
         # persist would later re-read deleted parquet and fail with
         # FileNotFoundException (import_delta localCheckpoints for the
@@ -556,7 +552,7 @@ class Engine:
         # over new_products (tests/test_delta_index.py).
         batch = new_products.filter(touched)
         new_dense = carry_forward(
-            old_dense, keep, E.embed_postings(batch, "id", "dense_text")
+            old_dense, keep, E.embed_short_postings(batch, "id", "dense_text")
         )
         new_sparse = bm25.upsert_postings(
             old_sparse, batch, ids, id_col="id", text_col="sparse_text"
@@ -588,17 +584,14 @@ class Engine:
         write and its absorb (lost update / mid-scan delete)."""
         raw = json_source.read_json_array(self.spark, path)
         with self._ingest_lock:
-            n = json_source.load_products(raw, table_dir)
-            # the written schema, analyzed lazily: no job
-            self._absorb_locked(
-                table_dir, json_source.transform_products(raw).schema
-            )
+            loaded, n = json_source.load_products(raw, table_dir)
+            self._absorb_locked(loaded)
         return n
 
     def import_full(self, import_dir: str, table_dir: str) -> int:
         with self._ingest_lock:
             n = json_source.import_full(self.spark, import_dir, table_dir)
-            self._absorb_locked(table_dir)
+            self._absorb_locked(self.spark.read.parquet(table_dir))
         return n
 
     def import_delta(self, import_dir: str, table_dir: str) -> dict:
@@ -606,7 +599,7 @@ class Engine:
             counts = json_source.import_delta(
                 self.spark, import_dir, table_dir
             )
-            self._absorb_locked(table_dir)
+            self._absorb_locked(self.spark.read.parquet(table_dir))
         return counts
 
     def export(self, path: str) -> tuple[str, int]:

@@ -196,13 +196,15 @@ def transform_products(raw: DataFrame, extra_cols: tuple[str, ...] = ()) -> Data
     )
 
 
-def load_products(raw: DataFrame, table_dir: str) -> int:
+def load_products(raw: DataFrame, table_dir: str) -> tuple[DataFrame, int]:
     """S3+T1/T2/T3: the load-data transform stack over uploaded JSON.
-    The written rows are counted under the schema just written, which
-    spares the re-read a schema-inference job."""
+    Returns the written table, read back under the schema just written
+    (which spares the re-read a schema-inference job), and its row
+    count."""
     out = transform_products(raw)
     out.write.mode("overwrite").parquet(table_dir)
-    return out.sparkSession.read.schema(out.schema).parquet(table_dir).count()
+    written = out.sparkSession.read.schema(out.schema).parquet(table_dir)
+    return written, written.count()
 
 
 def export_documents(
