@@ -25,7 +25,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 from pyspark.sql import functions as F
 
@@ -102,9 +101,10 @@ BATCH_K = 10
 def _force(df) -> int:
     """Execute the plan fully via collect(): headline timings
     deliberately INCLUDE result serialization to the driver — the
-    serving tier returns rows, so the bench does too. (The scale probe
-    instead forces via a one-row xxhash64 aggregate because its outputs
-    are corpus-sized; headline results here are top-k/report-sized.)"""
+    serving tier returns rows, so the bench does too. (Batch, build and
+    probe rows force through calibration.force, a one-row count + hash
+    aggregate, because their outputs are corpus-sized; headline results
+    here are top-k/report-sized.)"""
     rows = df.collect()
     return len(rows)
 
@@ -112,24 +112,17 @@ def _force(df) -> int:
 def bench_index_builds(spark, sf_dir: str) -> dict[str, float]:
     """Cold index-build cost — the number the warm-cache policy above
     deliberately excludes from query timings (an honest bench reports
-    both). spark.catalog.clearCache() before each rep: CacheManager
-    substitutes any cached plan subtree by canonicalized match, so
-    without it a 'build' over the persisted postings is a cache read.
-    Forcing via bit_xor(xxhash64(all cols)) computes every output column
-    (count() would let Catalyst prune the expensive ones)."""
-    from vector_search_application_spark.functions import cache as _cache
+    both). Each rep is cold (``timed(cold=True)``: release_all()
+    unpersists the tracked tables and forgets the plan memo — without
+    it a 'build' over the persisted postings, or the memoized
+    pq_codebook/pq_codes, is a cache read) and hash-forced, so no
+    output column is pruned."""
     from vector_search_application_spark.functions import embedder as E
     from vector_search_application_spark.operators import ann, bm25
 
     prods = corpus.products(spark, sf_dir)
 
     def pq_build():
-        # release_all(): pq_codebook/pq_codes are plan-memoized (r13) —
-        # without forgetting the memo the "build" would return the
-        # already-persisted plans and time a cache read. This prices
-        # the codebook+codes build the warm pq/ivfpq rows amortize
-        # (r13 VERDICT "What's wrong" #2).
-        _cache.release_all()
         vecs = corpus.vectors(spark, sf_dir)
         return ann.pq_codes(vecs, ann.pq_codebook(vecs))
 
@@ -144,16 +137,8 @@ def bench_index_builds(spark, sf_dir: str) -> dict[str, float]:
     }
     out: dict[str, float] = {}
     for name, builder in builds.items():
-        best = float("inf")
-        for _ in range(2):
-            spark.catalog.clearCache()
-            df = builder()
-            # bit_xor, not sum: ANSI mode overflows on summed hashes
-            probe = F.bit_xor(F.xxhash64(*[F.col(c) for c in df.columns]))
-            t0 = time.perf_counter()
-            df.agg(probe.alias("h")).collect()
-            best = min(best, time.perf_counter() - t0)
-        out[name] = round(best, 3)
+        secs, _ = CAL.timed(lambda: CAL.force(builder()), 2, cold=True)
+        out[name] = round(min(secs), 3)
         print(f"  {name}: {out[name]}s", file=sys.stderr, flush=True)
     return out
 
@@ -178,30 +163,22 @@ def bench_ivf_serving(spark, sf_dir: str) -> dict[str, float]:
     try:
         path = os.path.join(root, "vectors")
         vecs = corpus.vectors(spark, sf_dir)
-        t0 = time.perf_counter()
-        ann.write_ivf_indexed(vecs, path)
-        out["ivf_index_build"] = round(time.perf_counter() - t0, 3)
+        (sec,), _ = CAL.timed(lambda: ann.write_ivf_indexed(vecs, path))
+        out["ivf_index_build"] = round(sec, 3)
         q = corpus.query_vector(spark, sf_dir, QUERY_VEC_ID)
-        best = float("inf")
-        for _ in range(3):
-            t0 = time.perf_counter()
-            df = ann.ivf_indexed_topk(spark, path, q)
-            df.agg(
-                F.bit_xor(F.xxhash64(*[F.col(c) for c in df.columns]))
-            ).collect()
-            best = min(best, time.perf_counter() - t0)
-        out["ivf_index_lookup_warm"] = round(best, 3)
+        secs, _ = CAL.timed(
+            lambda: CAL.force(ann.ivf_indexed_topk(spark, path, q)), 3
+        )
+        out["ivf_index_lookup_warm"] = round(min(secs), 3)
         # cold IVF-PQ layout build (r14, mirroring ivf_index_build):
-        # release_all() first so the memoized cents/assignment/codebook
-        # from the IVF build above don't hide the true build cost —
-        # this row prices what the warm ivfpq/pq rows amortize
-        from vector_search_application_spark.functions import cache as _cache
-
-        _cache.release_all()
+        # cold so the memoized cents/assignment/codebook from the IVF
+        # build above don't hide the true build cost — this row prices
+        # what the warm ivfpq/pq rows amortize
         pq_path = os.path.join(root, "vectors_pq")
-        t0 = time.perf_counter()
-        ann.write_ivfpq_indexed(vecs, pq_path)
-        out["ivfpq_index_build"] = round(time.perf_counter() - t0, 3)
+        (sec,), _ = CAL.timed(
+            lambda: ann.write_ivfpq_indexed(vecs, pq_path), cold=True
+        )
+        out["ivfpq_index_build"] = round(sec, 3)
     finally:
         shutil.rmtree(root, ignore_errors=True)
     for name, sec in out.items():
@@ -232,7 +209,7 @@ def bench_dense_batch(spark, sf_dir: str) -> tuple[float, float]:
 
 
 def _time_batch(result, n_queries: int, reps: int = 3) -> tuple[float, float]:
-    """(best, median) wall seconds over reps for a batch plan.
+    """(best, median) wall seconds over reps for a hash-forced batch plan.
 
     The row-count assert is a REAL floor, not `n >= 0`: every batch
     here is built so each of its n_queries queries matches at least one
@@ -242,17 +219,12 @@ def _time_batch(result, n_queries: int, reps: int = 3) -> tuple[float, float]:
     corpus (the lpad-truncation incident silently collapsed exact qps
     to the timing of an empty plan once) — that must fail the bench, not
     produce a fast vacuous number."""
-    secs = []
-    for _ in range(reps):
-        t0 = time.perf_counter()
-        n = result.count()
-        secs.append(time.perf_counter() - t0)
-        assert n >= n_queries, (
-            f"batch returned {n} rows for {n_queries} queries — query "
-            "construction no longer matches the corpus"
-        )
-    secs.sort()
-    return secs[0], secs[len(secs) // 2]
+    secs, (n, _) = CAL.timed(lambda: CAL.force(result), reps)
+    assert n >= n_queries, (
+        f"batch returned {n} rows for {n_queries} queries — query "
+        "construction no longer matches the corpus"
+    )
+    return min(secs), CAL.median(secs)
 
 
 def bench_batch_throughput(spark, sf_dir: str) -> tuple[dict, dict]:
@@ -448,14 +420,9 @@ def main() -> None:
         # steady-state service latencies, so best is the honest
         # steady-state measurement and best-vs-median is the spread
         # that separates contention noise from a real regression.
-        secs = []
-        for _ in range(3):
-            t0 = time.perf_counter()
-            _force(fn(spark, sf_dir))
-            secs.append(time.perf_counter() - t0)
-        secs.sort()
-        timings[name] = round(secs[0], 3)
-        medians[name] = round(secs[1], 3)
+        secs, _ = CAL.timed(lambda: _force(fn(spark, sf_dir)), 3)
+        timings[name] = round(min(secs), 3)
+        medians[name] = round(CAL.median(secs), 3)
         print(
             f"  {name}: {timings[name]}s (median {medians[name]}s)",
             file=sys.stderr,
@@ -496,8 +463,9 @@ def main() -> None:
         for fam in worst_ms
     }
 
-    # index builds LAST: each rep clears the whole plan cache, which
-    # would otherwise re-cold the persisted indexes mid-bench
+    # index builds LAST: each cold rep releases every tracked table and
+    # the plan memo, which would otherwise re-cold the persisted
+    # indexes mid-bench
     timings.update(bench_index_builds(spark, sf_dir))
     # IVF build/serving split (adds two keys r11+: cross-round totals
     # gain ~the build wall once — noted in the README ledger)
@@ -505,24 +473,10 @@ def main() -> None:
 
     cal_end = CAL.calibration_secs(spark, reps=5)
     print(f"  calibration(end): {cal_end}", file=sys.stderr, flush=True)
-    cal_all = cal_start + cal_end
-    cal_med = CAL.median(cal_all)
-    cal_ratio = round(cal_med / CAL.CALIBRATION_REF_SEC, 3)
-    calibration = {
-        "start_secs": cal_start,
-        "end_secs": cal_end,
-        "median": round(cal_med, 4),
-        "iqr": CAL.iqr(cal_all),
-        "ref_sec": CAL.CALIBRATION_REF_SEC,
-        # >1 = machine slower than the pinned healthy-window nominal;
-        # multiply raw qps by this to get the cross-round-comparable number
-        "ratio_vs_ref": cal_ratio,
-        "start_end_spread": round(
-            max(CAL.median(cal_start), CAL.median(cal_end))
-            / max(min(CAL.median(cal_start), CAL.median(cal_end)), 1e-9),
-            3,
-        ),
-    }
+    calibration = CAL.bracket(cal_start, cal_end)
+    # >1 = machine slower than the pinned healthy-window nominal;
+    # multiply raw qps by this to get the cross-round-comparable number
+    cal_ratio = calibration["ratio_vs_ref"]
     qps_normalized = {
         f"{k}_normalized": round(v["qps"] * cal_ratio, 1) for k, v in gates.items()
     }
@@ -537,15 +491,10 @@ def main() -> None:
             file=sys.stderr,
             flush=True,
         )
-    # Window-health gate (r7 VERDICT task 7): this box has multi-minute
-    # windows where identical plans run 5-6x slower. A start-vs-end
-    # calibration spread past 1.5 means the machine's speed CHANGED
-    # mid-bench — per-query medians then mix two regimes and the
-    # normalized numbers overstate interpreted-HOF costs. Flag in the
-    # payload + stderr (the driver records stdout; a refusing bench
-    # would leave the round with no numbers at all) so the reader and
-    # any interactive run know to rerun rather than publish.
-    calibration["degraded_window"] = calibration["start_end_spread"] > 1.5
+    # Window-health gate: bracket() flags degraded_window when the
+    # start-vs-end spread passes 1.5 — per-query medians then mix two
+    # speed regimes. Flagged in the payload + stderr, never refused (a
+    # refusing bench would leave the run with no numbers at all).
     if calibration["degraded_window"]:
         print(
             "WARNING: calibration start/end spread "

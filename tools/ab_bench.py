@@ -44,48 +44,42 @@ HERE = os.path.dirname(os.path.abspath(__file__))
 REPO = os.path.dirname(HERE)
 
 # runs inside each measurement subprocess, cwd = the code tree to
-# measure; forces the plan via a one-row hash aggregate (same policy
-# as tools/scale_probe.py) so corpus-sized outputs don't time a
-# driver collect
+# measure. The harness is THIS tree's calibration.py, loaded by path
+# (argv[4]), so both sides time, force and calibrate identically even
+# when the ref's package predates the harness; forcing is its one-row
+# hash aggregate, so corpus-sized outputs don't time a driver collect
 RUNNER = r"""
-import json, os, sys, time
+import importlib.util, json, os, sys
 sys.path.insert(0, os.getcwd())
 os.environ.setdefault("SPARK_LOCAL_IP", "127.0.0.1")
-from pyspark.sql import functions as F
 from vector_search_application_spark.session import get_spark
 from vector_search_application_spark.plans.registry import REGISTRY
-from vector_search_application_spark import calibration as CAL
 
-name, sf_dir, reps = sys.argv[1], sys.argv[2], int(sys.argv[3])
+name, sf_dir, reps, harness = sys.argv[1:5]
+spec = importlib.util.spec_from_file_location("ab_harness", harness)
+CAL = importlib.util.module_from_spec(spec)
+spec.loader.exec_module(CAL)
 spark = get_spark("ab-bench")
 fn = {d.name: d.spark for d in REGISTRY}[name]
 
-def force():
-    df = fn(spark, sf_dir)
-    df.agg(F.bit_xor(F.xxhash64(*[F.col(c) for c in df.columns]))).collect()
+def run():
+    CAL.force(fn(spark, sf_dir))
 
-force()  # warmup rep (JIT/codegen/broadcast machinery)
+run()  # warmup rep (JIT/codegen/broadcast machinery)
 cal_start = CAL.calibration_secs(spark, reps=3)
-secs = []
-for _ in range(reps):
-    t0 = time.perf_counter()
-    force()
-    secs.append(time.perf_counter() - t0)
-secs.sort()
-cal_end = CAL.calibration_secs(spark, reps=3)
-cal = sorted(cal_start + cal_end)
-cal_med = cal[len(cal) // 2]
-ratio = cal_med / CAL.CALIBRATION_REF_SEC
+secs, _ = CAL.timed(run, int(reps))
+ratio = CAL.bracket(cal_start, CAL.calibration_secs(spark, reps=3))["ratio_vs_ref"]
 print("AB_RESULT " + json.dumps({
-    "best": round(secs[0], 3),
-    "median": round(secs[len(secs) // 2], 3),
-    "cal_ratio": round(ratio, 3),
+    "best": round(min(secs), 3),
+    "median": round(CAL.median(secs), 3),
+    "cal_ratio": ratio,
     # nominal-seconds: divide by the window speed so cross-window
     # rows compare (ratio < 1 = faster-than-reference window)
-    "best_nominal": round(secs[0] / ratio, 3) if ratio > 0 else None,
+    "best_nominal": round(min(secs) / ratio, 3) if ratio > 0 else None,
 }))
 spark.stop()
 """
+HARNESS = os.path.join(REPO, "vector_search_application_spark", "calibration.py")
 
 
 def materialize_ref(ref: str) -> str:
@@ -103,7 +97,8 @@ def measure(label: str, tree: str, query: str, sf_dir: str,
     env = dict(os.environ)
     env.pop("PYTHONPATH", None)  # the tree on cwd/sys.path is the code
     p = subprocess.run(
-        [sys.executable, "-c", RUNNER, query, sf_dir, str(runner_reps)],
+        [sys.executable, "-c", RUNNER, query, sf_dir, str(runner_reps),
+         HARNESS],
         cwd=tree, env=env, capture_output=True, text=True,
     )
     for line in p.stdout.splitlines():

@@ -23,7 +23,6 @@ import os
 import shutil
 import sys
 import tempfile
-import time
 
 os.environ.setdefault("SPARK_LOCAL_IP", "127.0.0.1")
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -190,6 +189,9 @@ def main(ks: list[int]) -> int:
     # the streaming section before this default was raised. Explicit
     # SPARK_DRIVER_MEM still wins.
     os.environ.setdefault("SPARK_DRIVER_MEM", "48g")
+    from pyspark.sql import functions as F
+
+    from vector_search_application_spark import calibration as CAL
     from vector_search_application_spark.session import get_spark
     from vector_search_application_spark.plans.registry import REGISTRY
     from vector_search_application_spark.functions.cache import release_all
@@ -231,15 +233,16 @@ def main(ks: list[int]) -> int:
                   file=sys.stderr, flush=True)
         else:
             sf_dir = os.path.join(tempfile.mkdtemp(prefix=f"scale_probe_x{k}_"))
-            t0 = time.perf_counter()
-            build_scaled_dir(spark, sf_dir, k)
+            (build_sec,), _ = CAL.timed(
+                lambda: build_scaled_dir(spark, sf_dir, k)
+            )
             built_dirs[k] = sf_dir
             # print the path so SPARK_GRAFT_PROBE_DIR_X{k} reuse is
             # actually usable; removed at exit unless KEEP is set (a
             # leaked x100 corpus is tens of GB of /tmp per run)
             keep = os.environ.get("SPARK_GRAFT_PROBE_KEEP") == "1"
             print(
-                f"built x{k} corpus in {time.perf_counter()-t0:.1f}s at "
+                f"built x{k} corpus in {build_sec:.1f}s at "
                 f"{sf_dir}"
                 + ("" if keep else
                    " (removed at exit; SPARK_GRAFT_PROBE_KEEP=1 keeps it"
@@ -252,33 +255,17 @@ def main(ks: list[int]) -> int:
         # has 5-6x slow windows, so every K's timings carry the same-
         # loop calibration; a K whose cal ratio is far from 1 ran in a
         # degraded window and its RATIOS are suspect, not its plans.
-        from vector_search_application_spark import calibration as CAL
-
-        # calibration_secs runs its own untimed warmup rep per session
+        # (calibration_secs runs its own untimed warmup rep per session)
         cal_secs = CAL.calibration_secs(spark, reps=3)
-        cal_med = CAL.median(cal_secs)
         print(f"  x{k} calibration: {cal_secs} (ratio "
-              f"{cal_med / CAL.CALIBRATION_REF_SEC:.2f}x of nominal)",
+              f"{CAL.ratio_vs_ref(cal_secs):.2f}x of nominal)",
               file=sys.stderr, flush=True)
 
         timings: dict[str, float] = {}
         for name in PROBE_QUERIES:
-            from pyspark.sql import functions as F
-
             fn = by_name[name]
-            best = float("inf")
-            for _ in range(2):
-                t0 = time.perf_counter()
-                # force by hashing every output column into one row:
-                # computes the full distributed plan without timing a
-                # multi-million-row driver collect (bit_xor, not sum —
-                # ANSI mode overflows on summed hashes)
-                df = fn(spark, sf_dir)
-                df.agg(
-                    F.bit_xor(F.xxhash64(*[F.col(c) for c in df.columns]))
-                ).collect()
-                best = min(best, time.perf_counter() - t0)
-            timings[name] = round(best, 3)
+            secs, _ = CAL.timed(lambda: CAL.force(fn(spark, sf_dir)), 2)
+            timings[name] = round(min(secs), 3)
             print(f"  x{k} {name}: {timings[name]}s", file=sys.stderr, flush=True)
         # --- IVF per-stage rows (r11 VERDICT task 2): the COLD
         # ivf_topk/ivfpq_topk rows are gone from the headline table —
@@ -302,84 +289,59 @@ def main(ks: list[int]) -> int:
         )
 
         ivf_stage_reps: dict[str, list[float]] = {}
+
+        def stage(row_name, fn, cold=False):
+            """Best-of-2 row that also records both reps; ``cold``
+            releases the memoized/persisted intermediates per rep so a
+            build row keeps measuring the one-time build, not a write of
+            the previous rep's cached result."""
+            reps = [round(t, 3) for t in CAL.timed(fn, 2, cold=cold)[0]]
+            ivf_stage_reps[row_name] = reps
+            timings[row_name] = min(reps)
+            print(f"  x{k} {row_name}: {reps}", file=sys.stderr, flush=True)
+
         vecs = _corpus.vectors(spark, sf_dir)
         cent_tbl = _ann.centroid_table(vecs)
-        reps = []
-        for _ in range(2):
-            t0 = time.perf_counter()
-            # the production argmax arithmetic (r13): row vector
-            # pre-cast to array<double> in its own projection so the
-            # per-(row, centroid) lambda casts SimplifyCasts away —
-            # built inline (not via ivf_assign_tbl) so the memo cannot
-            # serve rep 2 and the row keeps measuring the raw scan
-            assigned = (
-                vecs.withColumn("__vd", F.col("embedding").cast("array<double>"))
-                .crossJoin(F.broadcast(cent_tbl))
-                .selectExpr(
-                    "vec_id AS id",
-                    f"{_ann._cell_over_cents_sql('__vd')} AS cell",
-                )
+        # the production argmax arithmetic (r13): row vector pre-cast to
+        # array<double> in its own projection so the per-(row, centroid)
+        # lambda casts SimplifyCasts away — built inline per rep (not
+        # via ivf_assign_tbl) so the memo cannot serve rep 2 and the row
+        # keeps measuring the raw scan
+        stage("ivf_assign_scan", lambda: CAL.force(
+            vecs.withColumn("__vd", F.col("embedding").cast("array<double>"))
+            .crossJoin(F.broadcast(cent_tbl))
+            .selectExpr(
+                "vec_id AS id",
+                f"{_ann._cell_over_cents_sql('__vd')} AS cell",
             )
-            assigned.agg(F.bit_xor(F.xxhash64("id", "cell"))).collect()
-            reps.append(round(time.perf_counter() - t0, 3))
-        ivf_stage_reps["ivf_assign_scan"] = reps
-        timings["ivf_assign_scan"] = min(reps)
-        print(f"  x{k} ivf_assign_scan: {reps}", file=sys.stderr, flush=True)
+        ))
 
         ivf_root = tempfile.mkdtemp(prefix=f"probe_ivf_x{k}_")
         try:
-            reps = []
-            for rep_i in range(2):
-                # r13: ann memoizes+persists the cell assignment (the
-                # warm-serving policy) — release per rep so this row
-                # keeps measuring the COLD one-time build, not a write
-                # of the previous rep's cached assignment
-                release_all()
-                ivf_dir = os.path.join(ivf_root, f"vectors{rep_i}")
-                t0 = time.perf_counter()
-                _ann.write_ivf_indexed(vecs, ivf_dir)
-                reps.append(round(time.perf_counter() - t0, 3))
-            ivf_stage_reps["ivf_index_build"] = reps
-            timings["ivf_index_build"] = min(reps)
-            print(f"  x{k} ivf_index_build: {reps}",
-                  file=sys.stderr, flush=True)
+            ivf_dirs = iter(
+                os.path.join(ivf_root, f"vectors{i}") for i in range(2)
+            )
+            stage("ivf_index_build",
+                  lambda: _ann.write_ivf_indexed(vecs, next(ivf_dirs)),
+                  cold=True)
             q = _corpus.query_vector(spark, sf_dir, _QVID)
             ivf_dir = os.path.join(ivf_root, "vectors1")
-            reps = []
-            for _ in range(2):
-                t0 = time.perf_counter()
-                df = _ann.ivf_indexed_topk(spark, ivf_dir, q)
-                df.agg(
-                    F.bit_xor(F.xxhash64(*[F.col(c) for c in df.columns]))
-                ).collect()
-                reps.append(round(time.perf_counter() - t0, 3))
-            ivf_stage_reps["ivf_index_lookup_warm"] = reps
-            timings["ivf_index_lookup_warm"] = min(reps)
-            print(f"  x{k} ivf_index_lookup_warm: {reps}",
-                  file=sys.stderr, flush=True)
+            stage("ivf_index_lookup_warm",
+                  lambda: CAL.force(_ann.ivf_indexed_topk(spark, ivf_dir, q)))
             # IVF-PQ serving split (r12): same build/query separation
             # for the quantized layout — codes partitioned by cell,
-            # ADC reads codes only, rescore fetches vectors
+            # ADC reads codes only, rescore fetches vectors; the build
+            # is one cold rep (drops the memoized assignment/codes)
             pq_dir = os.path.join(ivf_root, "ivfpq")
-            release_all()  # cold build: drop the memoized assignment/codes
-            t0 = time.perf_counter()
-            _ann.write_ivfpq_indexed(vecs, pq_dir)
-            timings["ivfpq_index_build"] = round(time.perf_counter() - t0, 3)
+            (sec,), _ = CAL.timed(
+                lambda: _ann.write_ivfpq_indexed(vecs, pq_dir), cold=True
+            )
+            timings["ivfpq_index_build"] = round(sec, 3)
             print(f"  x{k} ivfpq_index_build: "
                   f"{timings['ivfpq_index_build']}s",
                   file=sys.stderr, flush=True)
-            reps = []
-            for _ in range(2):
-                t0 = time.perf_counter()
-                df = _ann.ivfpq_indexed_topk(spark, pq_dir, q)
-                df.agg(
-                    F.bit_xor(F.xxhash64(*[F.col(c) for c in df.columns]))
-                ).collect()
-                reps.append(round(time.perf_counter() - t0, 3))
-            ivf_stage_reps["ivfpq_index_lookup_warm"] = reps
-            timings["ivfpq_index_lookup_warm"] = min(reps)
-            print(f"  x{k} ivfpq_index_lookup_warm: {reps}",
-                  file=sys.stderr, flush=True)
+            stage("ivfpq_index_lookup_warm",
+                  lambda: CAL.force(_ann.ivfpq_indexed_topk(spark, pq_dir, q)))
             # batched warm lookups over the SAME persisted layouts
             # (r12 VERDICT task 4: the serving shape for query
             # batches, 20 queries per plan — the row the r12 README
@@ -394,20 +356,8 @@ def main(ks: list[int]) -> int:
                 ("ivfpq_index_lookup_batch_warm",
                  _ann.ivfpq_indexed_topk_batch, pq_dir),
             ):
-                reps = []
-                for _ in range(2):
-                    t0 = time.perf_counter()
-                    df = fn(spark, layout_dir, qbatch)
-                    df.agg(
-                        F.bit_xor(
-                            F.xxhash64(*[F.col(c) for c in df.columns])
-                        )
-                    ).collect()
-                    reps.append(round(time.perf_counter() - t0, 3))
-                ivf_stage_reps[row_name] = reps
-                timings[row_name] = min(reps)
-                print(f"  x{k} {row_name}: {reps}",
-                      file=sys.stderr, flush=True)
+                stage(row_name,
+                      lambda: CAL.force(fn(spark, layout_dir, qbatch)))
         finally:
             shutil.rmtree(ivf_root, ignore_errors=True)
         # free the batch queries' persisted intermediates BEFORE the
@@ -422,11 +372,11 @@ def main(ks: list[int]) -> int:
         # embeds the one-time postings build (76s cold vs 4.85s warm in
         # the r12 adjudication) — a build cost headlined as query
         # scaling. Time the stages apart: bm25_postings_build is the
-        # tokenize + (id, term) aggregation alone (cold, cache released
-        # per rep so CacheManager can't serve the previous rep's
-        # materialization); bm25_topk_warm scores the golden query
-        # against the persisted postings — the per-query serving number
-        # a deployment pays after amortizing the index.
+        # tokenize + (id, term) aggregation alone (cold per rep so
+        # CacheManager can't serve the previous rep's materialization);
+        # bm25_topk_warm scores the golden query against the persisted
+        # postings — the per-query serving number a deployment pays
+        # after amortizing the index.
         from vector_search_application_spark.operators import bm25 as _bm25
         from vector_search_application_spark.plans.constants import (
             K as _K,
@@ -434,35 +384,15 @@ def main(ks: list[int]) -> int:
         )
 
         docs = _corpus.docs(spark, sf_dir)
-        reps = []
-        for _ in range(2):
-            release_all()
-            t0 = time.perf_counter()
-            p = _bm25.build_postings(docs, persist=False)
-            p.agg(
-                F.bit_xor(F.xxhash64("id", "term", "tf", "doc_len"))
-            ).collect()
-            reps.append(round(time.perf_counter() - t0, 3))
-        ivf_stage_reps["bm25_postings_build"] = reps
-        timings["bm25_postings_build"] = min(reps)
-        print(f"  x{k} bm25_postings_build: {reps}",
-              file=sys.stderr, flush=True)
+        stage("bm25_postings_build",
+              lambda: CAL.force(_bm25.build_postings(docs, persist=False)),
+              cold=True)
         postings = _bm25.build_postings(docs)  # the persisted index
         postings.count()  # materialize OUTSIDE the timed window
-        reps = []
-        for _ in range(2):
-            t0 = time.perf_counter()
-            scored = _bm25.bm25_score_terms(
-                postings, _bm25.query_terms(spark, _QTEXT)
-            )
-            df = scored.orderBy(F.desc("score"), F.asc("id")).limit(_K)
-            df.agg(
-                F.bit_xor(F.xxhash64(*[F.col(c) for c in df.columns]))
-            ).collect()
-            reps.append(round(time.perf_counter() - t0, 3))
-        ivf_stage_reps["bm25_topk_warm"] = reps
-        timings["bm25_topk_warm"] = min(reps)
-        print(f"  x{k} bm25_topk_warm: {reps}", file=sys.stderr, flush=True)
+        stage("bm25_topk_warm", lambda: CAL.force(
+            _bm25.bm25_score_terms(postings, _bm25.query_terms(spark, _QTEXT))
+            .orderBy(F.desc("score"), F.asc("id")).limit(_K)
+        ))
         release_all()
         # persisted-layout twin (r13): write_bm25_indexed is the
         # restart-surviving one-time build (term-bucketed postings +
@@ -470,30 +400,16 @@ def main(ks: list[int]) -> int:
         # the exact IVF build/lookup split applied to the sparse index
         bm25_root = tempfile.mkdtemp(prefix=f"probe_bm25_x{k}_")
         try:
-            reps = []
-            for rep_i in range(2):
-                release_all()  # cold build per rep, as bm25_postings_build
-                bdir = os.path.join(bm25_root, f"postings{rep_i}")
-                t0 = time.perf_counter()
-                _bm25.write_bm25_indexed(docs, bdir)
-                reps.append(round(time.perf_counter() - t0, 3))
-            ivf_stage_reps["bm25_index_build"] = reps
-            timings["bm25_index_build"] = min(reps)
-            print(f"  x{k} bm25_index_build: {reps}",
-                  file=sys.stderr, flush=True)
+            bdirs = iter(
+                os.path.join(bm25_root, f"postings{i}") for i in range(2)
+            )
+            stage("bm25_index_build",
+                  lambda: _bm25.write_bm25_indexed(docs, next(bdirs)),
+                  cold=True)
             bdir = os.path.join(bm25_root, "postings1")
-            reps = []
-            for _ in range(2):
-                t0 = time.perf_counter()
-                df = _bm25.bm25_indexed_topk(spark, bdir, _QTEXT, _K)
-                df.agg(
-                    F.bit_xor(F.xxhash64(*[F.col(c) for c in df.columns]))
-                ).collect()
-                reps.append(round(time.perf_counter() - t0, 3))
-            ivf_stage_reps["bm25_index_lookup_warm"] = reps
-            timings["bm25_index_lookup_warm"] = min(reps)
-            print(f"  x{k} bm25_index_lookup_warm: {reps}",
-                  file=sys.stderr, flush=True)
+            stage("bm25_index_lookup_warm", lambda: CAL.force(
+                _bm25.bm25_indexed_topk(spark, bdir, _QTEXT, _K)
+            ))
         finally:
             shutil.rmtree(bm25_root, ignore_errors=True)
         release_all()
@@ -512,13 +428,11 @@ def main(ks: list[int]) -> int:
         _nanos_prev = spark.conf.get(_nanos_key, None)
         spark.conf.set(_nanos_key, "true")
         try:
-            t0 = time.perf_counter()
-            sess = ingest.stream_sessionize(
+            (sec,), n_sessions = CAL.timed(lambda: ingest.stream_sessionize(
                 spark, os.path.join(sf_dir, "events.parquet"),
                 state_partitions=8,
-            )
-            n_sessions = sess.count()
-            stream_row["sessionize_sec"] = round(time.perf_counter() - t0, 3)
+            ).count())
+            stream_row["sessionize_sec"] = round(sec, 3)
             stream_row["sessions"] = n_sessions
             stream_row["session_state_rows"] = max(
                 (
@@ -528,10 +442,10 @@ def main(ks: list[int]) -> int:
                 ),
                 default=0,
             )
-            t0 = time.perf_counter()
-            dedup = ingest.stream_dedup_ingest(spark, sf_dir)
-            kept = dedup.count()
-            stream_row["dedup_ingest_sec"] = round(time.perf_counter() - t0, 3)
+            (sec,), kept = CAL.timed(
+                lambda: ingest.stream_dedup_ingest(spark, sf_dir).count()
+            )
+            stream_row["dedup_ingest_sec"] = round(sec, 3)
             stream_row["dedup_kept_rows"] = kept
             # --- incremental eviction run: the complete-mode numbers
             # above show state == total sessions (a single AvailableNow
@@ -569,14 +483,14 @@ def main(ks: list[int]) -> int:
                     # file source processes oldest-mtime first: pin the
                     # epoch order without sleeping between writes
                     os.utime(dst, (1_700_000_000 + e * 10, 1_700_000_000 + e * 10))
-                t0 = time.perf_counter()
-                emitted, progress = ingest.stream_sessionize_incremental(
-                    spark, incr_dir, state_partitions=8
-                )
-                n_emitted = emitted.count()
-                stream_row["sessionize_incr_sec"] = round(
-                    time.perf_counter() - t0, 3
-                )
+                def run_incremental():
+                    emitted, progress = ingest.stream_sessionize_incremental(
+                        spark, incr_dir, state_partitions=8
+                    )
+                    return emitted.count(), progress
+
+                (sec,), (n_emitted, progress) = CAL.timed(run_incremental)
+                stream_row["sessionize_incr_sec"] = round(sec, 3)
                 state_seq = [
                     so.get("numRowsTotal", 0)
                     for p in progress
@@ -605,24 +519,21 @@ def main(ks: list[int]) -> int:
         # measurement visible in the header instead of silently
         # poisoning a few rows.
         cal_secs_end = CAL.calibration_secs(spark, reps=3)
-        cal_med_end = CAL.median(cal_secs_end)
+        ratio, ratio_end = (
+            CAL.ratio_vs_ref(cal_secs), CAL.ratio_vs_ref(cal_secs_end)
+        )
         print(f"  x{k} calibration end: {cal_secs_end} (ratio "
-              f"{cal_med_end / CAL.CALIBRATION_REF_SEC:.2f}x of nominal)",
+              f"{ratio_end:.2f}x of nominal)",
               file=sys.stderr, flush=True)
         results[k] = timings
-        cal_results[k] = (
-            round(cal_med / CAL.CALIBRATION_REF_SEC, 2),
-            round(cal_med_end / CAL.CALIBRATION_REF_SEC, 2),
-        )
+        cal_results[k] = (round(ratio, 2), round(ratio_end, 2))
         line = {"scale": k, "base": BASE, "queries": timings,
                 "ivf_stage_reps": ivf_stage_reps,
                 "streaming": stream_row,
                 "calibration_secs": cal_secs,
                 "calibration_secs_end": cal_secs_end,
-                "calibration_ratio": round(
-                    cal_med / CAL.CALIBRATION_REF_SEC, 3),
-                "calibration_ratio_end": round(
-                    cal_med_end / CAL.CALIBRATION_REF_SEC, 3),
+                "calibration_ratio": round(ratio, 3),
+                "calibration_ratio_end": round(ratio_end, 3),
                 "total": round(sum(timings.values()), 3)}
         lines.append(line)
         print(json.dumps(line), flush=True)

@@ -1,4 +1,4 @@
-"""Machine-speed calibration probe for benchmarks.
+"""Machine-speed calibration and the measurement harness for benchmarks.
 
 This box exhibits multi-minute windows where identical plan+data runs
 5-6x slower (verified with byte-identical plans in both directions;
@@ -9,14 +9,21 @@ provides that measure: a fixed, pure-compute, plan-stable query whose
 cost depends only on CPU/JVM health — no input data, no shuffle, no
 Python workers — so its wall time is a pure machine-speed signal.
 
-Usage contract (bench.py, tools/scale_probe.py):
-- run ``calibration_secs`` at the start and end of a timed section;
-- persist the raw rep times;
+Usage contract (bench.py, tools/ab_bench.py, tools/scale_probe.py,
+tools/dedup_scale_probe.py — the one measurement harness; perfbench
+reads ``calibration_secs`` only):
+- run ``calibration_secs`` at the start and end of a timed section,
+  persist the raw rep times, and summarize them with ``bracket`` (or
+  per end with ``ratio_vs_ref``);
 - report family throughput both raw and normalized by
-  ``median_cal / CALIBRATION_REF_SEC`` — the normalized number is the
-  one to compare across rounds, and a start-vs-end spread > ~1.5x
-  means a slow window opened mid-run (rerun before concluding
-  anything).
+  ``ratio_vs_ref`` (median_cal / CALIBRATION_REF_SEC) — the normalized
+  number is the one to compare across rounds, and a start-vs-end
+  spread > 1.5x (``degraded_window``) means a slow window opened
+  mid-run (rerun before concluding anything);
+- time through ``timed`` (best-of-N, every rep returned; ``cold``
+  releases before each rep), never a clock of your own;
+- force corpus-sized results through ``force`` (one count + hash
+  aggregate over every output column).
 
 CALIBRATION_REF_SEC is the pinned nominal value for this query on a
 healthy window of this box (local[32]); re-pin it only if the
@@ -104,3 +111,75 @@ def iqr(xs: list[float]) -> float:
     if n < 4:
         raise ValueError(f"iqr needs >= 4 samples, got {n}")
     return round(s[(3 * n) // 4] - s[n // 4], 4)
+
+
+def ratio_vs_ref(secs: list[float]) -> float:
+    """Median calibration wall over the pinned nominal: > 1 means the
+    machine ran slower than a healthy window."""
+    return median(secs) / CALIBRATION_REF_SEC
+
+
+def bracket(start: list[float], end: list[float]) -> dict:
+    """Summary of a start/end calibration bracket: pooled median, IQR
+    and ratio to the nominal, the start-vs-end spread (larger median
+    over smaller), and ``degraded_window`` when that spread is above
+    1.5 — the machine's speed changed mid-run, so the section's rows
+    mix two regimes."""
+    both = start + end
+    ends = sorted([median(start), median(end)])
+    spread = round(ends[1] / max(ends[0], 1e-9), 3)
+    return {
+        "start_secs": start,
+        "end_secs": end,
+        "median": round(median(both), 4),
+        "iqr": iqr(both),
+        "ref_sec": CALIBRATION_REF_SEC,
+        "ratio_vs_ref": round(ratio_vs_ref(both), 3),
+        "start_end_spread": spread,
+        "degraded_window": spread > 1.5,
+    }
+
+
+def force(df) -> tuple[int, int]:
+    """Run ``df``'s whole plan and return ``(rows, hash)`` from ONE
+    one-row aggregate: count + bit_xor(xxhash64(every output column)).
+
+    Never a bare count(): under it Catalyst prunes every stage the row
+    count does not depend on (semantic_dedup's verdict left-join and
+    its intra-cell all-pairs join both vanished once, making its
+    scale-probe row time only the assignment). Referencing every column
+    keeps every producing stage, and the hash pins values as well as
+    cardinality. bit_xor, not sum: ANSI mode overflows on summed
+    hashes. The driver receives one row, so corpus-sized outputs do not
+    time a collect."""
+    row = df.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.bit_xor(F.xxhash64(*[F.col(c) for c in df.columns])).alias("h"),
+    ).first()
+    return row["n"], row["h"]
+
+
+def timed(fn, reps: int = 1, cold: bool = False) -> tuple[list[float], object]:
+    """Call ``fn()`` ``reps`` times; return the wall seconds of every
+    rep, in order, and the last call's return value. Callers take
+    ``min`` as best-of-N and ``median`` as the spread check.
+
+    ``cold`` calls ``release_all()`` before each rep, outside the timed
+    window: it unpersists every tracked table AND forgets the plan
+    memo. ``spark.catalog.clearCache()`` is not a cold policy — it
+    drops the blocks but leaves ``_LIVE``/``_PLAN_MEMO`` pointing at
+    the dropped plans, so a later memo hit hands back a silently
+    uncached plan."""
+    if cold:
+        # imported here, not at module top: tools/ab_bench.py loads this
+        # file by path inside another tree's package
+        from vector_search_application_spark.functions.cache import release_all
+    secs = []
+    out = None
+    for _ in range(reps):
+        if cold:
+            release_all()
+        t0 = time.perf_counter()
+        out = fn()
+        secs.append(time.perf_counter() - t0)
+    return secs, out
